@@ -16,8 +16,12 @@ Re-expresses the reference's subscription machinery
 - unsubscribe         (:110-116)           -> query.stop(); one query
   per subscriber, so no shared-cursor refcounting (the reference's TODO
   at src/topic.js:109).
-- one-doc trampoline backpressure (:79-87) -> maxFilesPerTrigger /
-  trigger(availableNow) — batch-sized instead of doc-sized.
+- one-doc trampoline backpressure (:79-87) -> maxBytesPerTrigger (a
+  byte bound on each micro-batch; maxFilesPerTrigger on request) /
+  trigger(availableNow) — batch-sized instead of doc-sized.  A new
+  subscriber's first trigger covers every segment before its start
+  offset in one batch whose footers prune all of it, instead of
+  replaying the log a few files at a time.
 
 Delivery contract preserved: per-subscriber total order by offset,
 at-least-once for durable names (an uncommitted batch is redelivered on
@@ -99,15 +103,26 @@ def _start_offset_for(
     return start
 
 
-# Default micro-batch bound for the per-message callback path.  The
-# callback API is inherently driver-side (the reference's subscriber
-# callback, src/topic.js:97,105, is too), so an UNBOUNDED first batch on
-# a durable replay subscription would collect the entire backlog to the
-# driver in one go.  Bounding the source at N files per trigger caps the
-# collect at N publish-batches' worth of rows regardless of log size —
-# the whole backlog still drains (availableNow iterates triggers), just
-# in bounded chunks.
-DEFAULT_CALLBACK_MAX_FILES = 4
+# Default micro-batch bound for the per-message callback path, in
+# parquet bytes per trigger.  The callback API is inherently driver-side
+# (the reference's subscriber callback, src/topic.js:97,105, is too), so
+# an UNBOUNDED first batch on a durable replay subscription would
+# collect the entire backlog to the driver in one go; the whole backlog
+# still drains under the bound (availableNow iterates triggers), just in
+# bounded chunks.  Bytes, not files, because the collect grows with the
+# data, not the file count: a 4-file bound admits 4 compacted 128 MiB
+# segments (512 MiB) into one collect, yet makes a new subscriber sweep
+# a long-lived log of one-message segments (~2.4 KB each) 4 files per
+# trigger before its first delivery.  Collected rows take ~5x their
+# parquet size in driver Python objects (93k ~130-byte messages: 10.9 MB
+# of parquet, 52 MB of Rows), so 64 MiB holds one batch to ~320 MB per
+# subscriber — and the benchmark's 3-segment, 10.5 MB catch-up backlog
+# still drains in one trigger, as it did under the file bound.  A
+# segment larger than the bound is a batch of its own: a subscriber on
+# a log of compacted segments (TARGET_BYTES_DEFAULT) reads one per
+# trigger.  An explicit ``max_files_per_trigger`` replaces this bound
+# (Spark takes one of the two), ``None`` removes it.
+DEFAULT_CALLBACK_MAX_BYTES = 64 * 1024 * 1024
 
 _UNSET = object()  # sentinel: caller did not choose a backpressure bound
 
@@ -147,6 +162,10 @@ def subscribe(
     deterministic tests without wall-clock sleeps.  Pass False for a
     continuous tail.
 
+    max_files_per_trigger: left unset, each micro-batch is bounded to
+    DEFAULT_CALLBACK_MAX_BYTES of segment files; an INT bounds it to
+    that many files instead; None leaves it unbounded.
+
     on_error: "raise" (default) fails the query on a callback error —
     the micro-batch is uncommitted and redelivered on resume
     (at-least-once, the reference's behavior is worse: a throwing
@@ -159,26 +178,33 @@ def subscribe(
     if on_error not in ("raise", "dlq"):
         raise ValueError(f"on_error must be 'raise' or 'dlq', got {on_error!r}")
     use_dlq = on_error == "dlq"
+    max_bytes_per_trigger = None
     if max_files_per_trigger is _UNSET:
         # Per-message delivery collects each micro-batch to the driver;
         # bound it by default so a durable subscriber's first backlog
         # drain cannot pull the whole log at once.  Pass None explicitly
         # to opt out (e.g. when the caller knows the backlog is tiny).
-        max_files_per_trigger = DEFAULT_CALLBACK_MAX_FILES
+        max_files_per_trigger = None
+        max_bytes_per_trigger = DEFAULT_CALLBACK_MAX_BYTES
     if name is None:
         checkpoint = tempfile.mkdtemp(prefix=f"kafkaish_ephemeral_{topic.name}_")
     else:
         checkpoint = os.path.join(topic.sub_dir, name, "checkpoint")
     start_offset = _start_offset_for(topic, name, replay)
 
-    stream = topic.stream(event=event, max_files_per_trigger=max_files_per_trigger)
+    stream = topic.stream(
+        event=event,
+        max_files_per_trigger=max_files_per_trigger,
+        max_bytes_per_trigger=max_bytes_per_trigger,
+    )
     if start_offset:
         stream = stream.filter(F.col("offset") > F.lit(int(start_offset)))
 
     def deliver(batch_df: DataFrame, _batch_id: int) -> None:
-        # Sort driver-side: the batch is bounded (max_files_per_trigger),
-        # and a Spark orderBy would add a range-partitioner SAMPLING scan
-        # — the source would be read twice per micro-batch.
+        # Sort driver-side: the batch is bounded (by default to
+        # DEFAULT_CALLBACK_MAX_BYTES), and a Spark orderBy would add a
+        # range-partitioner SAMPLING scan — the source would be read
+        # twice per micro-batch.
         rows = sorted(batch_df.collect(), key=lambda r: r["offset"])
         poisoned = []
         for r in rows:
@@ -219,7 +245,7 @@ def subscribe(
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    # maxFilesPerTrigger is a SOURCE option (set in topic.stream above);
+    # the trigger bound is a SOURCE option (set in topic.stream above);
     # it bounds micro-batch size in both modes, including the
     # availableNow backlog drain.
     if available_now:

@@ -193,6 +193,12 @@ def test_max_files_per_trigger_bounds_batches(engine, spark, tmp_path):
     q.awaitTermination()
     assert sum(batch_sizes) == 3
     assert len([b for b in batch_sizes if b > 0]) >= 3
+    # Spark takes one trigger bound per source, and would only fail
+    # the query at its first trigger
+    import pytest
+
+    with pytest.raises(ValueError):
+        topic.stream(max_files_per_trigger=1, max_bytes_per_trigger=1 << 20)
 
 
 def test_idempotent_publish_skips_existing_payloads(engine, spark):
@@ -1122,3 +1128,171 @@ def test_compaction_advice(engine, spark):
     }
     assert adv2["ca_frag"]["advice"] == "ok"
     assert sorted(r["offset"] for r in frag.log().collect()) == before
+
+
+def _part_files(topic):
+    import os
+
+    return {
+        os.path.join(d, fn)
+        for d, _sub, fns in os.walk(topic.log_dir)
+        for fn in fns
+        if fn.startswith("part-") and fn.endswith(".parquet")
+    }
+
+
+def test_footer_cache_two_handles_keep_offsets_contiguous(engine, spark):
+    """Two handles on one topic directory, each with its own footer
+    cache, alternate publishes: every publish sees the other handle's
+    segments, so offsets stay contiguous 1..N with no duplicate tail."""
+    from kafkaish_spark.sources.topic_log import Topic
+
+    a = engine.prepare_topic("fc_two")
+    b = Topic(spark, engine.root, "fc_two")
+    offsets = []
+    for i in range(10):
+        h = a if i % 2 == 0 else b
+        offsets.append(int(h.publish("e", {"i": i})["offset"]))
+    assert offsets == list(range(1, 11))
+    assert sorted(r["offset"] for r in a.log().collect()) == list(range(1, 11))
+    assert a.latest() == b.latest() == 10
+
+
+def test_footer_cache_sees_foreign_segments(engine, spark):
+    """A segment written by another writer (a Spark publish_df through a
+    second handle) shows up in the first handle's next latest()."""
+    from kafkaish_spark.sources.topic_log import Topic
+
+    a = engine.prepare_topic("fc_foreign")
+    a.publish_batch([("e", "m1"), ("e", "m2")])
+    assert a.latest() == 2  # cache warm
+    b = Topic(spark, engine.root, "fc_foreign")
+    b.publish_df(
+        spark.createDataFrame(
+            [("e", f"x{i}") for i in range(5)], "event string, message string"
+        ),
+        target_files=1,
+    )
+    assert a.latest() == 7
+    assert int(a.publish("e", "m8")["offset"]) == 8
+
+
+def test_footer_cache_drops_removed_segments(engine):
+    """Segments removed by retention, truncation or compaction disappear
+    from _segment_stats and from the cache."""
+    t = engine.prepare_topic("fc_removed")
+    for i in range(8):
+        t.publish("e", {"i": i})
+
+    def check():
+        paths = {s["path"] for s in t._segment_stats()}
+        assert paths == _part_files(t)
+        assert {k[0] for k in t._footer_cache} == paths
+
+    check()
+    before = _part_files(t)
+    assert t.truncate_before(3) > 0
+    assert _part_files(t) < before
+    check()
+    live = sum(s["size"] for s in t._segment_stats() if s["num_rows"])
+    assert t.enforce_retention(live // 2) > 0
+    check()
+    tail = t.latest()
+    t.compact()
+    check()
+    assert len([s for s in t._segment_stats() if s["num_rows"]]) == 1
+    assert t.latest() == tail
+
+
+def test_footer_cache_hands_out_copies_and_skips_bad_footers(engine):
+    """Mutating a returned record does not change the next call's
+    result, and a footer that failed to parse is never cached."""
+    import os
+
+    t = engine.prepare_topic("fc_copies")
+    t.publish_batch([("e", "m1"), ("e", "m2")])
+    def stats(**kw):
+        return sorted(t._segment_stats(**kw), key=lambda s: s["path"])
+
+    first = stats()
+    want = [dict(s) for s in first]
+    for s in first:
+        s["max_off"] = 999
+        s["num_rows"] = -1
+    assert stats() == want
+    assert t.latest() == 2
+
+    bad = os.path.join(t.log_dir, "part-00000-deadbeef.snappy.parquet")
+    with open(bad, "wb") as fh:
+        fh.write(b"not a parquet file")
+    flagged = [s for s in stats(tolerant=True) if s.get("bad")]
+    assert [s["path"] for s in flagged] == [bad]
+    assert bad not in {k[0] for k in t._footer_cache}
+    os.remove(bad)
+    assert stats() == want
+
+
+def test_footer_cache_concurrent_publishers_and_readers(engine, spark):
+    """Threads sharing two handles (more threads than cores, short
+    switch interval): publishers never hand out a duplicate or skipped
+    offset, readers never see the tail move backwards, and each
+    handle's cached stats end equal to a fresh handle's."""
+    import sys
+    import threading
+
+    from kafkaish_spark.sources.topic_log import Topic
+
+    handles = [
+        engine.prepare_topic("fc_threads"),
+        Topic(spark, engine.root, "fc_threads"),
+    ]
+    offsets, tails, errors = [], [[], []], []
+    stop = threading.Event()
+
+    def publisher(h, n):
+        try:
+            for i in range(n):
+                offsets.append(int(h.publish("e", {"i": i})["offset"]))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    def reader(h, seen):
+        try:
+            while not stop.is_set():
+                seen.append(h.latest())
+                h._segment_stats()
+        except Exception as exc:
+            errors.append(exc)
+
+    pubs = [
+        threading.Thread(target=publisher, args=(handles[i % 2], 5))
+        for i in range(6)
+    ]
+    readers = [
+        threading.Thread(target=reader, args=(handles[i], tails[i]))
+        for i in range(2)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in pubs + readers:
+            t.start()
+        for t in pubs:
+            t.join(120)
+        stop.set()
+        for t in readers:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in pubs + readers)
+    assert errors == []
+    assert sorted(offsets) == list(range(1, 31))
+    for h, seen in zip(handles, tails):
+        assert seen and seen == sorted(seen)
+        assert h.latest() == 30
+
+    def stats(h):
+        return sorted(h._segment_stats(), key=lambda s: s["path"])
+
+    fresh = stats(Topic(spark, engine.root, "fc_threads"))
+    assert stats(handles[0]) == stats(handles[1]) == fresh

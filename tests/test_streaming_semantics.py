@@ -279,17 +279,26 @@ def test_delivery_monitor_records_throughput(spark, engine, tmp_path):
         mon.detach(spark)
 
 
-def test_backlog_drain_is_bounded(engine):
+def test_backlog_drain_is_bounded(engine, monkeypatch):
     """VERDICT r1 item 1: a durable subscriber with DEFAULT settings must
     NOT collect the whole backlog in one micro-batch.  12 single-message
-    publishes = 12 log files; with the default callback bound of
-    DEFAULT_CALLBACK_MAX_FILES (4) the availableNow drain takes >= 3
-    micro-batches, each collecting at most 4 files' rows."""
-    from kafkaish_spark.streaming.subscribe import DEFAULT_CALLBACK_MAX_FILES
+    publishes = 12 log files; with the default byte bound set to the
+    size of about 4 of them, the availableNow drain takes >= 3
+    micro-batches, and none holds more than the bound plus one file
+    (the source admits one file even when it alone exceeds the bound)."""
+    import importlib
+
+    # the package re-exports the function under the module's name
+    subscribe_mod = importlib.import_module("kafkaish_spark.streaming.subscribe")
 
     topic = engine.prepare_topic("s_bounded")
     for i in range(1, 13):
         topic.publish("ev", {"number": i})
+    size_of = {
+        s["min_off"]: s["size"] for s in topic._segment_stats() if s["num_rows"]
+    }
+    bound = 4 * max(size_of.values())
+    monkeypatch.setattr(subscribe_mod, "DEFAULT_CALLBACK_MAX_BYTES", bound)
 
     got = []
     sub = subscribe(topic, lambda e, m, o: got.append(o), name="b1", replay=True)
@@ -299,9 +308,52 @@ def test_backlog_drain_is_bounded(engine):
 
     assert got == list(range(1, 13))  # everything delivered, in order
     assert topic.last_ack("b1") == 12
-    # bounded drain: multiple batches, none bigger than the file cap
-    assert len(progress) >= 12 // DEFAULT_CALLBACK_MAX_FILES
-    assert max(p["numInputRows"] for p in progress) <= DEFAULT_CALLBACK_MAX_FILES
+    # bounded drain: multiple batches, none bigger than the bound + 1 file
+    assert len(progress) >= 3
+    first = 0
+    for p in progress:
+        batch = got[first : first + p["numInputRows"]]
+        first += p["numInputRows"]
+        assert sum(size_of[o] for o in batch) <= bound + max(size_of.values())
+
+
+def test_attach_to_long_log_delivers_within_two_batches(engine):
+    """A subscriber attached at the tail of a log of many one-message
+    segments must not sweep the log a few files per trigger before its
+    first delivery: the next published message arrives within two
+    micro-batches, for a durable and for an ephemeral subscriber.  40
+    segments is above Spark's default 32-path threshold for listing a
+    batch's files with a Spark job."""
+    import time
+
+    topic = engine.prepare_topic("s_attach")
+    for i in range(1, 41):
+        topic.publish("ev", {"number": i})
+
+    durable, ephemeral = [], []
+    subs = [
+        subscribe(
+            topic, lambda e, m, o: durable.append(o), name="tail", available_now=False
+        ),
+        subscribe(topic, lambda e, m, o: ephemeral.append(o), available_now=False),
+    ]
+    try:
+        off = int(topic.publish("ev", {"number": 41})["offset"])
+        deadline = time.time() + 120
+        while off not in durable or off not in ephemeral:
+            if time.time() > deadline:
+                break
+            time.sleep(0.1)
+        for s in subs:
+            s.query.processAllAvailable()
+        assert durable == [off] and ephemeral == [off]
+        for s in subs:
+            ran = [p for p in s.query.recentProgress if "addBatch" in p["durationMs"]]
+            assert 1 <= len(ran) <= 2, [p["numInputRows"] for p in ran]
+    finally:
+        for s in subs:
+            s.unsubscribe()
+    assert topic.last_ack("tail") == off
 
 
 def test_subscribe_batches_never_collects(engine):

@@ -58,6 +58,7 @@ import json
 import math
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -106,6 +107,29 @@ DEDUP_SCALE_QUERIES = [
     "q_dedup_simhash",
     "q_corpus_clean_funnel",
 ]
+
+# A query whose Nx/1x ratio exceeds this multiple of the run's median
+# ratio is flagged super-linear even under the absolute
+# ``replicas * 1.2`` bound, which is near vacuous at 100x (a 120x
+# threshold against observed ratios of 1-20x).  The recorded 100x runs
+# (BENCH_scale_r12/r13.json) peak at 7.4-7.6x their median ratio
+# (q_dedup_near_documents 19.9 against 2.6), so 10x flags a 50x
+# outlier without flagging them.
+OUTLIER_VS_MEDIAN = 10.0
+
+
+def superlinear_queries(
+    ratios: dict[str, float | None], replicas: int
+) -> list[str]:
+    """Queries whose time grew faster than the data: ratio above
+    ``replicas * 1.2``, or above ``OUTLIER_VS_MEDIAN`` times the median
+    ratio of the run (ratios of None are skipped)."""
+    known = [r for r in ratios.values() if r is not None]
+    limit = replicas * 1.2
+    if known:
+        limit = min(limit, OUTLIER_VS_MEDIAN * statistics.median(known))
+    return [n for n, r in ratios.items() if r is not None and r > limit]
+
 
 # fact table -> id column to shift per replica; orders/lineitem share
 # the ORDERS stride so l_orderkey keeps referencing o_orderkey
@@ -331,11 +355,9 @@ def _run(spark, specs, base, big, src, replicas, n_files, reps) -> None:
         }
         for n in names
     }
-    superlinear = [
-        n
-        for n, q in queries.items()
-        if q["ratio"] is not None and q["ratio"] > replicas * 1.2
-    ]
+    superlinear = superlinear_queries(
+        {n: q["ratio"] for n, q in queries.items()}, replicas
+    )
 
     # ---- ANN index scaling: fixture-default plan is scale-invariant;
     # timings use the documented corpus-scaling parameter
