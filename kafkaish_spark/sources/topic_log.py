@@ -2050,9 +2050,11 @@ class Topic:
         succeeds WHILE the copy is in flight.
 
         Scale: one pushed-down scan of the pinned source tail (offset
-        predicate prunes row groups on footer stats) and one parquet
-        append — no shuffle, no offset rewrite.  Returns the number of
-        rows mirrored."""
+        predicate prunes row groups on footer stats), one range
+        partitioning of the delta on offset (a sampling pass and a
+        shuffle; each staged file then holds a contiguous offset
+        range) and one parquet append — no offset rewrite.  Returns
+        the number of rows mirrored."""
         import pyarrow.parquet as pq
 
         if os.path.abspath(dst.root) == os.path.abspath(self.root):
@@ -2078,11 +2080,20 @@ class Topic:
             # -- phase 2: copy from immutable pinned files (no locks) -
             staging = os.path.join(dst.root, f".mirror-stage-{uuid4().hex}")
             try:
+                # Range-partition on offset so every staged file of a
+                # flat destination covers a CONTIGUOUS offset range (a
+                # partitioned one also splits at pub_date boundaries,
+                # like compact's rewrites): a plain scan lets Spark
+                # pack several small pinned segments into one task,
+                # and a file holding {1, 2, 5} next to one holding
+                # {3, 4} has no rename order that keeps the visible
+                # prefix contiguous (phase 3 below).
                 pending = (
                     self.spark.read.schema(ENVELOPE)
                     .parquet(*pinned)
                     .filter(F.col("offset") > F.lit(int(tail)))
                     .select("offset", "ts", "event", "message")
+                    .orderBy("offset")
                 )
                 if dst.partitioned:
                     (

@@ -120,3 +120,40 @@ def test_mirror_from_trimmed_source(engine):
     dstmin = dst.replay(since=0).agg(F.min("offset")).first()[0]
     assert srcmin == dstmin and srcmin >= 11
     assert dst.latest() == src.latest() == 30
+
+
+def test_mirror_stages_contiguous_offset_ranges(engine, spark, monkeypatch):
+    """Every staged file covers one contiguous offset range, and the
+    phase-3 renames land in ascending order, so each rename prefix is
+    a contiguous prefix of the delta.  Partition coalescing is off so
+    the delta of 12 one-message segments stages as several files."""
+    import pyarrow.parquet as pq
+
+    import kafkaish_spark.sources.topic_log as tl
+
+    src = engine.prepare_topic("mc_src")
+    dst = engine.prepare_topic("mc_dst")
+    for i in range(12):
+        src.publish("e", {"i": i})
+
+    moved = []
+    real_replace = tl.os.replace
+
+    def recording_replace(a, b):
+        real_replace(a, b)
+        moved.append(pq.read_table(b, columns=["offset"])["offset"].to_pylist())
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    monkeypatch.setattr(tl.os, "replace", recording_replace)
+    try:
+        assert src.mirror_to(dst) == 12
+    finally:
+        spark.conf.set(key, prev)
+    assert len(moved) > 1
+    landed = []
+    for offsets in moved:
+        assert sorted(offsets) == list(range(min(offsets), max(offsets) + 1))
+        landed.extend(sorted(offsets))
+    assert landed == list(range(1, 13))
