@@ -37,10 +37,13 @@ reader) and each segment is read on an executor as Arrow batches.
 Rows never funnel through the driver, so a fat backlog drains with
 cluster parallelism — the r8 driver-side bottleneck is gone.  The
 driver only reads footers (``latestOffset``).
-``KafkaishStreamReader`` (a ``SimpleDataSourceStreamReader``, rows
-through the driver — the reference's actual delivery model, one
-cursor loop on one node) is kept for API parity/tests but is shadowed
-by the partitioned reader at runtime.
+
+Which files are the log, what their footers say and where the tail
+is are decided in ``sources/topic_log.py`` (``segment_records``,
+``log_tail``) — the same listing, footer parser and tail ``Topic``
+uses, with Spark's hidden-path rule, so this connector can never see
+a file (an in-flight ``_temporary`` task output, say) that
+``Topic.log()`` does not.
 
 Write path: ``df.write.format("kafkaish").mode("append")`` appends to
 the log through the V2 two-phase commit (executors stage, the driver
@@ -65,6 +68,7 @@ sources/typed.py's topic views do).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 
@@ -80,8 +84,13 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
+)
+
+from kafkaish_spark.sources.topic_log import (
+    detect_partitioned,
+    log_tail,
+    segment_records,
 )
 
 ENVELOPE_DDL = "offset bigint, ts timestamp, event string, message string"
@@ -95,84 +104,74 @@ def _log_dir(options: dict) -> str:
             "kafkaish source needs .option('path', <engine root>) and "
             ".option('topic', <name>)"
         )
-    return os.path.join(path, topic, "log")
-
-
-def _segment_files(log_dir: str) -> list[str]:
+    log_dir = os.path.join(path, topic, "log")
     if not os.path.isdir(log_dir):
         raise FileNotFoundError(f"no such topic log: {log_dir}")
-    out = []
-    for root, _dirs, files in os.walk(log_dir):
-        for f in sorted(files):
-            if f.endswith(".parquet") and not f.startswith("_"):
-                out.append(os.path.join(root, f))
-    return out
-
-
-def _footer_offset_range(
-    file: str,
-) -> tuple[int | None, int | None, bool]:
-    """(min, max, complete) of the ``offset`` column from parquet
-    footer stats — no data pages read.  The column index is resolved BY
-    NAME from the footer schema (not assumed to be physically first): a
-    segment written with a different column order would otherwise be
-    silently mis-pruned.  ``complete`` is True only when EVERY row
-    group carried min/max stats: partial stats are still returned (the
-    max over the row groups that have them) so callers that need an
-    upper bound can fall back to a data read instead of silently
-    treating the file as empty — a segment with one statless row group
-    must never make ``_tail()`` reuse live offsets."""
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(file).metadata
-    if meta.num_rows == 0:
-        return None, None, True
-    idx = None
-    for i in range(meta.num_columns):
-        if meta.schema.column(i).name == "offset":
-            idx = i
-            break
-    if idx is None:
-        return None, None, False
-    lo = hi = None
-    complete = True
-    for rg in range(meta.num_row_groups):
-        st = meta.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            complete = False
-            continue
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return lo, hi, complete
-
-
-def _file_offset_max(file: str) -> int | None:
-    """Exact max(offset) by reading ONLY the offset column — the
-    fallback when footer stats are partial.  One column of one file,
-    never the log.  A segment lacking the column entirely (one way
-    ``complete=False`` arises) returns None; any OTHER read failure
-    (transient I/O, corrupt data page) RAISES — this feeds the
-    writer's tail computation, and silently dropping a live segment's
-    offsets from max() would let the next append reuse live offsets
-    (the duplicate-offset corruption the single-writer lock exists to
-    prevent).  Loud beats wrong here."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(file).metadata
-    if "offset" not in {
-        meta.schema.column(i).name for i in range(meta.num_columns)
-    }:
-        return None
-    tbl = pq.read_table(file, columns=["offset"])
-    if tbl.num_rows == 0:
-        return None
-    return pc.max(tbl["offset"]).as_py()
+    return log_dir
 
 
 class _SegmentPartition(InputPartition):
-    def __init__(self, file: str):
+    """One log segment, read for offsets in (min_excl, max_incl]
+    (``None`` = unbounded; an empty ``file`` reads nothing)."""
+
+    def __init__(
+        self, file: str, min_excl: int | None = None, max_incl: int | None = None
+    ):
         self.file = file
+        self.min_excl = min_excl
+        self.max_incl = max_incl
+
+
+def _plan(
+    log_dir: str, min_excl: int | None, max_incl: int | None
+) -> list[_SegmentPartition]:
+    """One partition per non-empty segment that can hold offsets in
+    (min_excl, max_incl], pruned on footer min/max stats — no data
+    pages are read for empty or out-of-range segments.  A segment with
+    incomplete stats always stays in; ``_read``'s row filter does the
+    exact work."""
+    parts = []
+    for rec in segment_records(log_dir):
+        if not rec["num_rows"]:
+            continue  # the topic seed file / compacted-away segment
+        if rec["min_off"] is not None:
+            if min_excl is not None and rec["max_off"] <= min_excl:
+                continue
+            if max_incl is not None and rec["min_off"] > max_incl:
+                continue
+        parts.append(_SegmentPartition(rec["path"], min_excl, max_incl))
+    return parts
+
+
+def _read(partition: _SegmentPartition, event: str | None = None):
+    """The partition's envelope rows as Arrow batches, filtered exactly
+    to its offset range and ``event``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if not partition.file:
+        return
+    tbl = pq.read_table(partition.file, columns=["offset", "ts", "event", "message"])
+    conds = []
+    if partition.min_excl is not None:
+        conds.append(pc.greater(tbl["offset"], partition.min_excl))
+    if partition.max_incl is not None:
+        conds.append(pc.less_equal(tbl["offset"], partition.max_incl))
+    if event is not None:
+        conds.append(pc.equal(tbl["event"], event))
+    if conds:
+        tbl = tbl.filter(functools.reduce(pc.and_, conds))
+    # normalize ts to micros-no-tz: Spark's Arrow bridge expects the
+    # TimestampType batches timezone-naive
+    ts = tbl["ts"]
+    if pa.types.is_timestamp(ts.type) and (
+        ts.type.tz is not None or ts.type.unit != "us"
+    ):
+        tbl = tbl.set_column(
+            tbl.schema.get_field_index("ts"), "ts", pc.cast(ts, pa.timestamp("us"))
+        )
+    yield from tbl.to_batches()
 
 
 class KafkaishBatchReader(DataSourceReader):
@@ -204,210 +203,44 @@ class KafkaishBatchReader(DataSourceReader):
                 yield f  # unsupported: Spark re-applies it
 
     def partitions(self):
-        import pyarrow.parquet as pq
-
-        parts = []
-        prune = self.min_excl is not None or self.max_incl is not None
-        for file in _segment_files(self.log_dir):
-            # segment pruning on footer metadata — no data pages are
-            # read for empty or out-of-range segments
-            if pq.ParquetFile(file).metadata.num_rows == 0:
-                continue  # the topic seed file / compacted-away segment
-            if prune:
-                # prune only on COMPLETE stats — partial bounds don't
-                # cover the statless row groups, so the file stays in
-                # and read()'s row filter does the work
-                lo, hi, complete = _footer_offset_range(file)
-                if lo is not None and complete:
-                    if self.min_excl is not None and hi <= self.min_excl:
-                        continue
-                    if self.max_incl is not None and lo > self.max_incl:
-                        continue
-            parts.append(_SegmentPartition(file))
         # an empty topic still needs one (empty) partition so load()
         # returns a 0-row frame instead of failing planning
-        return parts or [_SegmentPartition("")]
+        return _plan(self.log_dir, self.min_excl, self.max_incl) or [
+            _SegmentPartition("")
+        ]
 
     def read(self, partition: _SegmentPartition):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        if not partition.file:
-            return
-        tbl = pq.read_table(
-            partition.file, columns=["offset", "ts", "event", "message"]
-        )
-        mask = None
-
-        def _and(m, cond):
-            return cond if m is None else pc.and_(m, cond)
-
-        if self.min_excl is not None:
-            mask = _and(mask, pc.greater(tbl["offset"], self.min_excl))
-        if self.max_incl is not None:
-            mask = _and(mask, pc.less_equal(tbl["offset"], self.max_incl))
-        if self.event is not None:
-            mask = _and(mask, pc.equal(tbl["event"], self.event))
-        if mask is not None:
-            tbl = tbl.filter(mask)
-        # normalize ts to micros-no-tz: Spark's Arrow bridge expects the
-        # TimestampType batches timezone-naive
-        ts = tbl["ts"]
-        if pa.types.is_timestamp(ts.type) and (
-            ts.type.tz is not None or ts.type.unit != "us"
-        ):
-            tbl = tbl.set_column(
-                tbl.schema.get_field_index("ts"),
-                "ts",
-                pc.cast(ts, pa.timestamp("us")),
-            )
-        for batch in tbl.to_batches():
-            yield batch
-
-
-class _RangePartition(InputPartition):
-    def __init__(self, file: str, min_excl: int, max_incl: int):
-        self.file = file
-        self.min_excl = min_excl
-        self.max_incl = max_incl
+        return _read(partition, self.event)
 
 
 class KafkaishPartitionedStreamReader(DataSourceStreamReader):
-    """Executor-parallel streaming reader — the scale path Spark picks
-    when a full ``streamReader`` exists.  Each trigger covers the
+    """Executor-parallel streaming reader.  Each trigger covers the
     offset range (last committed tail, current tail]; ``partitions``
     maps that range onto the log segments overlapping it (footer-stats
     pruned, like the batch reader), and each partition is read on an
     EXECUTOR as Arrow batches — rows never funnel through the driver,
-    so a fat backlog drains with cluster parallelism.  The simple
-    reader below is kept for reference/tests but is shadowed by this
-    one at runtime."""
+    so a fat backlog drains with cluster parallelism."""
 
     def __init__(self, options: dict):
         self.log_dir = _log_dir(options)
         self.replay = str(options.get("replay", "true")).lower() != "false"
 
-    def _tail(self) -> int:
-        tail = 0
-        for file in _segment_files(self.log_dir):
-            _lo, hi, complete = _footer_offset_range(file)
-            if not complete:
-                # partial footer stats: read the offset column for the
-                # exact max — an under-reported tail would reuse live
-                # offsets on the next append
-                hi = _file_offset_max(file)
-            if hi is not None:
-                tail = max(tail, hi)
-        return tail
-
     def initialOffset(self) -> dict:  # noqa: N802 — API name
-        return {"offset": 0 if self.replay else self._tail()}
+        return {"offset": 0 if self.replay else self.latestOffset()["offset"]}
 
     def latestOffset(self) -> dict:  # noqa: N802 — API name
-        return {"offset": self._tail()}
+        return {"offset": log_tail(segment_records(self.log_dir))}
 
     def partitions(self, start: dict, end: dict):
-        import pyarrow.parquet as pq
-
+        # an empty range legitimately plans zero partitions
         lo, hi = int(start["offset"]), int(end["offset"])
-        parts = []
-        for file in _segment_files(self.log_dir):
-            if pq.ParquetFile(file).metadata.num_rows == 0:
-                continue
-            smin, smax, complete = _footer_offset_range(file)
-            if complete and smin is not None and (smax <= lo or smin > hi):
-                continue
-            parts.append(_RangePartition(file, lo, hi))
-        return parts  # an empty range legitimately plans zero partitions
+        return _plan(self.log_dir, lo, hi) if hi > lo else []
 
-    def read(self, partition: _RangePartition):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(
-            partition.file, columns=["offset", "ts", "event", "message"]
-        )
-        mask = pc.and_(
-            pc.greater(tbl["offset"], partition.min_excl),
-            pc.less_equal(tbl["offset"], partition.max_incl),
-        )
-        tbl = tbl.filter(mask)
-        ts = tbl["ts"]
-        if pa.types.is_timestamp(ts.type) and (
-            ts.type.tz is not None or ts.type.unit != "us"
-        ):
-            tbl = tbl.set_column(
-                tbl.schema.get_field_index("ts"),
-                "ts",
-                pc.cast(ts, pa.timestamp("us")),
-            )
-        for batch in tbl.to_batches():
-            yield batch
+    def read(self, partition: _SegmentPartition):
+        return _read(partition)
 
     def commit(self, end: dict) -> None:
         pass  # durable progress lives in the streaming checkpoint
-
-
-class KafkaishStreamReader(SimpleDataSourceStreamReader):
-    """Tailable-cursor analog over the official streaming API: the
-    stream offset IS the topic's publish offset."""
-
-    def __init__(self, options: dict):
-        self.options = options
-        self.log_dir = _log_dir(options)
-        # replay=true (default) starts from the beginning like the
-        # reference's replay:true subscriptions; replay=false starts at
-        # the tail observed at first trigger (live-only)
-        self.replay = str(options.get("replay", "true")).lower() != "false"
-
-    def _scan(self, min_excl: int, max_incl: int | None):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        rows: list[tuple] = []
-        tail = min_excl
-        for file in _segment_files(self.log_dir):
-            tbl = pq.read_table(
-                file, columns=["offset", "ts", "event", "message"]
-            )
-            if tbl.num_rows == 0:
-                continue
-            tail = max(tail, pc.max(tbl["offset"]).as_py() or 0)
-            mask = pc.greater(tbl["offset"], min_excl)
-            if max_incl is not None:
-                mask = pc.and_(mask, pc.less_equal(tbl["offset"], max_incl))
-            tbl = tbl.filter(mask)
-            rows.extend(
-                zip(
-                    tbl["offset"].to_pylist(),
-                    tbl["ts"].to_pylist(),
-                    tbl["event"].to_pylist(),
-                    tbl["message"].to_pylist(),
-                )
-            )
-        rows.sort(key=lambda r: r[0])
-        return rows, tail
-
-    def initialOffset(self) -> dict:  # noqa: N802 — API name
-        if self.replay:
-            return {"offset": 0}
-        _rows, tail = self._scan(0, None)
-        return {"offset": tail}
-
-    def read(self, start: dict):
-        rows, tail = self._scan(int(start["offset"]), None)
-        return iter(rows), {"offset": max(tail, int(start["offset"]))}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        rows, _tail = self._scan(int(start["offset"]), int(end["offset"]))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        # progress is durable in the streaming checkpoint; the log
-        # itself keeps every message (retention is the topic's policy)
-        pass
 
 
 # ---------------------------------------------------------------- write side
@@ -460,11 +293,7 @@ class KafkaishBatchWriter(DataSourceArrowWriter):
                 "kafkaish topics are append-only logs; use mode('append')"
             )
         self.log_dir = _log_dir(options)
-        if not os.path.isdir(self.log_dir):
-            raise FileNotFoundError(f"no such topic log: {self.log_dir}")
-        if any(
-            e.startswith("pub_date=") for e in os.listdir(self.log_dir)
-        ):
+        if detect_partitioned(self.log_dir):
             # flat segment files inside a hive-partitioned layout make
             # the JVM reader fail with conflicting directory structures
             raise ValueError(
@@ -504,16 +333,6 @@ class KafkaishBatchWriter(DataSourceArrowWriter):
         return _StagedFile(path, n, pid)
 
     # -- driver --------------------------------------------------------
-    def _tail(self) -> int:
-        tail = 0
-        for file in _segment_files(self.log_dir):
-            _lo, hi, complete = _footer_offset_range(file)
-            if not complete:
-                hi = _file_offset_max(file)  # exact max, offset column only
-            if hi is not None:
-                tail = max(tail, hi)
-        return tail
-
     def _finalize_staged(
         self, staged: list, out_dir: str, tag: str
     ) -> list[str]:
@@ -530,7 +349,7 @@ class KafkaishBatchWriter(DataSourceArrowWriter):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        offset = self._tail()
+        offset = log_tail(segment_records(self.log_dir))
         now = datetime.datetime.now(datetime.timezone.utc)
         schema = _arrow_envelope_schema()
         names: list[str] = []
@@ -772,18 +591,14 @@ class KafkaishDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of BOTH topic-log formats on a session:
-    'kafkaish' (engine-level: path=engine root + topic name, pushed
-    filters, executor-parallel streaming, write side — this module)
-    and 'kafkaish_topic' (log-directory-level reader, sources/
-    pyds_topic.py).  Also enables Python-data-source filter pushdown
-    (runtime-settable SQL conf, off by default in 4.1) — without it
-    Spark refuses any reader that implements pushFilters."""
-    from kafkaish_spark.sources.pyds_topic import KafkaishTopicDataSource
-
+    """Idempotent registration of the 'kafkaish' format on a session
+    (path = engine root + topic name: batch read with pushed filters,
+    executor-parallel streaming, write side).  Also enables
+    Python-data-source filter pushdown (runtime-settable SQL conf, off
+    by default in 4.1) — without it Spark refuses any reader that
+    implements pushFilters."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(KafkaishDataSource)
-    spark.dataSource.register(KafkaishTopicDataSource)
 
 
 # ---------------------------------------------------------------- oracle query

@@ -126,26 +126,74 @@ def _segment_uuid(fn: str) -> str:
     return fn.split("-", 2)[-1].split(".")[0]
 
 
-def _footer_record(path: str, fn: str, size: int) -> dict:
-    """One segment's ``Topic._segment_stats`` record, parsed from its
-    parquet footer; raises when the footer cannot be read."""
+def _hidden(name: str) -> bool:
+    """Spark's hidden-path rule (``InMemoryFileIndex``): a path component
+    that starts with ``.``, or with ``_`` and holds no ``=``, is not
+    data — ``_temporary`` task output, ``_SUCCESS``, ``.inprogress``
+    writes.  ``pub_date=...`` partition directories stay visible."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def segment_files(root: str) -> list[str]:
+    """Every parquet data file under ``root`` that Spark's own reader
+    would read, in path order — the one listing of a log's file set.
+    The hidden rule applies at every level BELOW ``root``, so a staging
+    root (``.mirror-stage-*``, ``log.compact.tmp``) lists like the log
+    itself, and a task file under ``log/_temporary/`` — in flight or
+    aborted — is never part of the log.  A missing root is empty."""
+    out = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        out.extend(
+            os.path.join(dirpath, fn)
+            for fn in sorted(files)
+            if fn.endswith(".parquet") and not _hidden(fn)
+        )
+    return out
+
+
+def detect_partitioned(log_dir: str) -> bool | None:
+    """The on-disk layout of a log directory: True for ``pub_date=``
+    partition directories, False for flat segment files, None when it
+    shows neither (missing, or a partitioned log never published to)."""
+    try:
+        entries = os.listdir(log_dir)
+    except FileNotFoundError:
+        return None
+    if any(e.startswith("pub_date=") for e in entries):
+        return True
+    if any(e.startswith("part-") and e.endswith(".parquet") for e in entries):
+        return False
+    return None
+
+
+def _footer_record(path: str, size: int | None = None) -> dict:
+    """One segment's record — path, size, commit-uuid group, offset and
+    ts ranges, row count — parsed from its parquet footer alone: the
+    one footer parser of the log.  Raises when the footer cannot be
+    read; a column the file lacks reads as missing stats."""
     import pyarrow.parquet as pq
 
     meta = pq.ParquetFile(path).metadata
     cols = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
+
+    def stats(rg: int, name: str):
+        i = cols.get(name)
+        return None if i is None else meta.row_group(rg).column(i).statistics
+
     min_off = max_off = None
     max_ts_us = None
     off_complete = ts_complete = True
     for rg in range(meta.num_row_groups):
         if meta.row_group(rg).num_rows == 0:
             continue
-        s_off = meta.row_group(rg).column(cols["offset"]).statistics
+        s_off = stats(rg, "offset")
         if s_off is None or s_off.min is None or s_off.max is None:
             off_complete = False
         else:
             min_off = s_off.min if min_off is None else min(min_off, s_off.min)
             max_off = s_off.max if max_off is None else max(max_off, s_off.max)
-        s_ts = meta.row_group(rg).column(cols["ts"]).statistics
+        s_ts = stats(rg, "ts")
         if s_ts is not None and s_ts.max is not None:
             ts = s_ts.max
             us = (
@@ -167,13 +215,54 @@ def _footer_record(path: str, fn: str, size: int) -> dict:
         max_ts_us = None
     return {
         "path": path,
-        "size": size,
-        "uuid": _segment_uuid(fn),
+        "size": os.path.getsize(path) if size is None else size,
+        "uuid": _segment_uuid(os.path.basename(path)),
         "min_off": min_off,
         "max_off": max_off,
         "max_ts_us": max_ts_us,
         "num_rows": meta.num_rows,
     }
+
+
+def segment_records(root: str) -> list[dict]:
+    """The footer record of every segment under ``root`` (uncached —
+    ``Topic._segment_stats`` is the cached per-handle twin)."""
+    return [_footer_record(p) for p in segment_files(root)]
+
+
+def _file_offset_max(path: str) -> int | None:
+    """Exact max(offset) by reading ONLY the offset column — the
+    fallback when footer stats are incomplete.  One column of one file,
+    never the log.  A segment lacking the column returns None; any
+    OTHER read failure (transient I/O, corrupt data page) RAISES — this
+    feeds the writers' tail, and silently dropping a live segment's
+    offsets from max() would let the next append reuse live offsets
+    (the duplicate-offset corruption the single-writer lock exists to
+    prevent).  Loud beats wrong here."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if "offset" not in pq.read_schema(path).names:
+        return None
+    return pc.max(pq.read_table(path, columns=["offset"])["offset"]).as_py()
+
+
+def _segment_max(rec: dict) -> int | None:
+    """A segment's newest offset: its footer max, or an offset-column
+    read when its stats are incomplete; None for a zero-row segment."""
+    if not rec["num_rows"]:
+        return None
+    if rec["max_off"] is not None:
+        return rec["max_off"]
+    return _file_offset_max(rec["path"])
+
+
+def log_tail(records: Iterable[dict]) -> int:
+    """Newest offset over segment records, 0 for an empty log — the one
+    tail rule every offset-assigning writer and stream bound uses."""
+    return int(
+        max((m for m in map(_segment_max, records) if m is not None), default=0)
+    )
 
 
 def _small_compaction_gain(
@@ -214,53 +303,13 @@ def _dir_rows(root: str) -> int:
     UNREADABLE part file counts as data (returns at least 1) so no
     caller ever treats a possibly-populated directory as empty and
     deletes over it."""
-    import pyarrow.parquet as pq
-
     n = 0
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            if fn.startswith("part-") and fn.endswith(".parquet"):
-                try:
-                    n += pq.ParquetFile(
-                        os.path.join(dirpath, fn)
-                    ).metadata.num_rows
-                except Exception:
-                    return max(n, 1)
+    for path in segment_files(root):
+        try:
+            n += _footer_record(path)["num_rows"]
+        except Exception:
+            return max(n, 1)
     return n
-
-
-def _dir_offset_range(root: str) -> tuple[int, int] | None:
-    """(min, max) offset across every data row under ``root`` from
-    parquet FOOTER statistics, or None when the range cannot be fully
-    established (no data rows, an unreadable footer, or a row group
-    without offset stats).  None means "not adjudicable" — callers
-    (vacuum's completed-swap heuristic) must treat it conservatively
-    and keep the directory."""
-    import pyarrow.parquet as pq
-
-    lo = hi = None
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            if not (fn.startswith("part-") and fn.endswith(".parquet")):
-                continue
-            try:
-                meta = pq.ParquetFile(os.path.join(dirpath, fn)).metadata
-            except Exception:
-                return None
-            cols = {
-                meta.schema.column(i).name: i for i in range(meta.num_columns)
-            }
-            if "offset" not in cols:
-                return None
-            for rg in range(meta.num_row_groups):
-                if meta.row_group(rg).num_rows == 0:
-                    continue
-                s = meta.row_group(rg).column(cols["offset"]).statistics
-                if s is None or s.min is None or s.max is None:
-                    return None
-                lo = s.min if lo is None else min(lo, s.min)
-                hi = s.max if hi is None else max(hi, s.max)
-    return None if lo is None else (int(lo), int(hi))
 
 
 def _prune_empty_parts(root: str) -> None:
@@ -271,17 +320,8 @@ def _prune_empty_parts(root: str) -> None:
     walks, and break the compaction byte arithmetic's file-count
     promise.  Keeps one file when ALL are empty (an empty log must stay
     schema-readable)."""
-    import pyarrow.parquet as pq
-
-    parts = [
-        os.path.join(dirpath, fn)
-        for dirpath, _dirs, files in os.walk(root)
-        for fn in files
-        if fn.startswith("part-") and fn.endswith(".parquet")
-    ]
-    empties = [
-        p for p in parts if pq.ParquetFile(p).metadata.num_rows == 0
-    ]
+    parts = segment_files(root)
+    empties = [p for p in parts if not _footer_record(p)["num_rows"]]
     if len(empties) == len(parts) and parts:
         empties = empties[1:]
     for p in empties:
@@ -548,19 +588,8 @@ class Topic:
                     os.replace(_old, self.log_dir)
                     with contextlib.suppress(FileNotFoundError):
                         os.remove(os.path.join(self.log_dir, _SWAP_MARKER))
-        # Auto-detect the layout of a pre-existing log in BOTH
-        # directions: a fresh Engine must not misread a partitioned
-        # topic as flat, and requesting partitioned=True over an
-        # existing FLAT log must not make log() synthesize an empty
-        # frame (latest()==0 would then reassign duplicate offsets and
-        # the next append would corrupt the directory layout).
-        if os.path.isdir(self.log_dir):
-            entries = os.listdir(self.log_dir)
-            if any(e.startswith("pub_date=") for e in entries):
-                partitioned = True
-            elif any(e.startswith("part-") and e.endswith(".parquet") for e in entries):
-                partitioned = False
         self.partitioned = partitioned
+        self._redetect_layout()
         self._ensure()
 
     # -- infra ---------------------------------------------------------
@@ -707,6 +736,16 @@ class Topic:
             fn = f"part-00000-{uuid4().hex}.snappy.parquet"
             tmp = os.path.join(seg_dir, "." + fn + ".inprogress")
             pq.write_table(tbl, tmp, compression="snappy")
+            # Spark's file source orders a stream's new files by
+            # modification time in whole milliseconds, ties in directory
+            # order: stamp the segment at least 1 ms after the newest one
+            # latest() just listed (its footer-cache keys end in
+            # st_mtime_ns), or two publishes inside one millisecond could
+            # reach a subscriber out of offset order across micro-batches
+            floor_ms = max((k[-1] for k in self._footer_cache), default=0)
+            floor_ms = floor_ms // 1_000_000 + 1
+            if os.stat(tmp).st_mtime_ns // 1_000_000 < floor_ms:
+                os.utime(tmp, ns=(floor_ms * 1_000_000, floor_ms * 1_000_000))
             os.replace(tmp, os.path.join(seg_dir, fn))
             if self.retention_bytes is not None:
                 self.enforce_retention(self.retention_bytes)
@@ -828,9 +867,7 @@ class Topic:
         or a staged rewrite (``_swap_log_with`` validates its tmp dir
         through this BEFORE swapping it in)."""
         if self.partitioned:
-            if not any(
-                e.startswith("pub_date=") for e in os.listdir(path)
-            ):
+            if not detect_partitioned(path):
                 # nothing published yet (or an empty rewrite): empty
                 # frame with the envelope plus the
                 # (discovered-at-read-time) partition column
@@ -857,22 +894,12 @@ class Topic:
         ``latest()`` runs once per publish, so this is the latency
         floor of the reference's core usage pattern — one message at a
         time (src/topic.js:25-40).  Zero-row seed segments are ignored;
-        if ANY non-empty segment lacks offset stats (foreign writer
-        with statistics disabled), fall back to the exact Spark
-        aggregate rather than guess.  On a cluster the footer reads
-        are the same ranged reads retention performs."""
-        try:
-            segs = self._segment_stats()
-        except Exception:
-            segs = None  # unreadable footer -> authoritative fallback
-        if segs is not None:
-            live = [s for s in segs if s["num_rows"]]
-            if not live:
-                return 0
-            if all(s["max_off"] is not None for s in live):
-                return int(max(s["max_off"] for s in live))
-        row = self.log().agg(F.coalesce(F.max("offset"), F.lit(0)).alias("m")).first()
-        return int(row["m"])
+        a non-empty segment with incomplete offset stats (foreign
+        writer with statistics disabled) has its offset column read
+        exactly rather than guessed (``log_tail``), and an unreadable
+        footer raises.  On a cluster the footer reads are the same
+        ranged reads retention performs."""
+        return log_tail(self._segment_stats())
 
     def replay(
         self,
@@ -1025,35 +1052,31 @@ class Topic:
         cache = self._footer_cache
         seen: dict[tuple, dict] = {}
         out = []
-        for dirpath, _dirnames, filenames in os.walk(self.log_dir):
-            for fn in filenames:
-                if not (fn.startswith("part-") and fn.endswith(".parquet")):
+        for path in segment_files(self.log_dir):
+            st = os.stat(path)
+            key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
+            rec = cache.get(key)
+            if rec is None:
+                try:
+                    rec = _footer_record(path, st.st_size)
+                except Exception:
+                    if not tolerant:
+                        raise
+                    out.append(
+                        {
+                            "path": path,
+                            "size": st.st_size,
+                            "uuid": _segment_uuid(os.path.basename(path)),
+                            "min_off": None,
+                            "max_off": None,
+                            "max_ts_us": None,
+                            "num_rows": 0,
+                            "bad": True,
+                        }
+                    )
                     continue
-                path = os.path.join(dirpath, fn)
-                st = os.stat(path)
-                key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
-                rec = cache.get(key)
-                if rec is None:
-                    try:
-                        rec = _footer_record(path, fn, st.st_size)
-                    except Exception:
-                        if not tolerant:
-                            raise
-                        out.append(
-                            {
-                                "path": path,
-                                "size": st.st_size,
-                                "uuid": _segment_uuid(fn),
-                                "min_off": None,
-                                "max_off": None,
-                                "max_ts_us": None,
-                                "num_rows": 0,
-                                "bad": True,
-                            }
-                        )
-                        continue
-                seen[key] = rec
-                out.append(dict(rec))
+            seen[key] = rec
+            out.append(dict(rec))
         self._footer_cache = seen
         return out
 
@@ -1336,12 +1359,7 @@ class Topic:
             validate,
             release=lambda: current.unpersist(blocking=True),
         )
-        return sum(
-            1
-            for _dir, _sub, files in os.walk(self.log_dir)
-            for f in files
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
+        return len(segment_files(self.log_dir))
 
     def compact_small(
         self,
@@ -1428,11 +1446,7 @@ class Topic:
             )
             writer.write.mode("overwrite").parquet(tmp)
             _prune_empty_parts(tmp)
-            new_files = [
-                f
-                for f in os.listdir(tmp)
-                if f.startswith("part-") and f.endswith(".parquet")
-            ]
+            new_files = [os.path.basename(p) for p in segment_files(tmp)]
             n_after = self.spark.read.parquet(
                 *[os.path.join(tmp, f) for f in new_files]
             ).count()
@@ -1791,8 +1805,24 @@ class Topic:
         Cost: one scan of the old dir plus an offset-range-pruned probe
         of the live log — paid only for a stale legacy artifact, never
         on the routine sweep path."""
-        old_rng = _dir_offset_range(old)
-        live_rng = _dir_offset_range(self.log_dir)
+
+        def span(root: str) -> tuple[int, int] | None:
+            # [min, max] offset of root's data rows from footer stats;
+            # None when not fully established (no rows, an unreadable
+            # footer, missing stats) — never adjudicable
+            try:
+                recs = [r for r in segment_records(root) if r["num_rows"]]
+            except Exception:
+                return None
+            if not recs or any(r["min_off"] is None for r in recs):
+                return None
+            return (
+                min(r["min_off"] for r in recs),
+                max(r["max_off"] for r in recs),
+            )
+
+        old_rng = span(old)
+        live_rng = span(self.log_dir)
         if (
             old_rng is None
             or live_rng is None
@@ -1816,19 +1846,18 @@ class Topic:
         return missing.limit(1).count() == 0
 
     def _redetect_layout(self) -> None:
-        """Refresh the partitioned flag from the on-disk layout after a
-        recovery moved directories under this handle (review r11: a
-        handle that detected a flat empty seed must not keep treating a
-        restored pub_date-partitioned log as flat)."""
-        if os.path.isdir(self.log_dir):
-            entries = os.listdir(self.log_dir)
-            if any(e.startswith("pub_date=") for e in entries):
-                self.partitioned = True
-            elif any(
-                e.startswith("part-") and e.endswith(".parquet")
-                for e in entries
-            ):
-                self.partitioned = False
+        """Take the partitioned flag from the on-disk layout when the
+        log shows one, in BOTH directions: at construction (a fresh
+        Engine must not misread a partitioned topic as flat, and
+        partitioned=True over an existing FLAT log must not make log()
+        synthesize an empty frame — latest()==0 would then reassign
+        duplicate offsets) and after a recovery moved directories under
+        this handle (review r11: a handle that detected a flat empty
+        seed must not keep treating a restored pub_date-partitioned log
+        as flat)."""
+        layout = detect_partitioned(self.log_dir)
+        if layout is not None:
+            self.partitioned = layout
 
     def offset_for_time(self, ts) -> int | None:
         """Earliest offset whose ``ts`` >= the given time (Kafka's
@@ -2055,8 +2084,6 @@ class Topic:
         shuffle; each staged file then holds a contiguous offset
         range) and one parquet append — no offset rewrite.  Returns
         the number of rows mirrored."""
-        import pyarrow.parquet as pq
-
         if os.path.abspath(dst.root) == os.path.abspath(self.root):
             raise ValueError("mirror_to: destination is the source topic")
         first, second = sorted((self.root, dst.root), key=os.path.abspath)
@@ -2107,49 +2134,20 @@ class Topic:
                 shutil.rmtree(staging, ignore_errors=True)
                 last_err = err
                 continue
-            staged = []
-            n = 0
-            for dirpath, _dn, filenames in os.walk(staging):
-                for fn in filenames:
-                    if fn.startswith("part-") and fn.endswith(".parquet"):
-                        path = os.path.join(dirpath, fn)
-                        meta = pq.ParquetFile(path).metadata
-                        if not meta.num_rows:
-                            continue
-                        min_off = None
-                        try:
-                            idx = {
-                                meta.schema.column(i).name: i
-                                for i in range(meta.num_columns)
-                            }["offset"]
-                            stats = meta.row_group(0).column(idx).statistics
-                            if stats is not None and stats.has_min_max:
-                                min_off = min(
-                                    meta.row_group(g)
-                                    .column(idx)
-                                    .statistics.min
-                                    for g in range(meta.num_row_groups)
-                                )
-                        except Exception:
-                            min_off = None
-                        if min_off is None:  # stats missing: read column
-                            min_off = min(
-                                pq.read_table(path, columns=["offset"])
-                                .column("offset")
-                                .to_pylist()
-                            )
-                        staged.append((min_off, path))
-                        n += meta.num_rows
-            if n == 0:
+            recs = [r for r in segment_records(staging) if r["num_rows"]]
+            if not recs:
                 shutil.rmtree(staging, ignore_errors=True)
                 return 0
+            n = sum(r["num_rows"] for r in recs)
             # Rename in ASCENDING offset order: a crash mid-phase then
             # leaves a contiguous prefix of the delta visible, and the
             # next mirror_to's watermark (dst.latest()) resumes exactly
-            # after it.  os.walk order would let a higher-offset file
+            # after it.  Listing order would let a higher-offset file
             # land first, and a crash before its lower siblings would
             # freeze a hole UNDER the watermark forever (review r9).
-            staged.sort()
+            # Staged ranges are contiguous and disjoint (phase 2), so
+            # ordering by each file's newest offset orders the ranges.
+            staged = sorted((_segment_max(r), r["path"]) for r in recs)
             # -- phase 3: append (destination lock only) --------------
             with writer_lock(dst.root, what="mirror"):
                 if dst.latest() != tail:
@@ -2160,7 +2158,7 @@ class Topic:
                         "mirror_to: destination tail moved during copy"
                     )
                     continue
-                for _min_off, path in staged:
+                for _max_off, path in staged:
                     rel = os.path.relpath(path, staging)
                     target = os.path.join(dst.log_dir, rel)
                     os.makedirs(os.path.dirname(target), exist_ok=True)

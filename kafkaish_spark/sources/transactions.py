@@ -51,6 +51,7 @@ from kafkaish_spark.sources.topic_log import (
     ENVELOPE,
     Engine,
     _assign_contiguous_ids,
+    segment_records,
     writer_lock,
 )
 
@@ -179,26 +180,19 @@ def publish_transaction(
                 out.write.mode("overwrite").parquet(stage_sub)
             finally:
                 src.unpersist()
-            staged_files = sorted(
-                f
-                for f in os.listdir(stage_sub)
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-            for j, f in enumerate(staged_files):
+            staged = segment_records(stage_sub)
+            for j, rec in enumerate(staged):
                 moves.append(
                     {
-                        "src": os.path.join(stage_sub, f),
+                        "src": rec["path"],
                         "dst": os.path.join(
                             topic.log_dir,
                             f"part-txn{os.path.basename(txn_dir)}-{i}-{j}.parquet",
                         ),
                     }
                 )
-            import pyarrow.parquet as pq
-
             counts[name] = counts.get(name, 0) + sum(
-                pq.ParquetFile(os.path.join(stage_sub, f)).metadata.num_rows
-                for f in staged_files
+                rec["num_rows"] for rec in staged
             )
         ack_docs = [
             {"topic": t, "group": g, "offset": int(o)}

@@ -149,92 +149,3 @@ def test_orc_roundtrip_and_text_ingest(engine, spark, tmp_path):
     msgs = {r["message"] for r in t2.replay().collect()}
     assert msgs == {'{"value":"first line"}', '{"value":"second line"}'}
 
-
-class TestPythonDataSource:
-    """Spark 4 Python DataSource connector over a topic log."""
-
-    def _mk_topic(self, engine):
-        topic = engine.prepare_topic("pyds_t")
-        topic.publish_batch(
-            [("click", {"n": i}) if i % 2 else ("view", {"n": i}) for i in range(1, 21)]
-        )
-        return topic
-
-    def test_batch_read_roundtrip(self, spark, engine):
-        from kafkaish_spark.sources import pyds
-
-        topic = self._mk_topic(engine)
-        pyds.register(spark)
-        df = spark.read.format("kafkaish_topic").option("path", topic.log_dir).load()
-        rows = sorted(df.collect(), key=lambda r: r.offset)
-        assert [r.offset for r in rows] == list(range(1, 21))
-        assert rows[0].event == "click"
-
-    def test_start_offset_pushdown(self, spark, engine):
-        from kafkaish_spark.sources import pyds
-
-        topic = self._mk_topic(engine)
-        pyds.register(spark)
-        df = (
-            spark.read.format("kafkaish_topic")
-            .option("path", topic.log_dir)
-            .option("start_offset", 15)
-            .load()
-        )
-        assert sorted(r.offset for r in df.collect()) == list(range(16, 21))
-
-    def test_event_filter(self, spark, engine):
-        from kafkaish_spark.sources import pyds
-
-        topic = self._mk_topic(engine)
-        pyds.register(spark)
-        df = (
-            spark.read.format("kafkaish_topic")
-            .option("path", topic.log_dir)
-            .option("event", "view")
-            .load()
-        )
-        offs = sorted(r.offset for r in df.collect())
-        assert offs == [i for i in range(1, 21) if i % 2 == 0]
-
-    def test_stream_tail_delivers_then_resumes(self, spark, engine, tmp_path):
-        from kafkaish_spark.sources import pyds
-
-        topic = self._mk_topic(engine)
-        pyds.register(spark)
-        ckpt = str(tmp_path / "pyds_ckpt")
-        out = []
-
-        def sink(batch_df, _bid):
-            out.extend(r.offset for r in batch_df.collect())
-
-        q = (
-            spark.readStream.format("kafkaish_topic")
-            .option("path", topic.log_dir)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert sorted(out) == list(range(1, 21))
-
-        # new publishes after the checkpointed offset are the only redelivery
-        topic.publish_batch([("click", {"n": 99})])
-        out2 = []
-
-        def sink2(batch_df, _bid):
-            out2.extend(r.offset for r in batch_df.collect())
-
-        q2 = (
-            spark.readStream.format("kafkaish_topic")
-            .option("path", topic.log_dir)
-            .load()
-            .writeStream.foreachBatch(sink2)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(120)
-        assert out2 == [21]

@@ -899,8 +899,9 @@ def test_latest_footer_fast_path_matches_spark_agg(engine):
 
 def test_latest_falls_back_when_stats_missing(engine, tmp_path):
     """A segment written WITHOUT parquet statistics (foreign writer)
-    must not break offset assignment: latest() falls back to the exact
-    Spark aggregate instead of trusting incomplete footers."""
+    must not break offset assignment: latest() and the connector's
+    stream bound read that segment's offset column instead of
+    trusting incomplete footers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -922,14 +923,31 @@ def test_latest_falls_back_when_stats_missing(engine, tmp_path):
         os.path.join(topic.log_dir, "part-foreign.x.parquet"),
         write_statistics=False,
     )
-    assert topic.latest() == 5  # exact, via the Spark-agg fallback
+    assert topic.latest() == 5  # exact, via the offset-column read
+    from kafkaish_spark.sources.pyds import KafkaishPartitionedStreamReader
+
+    reader = KafkaishPartitionedStreamReader(
+        {"path": engine.root, "topic": "latest_nostats"}
+    )
+    assert reader.latestOffset() == {"offset": 5}
 
 
 def test_direct_publish_orphan_inprogress_is_invisible(engine):
     """A crash between the hidden write and the rename leaves a
-    '.part-*.inprogress' file: readers (batch, footer stats, fsck)
-    must ignore it and the next publish must proceed normally."""
+    '.part-*.inprogress' file, and a Spark write in flight (or aborted)
+    leaves valid task files under 'log/_temporary/': readers (batch,
+    footer stats, fsck, describe, retention, the connector's batch read
+    and stream bound) must all ignore both, exactly like Spark's own
+    listing, and the next publish must proceed normally."""
     import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafkaish_spark.sources.pyds import (
+        KafkaishPartitionedStreamReader,
+        register,
+    )
 
     topic = engine.prepare_topic("orphan")
     topic.publish_batch([("e0", {"k": 1})])
@@ -937,9 +955,46 @@ def test_direct_publish_orphan_inprogress_is_invisible(engine):
     orphan = os.path.join(topic.log_dir, ".part-00000-dead.snappy.parquet.inprogress")
     with open(orphan, "wb") as fh:
         fh.write(b"half-written garbage, not a parquet footer")
-    assert topic.latest() == 1  # footer path skips the hidden file
-    assert topic.log().count() == 1  # Spark listing ignores dot-files
-    assert topic.fsck()["ok"]
+    # a task attempt's output: a valid envelope file past the tail
+    attempt = os.path.join(
+        topic.log_dir, "_temporary", "0", "_temporary", "attempt_0"
+    )
+    os.makedirs(attempt)
+    task_file = os.path.join(attempt, "part-00000-task.c000.snappy.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "offset": pa.array([2, 3, 4], pa.int64()),
+                "ts": pa.array([0, 0, 0], pa.timestamp("us", tz="UTC")),
+                "event": pa.array(["e0"] * 3),
+                "message": pa.array(["{}"] * 3),
+            }
+        ),
+        task_file,
+    )
+    n = topic.log().count()  # Spark listing ignores dot- and _-paths
+    assert n == 1
+    assert topic.latest() == n
+    fsck = topic.fsck()
+    assert fsck["ok"] and fsck["n_rows"] == fsck["max_offset"] == n
+    assert topic.describe()["max_offset"] == n
+    register(engine.spark)
+    via_ds = (
+        engine.spark.read.format("kafkaish")
+        .option("path", engine.root)
+        .option("topic", "orphan")
+        .load()
+    )
+    assert via_ds.count() == n
+    reader = KafkaishPartitionedStreamReader(
+        {"path": engine.root, "topic": "orphan"}
+    )
+    assert reader.latestOffset() == {"offset": n}
+    # retention keeps the newest committed segment as its anchor: the
+    # task file is neither that anchor nor evicted
+    topic.enforce_retention(0)
+    assert topic.log().count() == n
+    assert os.path.exists(task_file)
     topic.publish_batch([("e1", {"k": 2})])
     assert topic.latest() == 2
     assert [r["offset"] for r in topic.replay(since=0).collect()] == [1, 2]
@@ -1296,3 +1351,30 @@ def test_footer_cache_concurrent_publishers_and_readers(engine, spark):
 
     fresh = stats(Topic(spark, engine.root, "fc_threads"))
     assert stats(handles[0]) == stats(handles[1]) == fresh
+
+
+def test_direct_publish_stamps_segments_in_offset_order(engine):
+    """Spark's file source orders a subscriber's new files by
+    modification time in whole milliseconds, ties in directory order.
+    Every published segment must therefore carry a millisecond mtime
+    strictly after each earlier segment's — also when publishes land
+    within one millisecond, or when the clock reads earlier than the
+    newest segment (simulated by dating the first segment 2 s ahead) —
+    or a bounded subscriber drain can deliver out of offset order."""
+    import os
+    import time
+
+    topic = engine.prepare_topic("mtime_order")
+    topic.publish("e", {"i": 0})
+    (first,) = [s["path"] for s in topic._segment_stats() if s["num_rows"]]
+    ahead = time.time_ns() + 2_000_000_000
+    os.utime(first, ns=(ahead, ahead))
+    for i in range(1, 12):
+        topic.publish("e", {"i": i})
+    segs = sorted(
+        (s for s in topic._segment_stats() if s["num_rows"]),
+        key=lambda s: s["min_off"],
+    )
+    stamps = [os.stat(s["path"]).st_mtime_ns // 1_000_000 for s in segs]
+    assert len(stamps) == 12
+    assert all(a < b for a, b in zip(stamps, stamps[1:])), stamps

@@ -204,17 +204,6 @@ def test_partitioned_stream_drains_10k_across_segment_partitions(
     assert max(s[2] for s in seen) == n_segments
 
 
-def test_read_between_offsets_is_deterministic(engine, pub_topic):
-    """readBetweenOffsets replays a committed range exactly — the
-    recovery contract a restarted query relies on."""
-    from kafkaish_spark.sources.pyds import KafkaishStreamReader
-
-    r = KafkaishStreamReader({"path": engine.root, "topic": "pyds"})
-    a = [row[0] for row in r.readBetweenOffsets({"offset": 3}, {"offset": 7})]
-    b = [row[0] for row in r.readBetweenOffsets({"offset": 3}, {"offset": 7})]
-    assert a == b == [4, 5, 6, 7]
-
-
 def test_batch_write_appends_with_contiguous_offsets(spark, engine, pub_topic):
     """df.write.format('kafkaish') stages per-partition files and
     commit() assigns contiguous offsets after the tail — readable both
@@ -316,7 +305,9 @@ def test_stream_write_exactly_once_per_epoch(spark, engine, tmp_path):
 def test_partitioned_stream_reader_prunes_by_range(engine, pub_topic):
     """The executor-parallel stream reader plans only the segments
     overlapping the trigger's offset range (footer-stats pruning), and
-    reads exactly the range rows as Arrow batches."""
+    reads exactly the range rows as Arrow batches.  Planning and
+    reading a committed range again gives the same rows — the recovery
+    contract a restarted query relies on."""
     from kafkaish_spark.sources.pyds import KafkaishPartitionedStreamReader
 
     r = KafkaishPartitionedStreamReader(
@@ -324,16 +315,23 @@ def test_partitioned_stream_reader_prunes_by_range(engine, pub_topic):
     )
     assert r.initialOffset() == {"offset": 0}
     assert r.latestOffset() == {"offset": 9}
+
+    def read_range(lo, hi):
+        parts = r.partitions({"offset": lo}, {"offset": hi})
+        rows = [
+            row
+            for p in parts
+            for batch in r.read(p)
+            for row in batch.to_pylist()
+        ]
+        return parts, sorted(rows, key=lambda row: row["offset"])
+
     # range (3, 7]: segment 1 (1-3) pruned, segments 2 (4-6) + 3 (7-9) kept
-    parts = r.partitions({"offset": 3}, {"offset": 7})
+    parts, first = read_range(3, 7)
     assert len(parts) == 2
-    got = sorted(
-        o
-        for p in parts
-        for batch in r.read(p)
-        for o in batch["offset"].to_pylist()
-    )
-    assert got == [4, 5, 6, 7]
+    assert [row["offset"] for row in first] == [4, 5, 6, 7]
+    _parts, again = read_range(3, 7)
+    assert again == first
     # empty range plans nothing
     assert r.partitions({"offset": 9}, {"offset": 9}) == []
 
@@ -517,10 +515,8 @@ def test_footer_offset_lookup_by_name(engine, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafkaish_spark.sources.pyds import (
-        KafkaishBatchReader,
-        _footer_offset_range,
-    )
+    from kafkaish_spark.sources.pyds import KafkaishBatchReader
+    from kafkaish_spark.sources.topic_log import _footer_record
 
     topic = engine.prepare_topic("reorder")
     topic.publish_batch([("a", {"i": 1}), ("a", {"i": 2})])
@@ -534,9 +530,8 @@ def test_footer_offset_lookup_by_name(engine, tmp_path):
         }
     )
     pq.write_table(ext, os.path.join(topic.log_dir, "part-ext.parquet"))
-    assert _footer_offset_range(
-        os.path.join(topic.log_dir, "part-ext.parquet")
-    ) == (3, 4, True)
+    rec = _footer_record(os.path.join(topic.log_dir, "part-ext.parquet"))
+    assert (rec["min_off"], rec["max_off"]) == (3, 4)
     reader = KafkaishBatchReader({"path": engine.root, "topic": "reorder"})
     from kafkaish_spark.sources.pyds import GreaterThan
 
@@ -552,18 +547,19 @@ def test_footer_offset_lookup_by_name(engine, tmp_path):
 
 def test_footer_partial_stats_tail_fallback(engine, tmp_path):
     """A segment whose footer stats are PARTIAL (some row group lacks
-    min/max) must not be treated as empty: _tail() falls back to an
-    exact offset-column read so the next append never reuses live
-    offsets (r5 advice, low)."""
+    min/max) must not be treated as empty: the shared tail falls back
+    to an exact offset-column read so the next append never reuses
+    live offsets (r5 advice, low)."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafkaish_spark.sources.pyds import (
-        KafkaishBatchWriter,
+    from kafkaish_spark.sources.topic_log import (
         _file_offset_max,
-        _footer_offset_range,
+        _footer_record,
+        log_tail,
+        segment_records,
     )
 
     topic = engine.prepare_topic("partialstats")
@@ -579,42 +575,48 @@ def test_footer_partial_stats_tail_fallback(engine, tmp_path):
     )
     fpath = os.path.join(topic.log_dir, "part-nostats.parquet")
     pq.write_table(ext, fpath, write_statistics=False)
-    lo, hi, complete = _footer_offset_range(fpath)
-    assert complete is False
+    assert _footer_record(fpath)["max_off"] is None  # stats incomplete
     assert _file_offset_max(fpath) == 4
-    writer = KafkaishBatchWriter(
-        {"path": engine.root, "topic": "partialstats"}, overwrite=False
-    )
-    assert writer._tail() == 4  # not 2: the statless segment counts
+    # not 2: the statless segment counts
+    assert log_tail(segment_records(topic.log_dir)) == 4
 
 
 def test_file_offset_max_none_only_for_missing_column(tmp_path):
     """r7 review fix: _file_offset_max returns None ONLY when the
     offset column is absent from the footer schema; any other read
     failure raises — a silently understated tail in the writer path
-    would let the next append reuse live offsets."""
+    would let the next append reuse live offsets.  The footer record
+    of the offset-less file reads as missing stats, not a KeyError."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
 
-    from kafkaish_spark.sources import pyds, pyds_topic
+    from kafkaish_spark.sources.topic_log import _file_offset_max, _footer_record
 
     no_off = os.path.join(str(tmp_path), "no_offset.parquet")
     pq.write_table(pa.table({"event": pa.array(["a"], pa.string())}), no_off)
-    assert pyds._file_offset_max(no_off) is None
-    assert pyds_topic._file_offset_max(no_off) is None
+    assert _file_offset_max(no_off) is None
+    rec = _footer_record(no_off)
+    assert (rec["num_rows"], rec["max_off"], rec["max_ts_us"]) == (1, None, None)
 
     ok = os.path.join(str(tmp_path), "ok.parquet")
     pq.write_table(pa.table({"offset": pa.array([7, 9], pa.int64())}), ok)
-    assert pyds._file_offset_max(ok) == 9
-    assert pyds_topic._file_offset_max(ok) == 9
+    assert _file_offset_max(ok) == 9
 
     corrupt = os.path.join(str(tmp_path), "corrupt.parquet")
     with open(corrupt, "wb") as fh:
         fh.write(b"PAR1 this is not a parquet footer")
     with pytest.raises(Exception):
-        pyds._file_offset_max(corrupt)
-    with pytest.raises(Exception):
-        pyds_topic._file_offset_max(corrupt)
+        _file_offset_max(corrupt)
+
+
+def test_footer_reading_stays_in_topic_log():
+    """The connector reads no parquet footer itself: which files are
+    the log and what they hold is decided in sources/topic_log.py, so
+    the connector and Topic can never disagree about the log."""
+    import kafkaish_spark.sources.pyds as pyds
+
+    with open(pyds.__file__) as fh:
+        assert "ParquetFile(" not in fh.read()
