@@ -305,9 +305,7 @@ def test_stream_write_exactly_once_per_epoch(spark, engine, tmp_path):
 def test_partitioned_stream_reader_prunes_by_range(engine, pub_topic):
     """The executor-parallel stream reader plans only the segments
     overlapping the trigger's offset range (footer-stats pruning), and
-    reads exactly the range rows as Arrow batches.  Planning and
-    reading a committed range again gives the same rows — the recovery
-    contract a restarted query relies on."""
+    reads exactly the range rows as Arrow batches."""
     from kafkaish_spark.sources.pyds import KafkaishPartitionedStreamReader
 
     r = KafkaishPartitionedStreamReader(
@@ -315,25 +313,42 @@ def test_partitioned_stream_reader_prunes_by_range(engine, pub_topic):
     )
     assert r.initialOffset() == {"offset": 0}
     assert r.latestOffset() == {"offset": 9}
-
-    def read_range(lo, hi):
-        parts = r.partitions({"offset": lo}, {"offset": hi})
-        rows = [
-            row
-            for p in parts
-            for batch in r.read(p)
-            for row in batch.to_pylist()
-        ]
-        return parts, sorted(rows, key=lambda row: row["offset"])
-
     # range (3, 7]: segment 1 (1-3) pruned, segments 2 (4-6) + 3 (7-9) kept
-    parts, first = read_range(3, 7)
+    parts = r.partitions({"offset": 3}, {"offset": 7})
     assert len(parts) == 2
-    assert [row["offset"] for row in first] == [4, 5, 6, 7]
-    _parts, again = read_range(3, 7)
-    assert again == first
+    got = sorted(
+        o
+        for p in parts
+        for batch in r.read(p)
+        for o in batch["offset"].to_pylist()
+    )
+    assert got == [4, 5, 6, 7]
     # empty range plans nothing
     assert r.partitions({"offset": 9}, {"offset": 9}) == []
+
+
+def test_read_between_offsets_is_deterministic(engine, pub_topic):
+    """Planning and reading a committed range again — on the same reader
+    or on a fresh one — replays it exactly: the recovery contract a
+    restarted query relies on."""
+    from kafkaish_spark.sources.pyds import KafkaishPartitionedStreamReader
+
+    def read_range(reader, lo, hi):
+        rows = [
+            row
+            for p in reader.partitions({"offset": lo}, {"offset": hi})
+            for batch in reader.read(p)
+            for row in batch.to_pylist()
+        ]
+        return sorted(rows, key=lambda row: row["offset"])
+
+    opts = {"path": engine.root, "topic": "pyds"}
+    r = KafkaishPartitionedStreamReader(opts)
+    a = read_range(r, 3, 7)
+    b = read_range(r, 3, 7)
+    c = read_range(KafkaishPartitionedStreamReader(opts), 3, 7)
+    assert [row["offset"] for row in a] == [4, 5, 6, 7]
+    assert a == b == c
 
 
 def test_batch_write_rejects_partitioned_topics(spark, engine):
