@@ -7,7 +7,7 @@ subscribe / replay-then-live / ack / retention, see
 
 - Topic log  = partitioned Parquet append log (``sources.topic_log``)
 - Subscribe  = Structured Streaming query (``streaming.subscribe``)
-- Ack        = streaming checkpoint commit + queryable ``_subscribers`` table
+- Ack        = streaming checkpoint commit + per-subscriber JSON ack file
 - Processing = batch + streaming relational operators over DataFrames
   (``operators``), validated against a DuckDB oracle.
 """

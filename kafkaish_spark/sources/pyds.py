@@ -38,12 +38,13 @@ Rows never funnel through the driver, so a fat backlog drains with
 cluster parallelism — the r8 driver-side bottleneck is gone.  The
 driver only reads footers (``latestOffset``).
 
-Which files are the log, what their footers say and where the tail
-is are decided in ``sources/topic_log.py`` (``segment_records``,
-``log_tail``) — the same listing, footer parser and tail ``Topic``
-uses, with Spark's hidden-path rule, so this connector can never see
-a file (an in-flight ``_temporary`` task output, say) that
-``Topic.log()`` does not.
+Which files are the log, what their footers say, where the tail is
+and how a segment is read and filtered are decided in
+``sources/topic_log.py`` (``segment_records``, ``log_tail``,
+``read_segment``) — the same listing, footer parser, tail and segment
+reader ``Topic`` and ``subscribe()`` use, with Spark's hidden-path
+rule, so this connector can never see a file (an in-flight
+``_temporary`` task output, say) that ``Topic.log()`` does not.
 
 Write path: ``df.write.format("kafkaish").mode("append")`` appends to
 the log through the V2 two-phase commit (executors stage, the driver
@@ -68,7 +69,6 @@ sources/typed.py's topic views do).
 from __future__ import annotations
 
 import contextlib
-import functools
 import json
 import os
 
@@ -90,6 +90,7 @@ from pyspark.sql.datasource import (
 from kafkaish_spark.sources.topic_log import (
     detect_partitioned,
     log_tail,
+    read_segment,
     segment_records,
 )
 
@@ -145,23 +146,15 @@ def _plan(
 
 def _read(partition: _SegmentPartition, event: str | None = None):
     """The partition's envelope rows as Arrow batches, filtered exactly
-    to its offset range and ``event``."""
+    to its offset range and ``event`` (``topic_log.read_segment``)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     if not partition.file:
         return
-    tbl = pq.read_table(partition.file, columns=["offset", "ts", "event", "message"])
-    conds = []
-    if partition.min_excl is not None:
-        conds.append(pc.greater(tbl["offset"], partition.min_excl))
-    if partition.max_incl is not None:
-        conds.append(pc.less_equal(tbl["offset"], partition.max_incl))
-    if event is not None:
-        conds.append(pc.equal(tbl["event"], event))
-    if conds:
-        tbl = tbl.filter(functools.reduce(pc.and_, conds))
+    tbl = read_segment(
+        partition.file, partition.min_excl, partition.max_incl, event
+    )
     # normalize ts to micros-no-tz: Spark's Arrow bridge expects the
     # TimestampType batches timezone-naive
     ts = tbl["ts"]

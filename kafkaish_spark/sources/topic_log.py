@@ -13,8 +13,9 @@ log; :25-40 publish; :118-201 replay; :202-220 ack; :221-244 latest;
 - tailable cursor              -> Structured Streaming file source
                                   (see kafkaish_spark.streaming)
 - ``<topic>_subscribers``      -> streaming checkpoint (the real ack) +
-  offset collection               a queryable ``_subscribers`` parquet
-                                  table for introspection
+  offset collection               one JSON ack file per subscriber
+                                  (``_subscribers/<name>.ack.json``)
+                                  for introspection
 - capped-size FIFO eviction    -> ``Topic.enforce_retention`` maintenance
                                   job (delete oldest committed files)
 
@@ -263,6 +264,37 @@ def log_tail(records: Iterable[dict]) -> int:
     return int(
         max((m for m in map(_segment_max, records) if m is not None), default=0)
     )
+
+
+def read_segment(
+    path: str,
+    min_excl: int | None = None,
+    max_incl: int | None = None,
+    event: str | None = None,
+):
+    """One segment's envelope rows (offset, ts, event, message) as an
+    Arrow table, filtered exactly to offsets in (min_excl, max_incl]
+    (``None`` = unbounded) and to ``event`` (``None`` = every event) —
+    the one segment reader, shared by the ``kafkaish`` connector's
+    tasks and ``subscribe()``'s driver-side delivery.  Rows keep file
+    order; ``ts`` keeps the file's timestamp type."""
+    import functools
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    # a single-file read: ParquetFile skips the dataset discovery
+    # ``pq.read_table`` does (~0.3 vs ~0.9 ms per one-message segment)
+    with pq.ParquetFile(path) as pf:
+        tbl = pf.read(columns=["offset", "ts", "event", "message"])
+    conds = []
+    if min_excl is not None:
+        conds.append(pc.greater(tbl["offset"], min_excl))
+    if max_incl is not None:
+        conds.append(pc.less_equal(tbl["offset"], max_incl))
+    if event is not None:
+        conds.append(pc.equal(tbl["event"], event))
+    return tbl.filter(functools.reduce(pc.and_, conds)) if conds else tbl
 
 
 def _small_compaction_gain(

@@ -14,9 +14,10 @@ membership is a constructor argument, not a negotiation).
 
 Delivery contract per member = the durable ``subscribe_batches``
 contract per owned shard: per-shard total order by offset,
-at-least-once (micro-batch checkpoint commit), per-shard ack rows in
-each shard's ``_subscribers`` table under the GROUP name (offsets
-belong to the group, not the member — Kafka's contract).
+at-least-once (micro-batch checkpoint commit), a per-shard JSON ack
+file in each shard's ``_subscribers`` directory under the GROUP name
+(``Topic.ack``; offsets belong to the group, not the member — Kafka's
+contract).
 Cross-shard order is NOT promised — exactly the multi-partition Kafka
 relaxation the sharded-topic property test pins.
 

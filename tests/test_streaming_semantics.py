@@ -468,3 +468,176 @@ def test_per_message_ack_granularity(engine):
     sub2.unsubscribe()
     assert got2 == [2, 3]  # exactly the unacked tail, message 1 not repeated
     assert topic.last_ack("g1") == 3
+
+
+def test_live_delivery_crosses_source_log_compactions(engine):
+    """Live delivery reads each micro-batch's files from Spark's
+    file-source log in the checkpoint, where every tenth entry is a
+    ``.compact`` file holding all entries so far.  22 live batches of 1,
+    2 or 3 messages cross the compactions at log entries 9 and 19: each
+    offset is delivered exactly once, in order, and each batch's
+    ``numInputRows`` equals the rows delivered in it."""
+    import os
+    import time
+
+    topic = engine.prepare_topic("s_compact_log")
+    got = []
+    sub = subscribe(
+        topic, lambda e, m, o: got.append(o), name="w", replay=True,
+        available_now=False,
+    )
+    sizes = [1 + k % 3 for k in range(22)]
+    try:
+        for k, size in enumerate(sizes):
+            rows = topic.publish_batch([("ev", {"number": k})] * size)
+            last = int(rows[-1]["offset"])
+            deadline = time.time() + 120
+            while last not in got and time.time() < deadline:
+                time.sleep(0.02)
+        sub.query.processAllAvailable()
+        progress = {
+            p["batchId"]: p["numInputRows"]
+            for p in sub.query.recentProgress
+            if p["numInputRows"] > 0
+        }
+    finally:
+        sub.unsubscribe()
+
+    assert got == list(range(1, sum(sizes) + 1))
+    assert [progress[b] for b in sorted(progress)] == sizes
+    source_log = os.listdir(os.path.join(sub.checkpoint, "sources", "0"))
+    assert {"9.compact", "19.compact"} <= set(source_log), source_log
+    assert topic.last_ack("w") == sum(sizes)
+
+
+def test_dropped_row_fails_batch_without_ack(engine, monkeypatch):
+    """Delivery cross-checks the rows it read from the segment files
+    against Spark's own read of the micro-batch.  A segment reader that
+    drops a row makes the batch raise before its ack, so a resumed
+    durable subscriber gets the whole batch again."""
+    import importlib
+
+    import pyarrow.compute as pc
+
+    subscribe_mod = importlib.import_module("kafkaish_spark.streaming.subscribe")
+    read_segment = subscribe_mod.read_segment
+
+    def drop_offset_2(*args, **kwargs):
+        tbl = read_segment(*args, **kwargs)
+        return tbl.filter(pc.not_equal(tbl["offset"], 2))
+
+    topic = engine.prepare_topic("s_cross_check")
+    topic.publish_batch([("ev", {"number": i}) for i in range(1, 4)])
+
+    monkeypatch.setattr(subscribe_mod, "read_segment", drop_offset_2)
+    got = []
+    sub = subscribe(topic, lambda e, m, o: got.append(o), name="w", replay=True)
+    with pytest.raises(Exception, match="differ from the 2 delivered"):
+        sub.await_termination()
+    sub.unsubscribe()
+    assert got == [1, 3]
+    assert topic.last_ack("w") is None
+
+    monkeypatch.undo()
+    again = []
+    sub = subscribe(topic, lambda e, m, o: again.append(o), name="w", replay=True)
+    sub.await_termination()
+    sub.unsubscribe()
+    assert again == [1, 2, 3]
+    assert topic.last_ack("w") == 3
+
+
+def test_ephemeral_unsubscribe_removes_checkpoint(engine):
+    """An ephemeral subscription's temp checkpoint is never resumed, so
+    unsubscribing removes it — for ``subscribe`` and
+    ``subscribe_batches`` alike; a durable checkpoint stays."""
+    import os
+
+    from kafkaish_spark.streaming.subscribe import subscribe_batches
+
+    topic = engine.prepare_topic("s_eph_cleanup")
+    topic.publish("ev", {"number": 1})
+    subs = [
+        subscribe(topic, lambda e, m, o: None),
+        subscribe_batches(topic, lambda df, bid: None),
+        subscribe(topic, lambda e, m, o: None, name="keep"),
+    ]
+    for sub in subs:
+        sub.await_termination()
+        assert os.path.isdir(sub.checkpoint)
+        sub.unsubscribe()
+    eph_msg, eph_batches, durable = subs
+    assert not os.path.exists(eph_msg.checkpoint)
+    assert not os.path.exists(eph_batches.checkpoint)
+    assert os.path.isdir(durable.checkpoint)
+
+
+def test_start_marker_survives_crash_mid_write(engine, monkeypatch):
+    """A crash while a durable subscriber's ``<name>.start.json`` marker
+    is being written must not leave a truncated marker behind: the next
+    subscribe of that name starts as if the first had never run."""
+    import importlib
+    import json as json_mod
+    import types
+
+    subscribe_mod = importlib.import_module("kafkaish_spark.streaming.subscribe")
+
+    def torn_dump(obj, fh):
+        fh.write('{"start_off')
+        raise OSError("injected: disk full")
+
+    topic = engine.prepare_topic("s_torn_marker")
+    topic.publish_batch([("ev", {"number": i}) for i in range(1, 4)])
+    torn_json = types.SimpleNamespace(**{**vars(json_mod), "dump": torn_dump})
+    monkeypatch.setattr(subscribe_mod, "json", torn_json)
+    with pytest.raises(OSError, match="injected"):
+        subscribe(topic, lambda e, m, o: None, name="m", replay=True)
+
+    monkeypatch.undo()
+    got = []
+    sub = subscribe(topic, lambda e, m, o: got.append(o), name="m", replay=True)
+    sub.await_termination()
+    sub.unsubscribe()
+    assert got == [1, 2, 3]
+    assert topic.last_ack("m") == 3
+
+
+def test_subscribe_partitioned_log_under_escaped_path(spark, tmp_path):
+    """The file-source log names a batch's files as ``file://`` URIs,
+    percent-encoded; delivery maps them back to local paths, also for
+    ``pub_date=`` partition directories under a root whose name holds a
+    space and a ``%``."""
+    from pyspark.sql import functions as F
+
+    from kafkaish_spark.sources.topic_log import Engine
+
+    engine = Engine(spark, str(tmp_path / "a root %20"))
+    topic = engine.prepare_topic("s_part", partitioned=True)
+    df = spark.createDataFrame(
+        [("e", "d1", "2024-01-01 10:00:00"), ("e", "d2", "2024-01-02 10:00:00")],
+        "event string, message string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    topic.publish_df(df)
+    topic.publish_batch([("e", "d3")])
+
+    got = []
+    sub = subscribe(
+        topic, lambda e, m, o: got.append((o, m)), name="w", replay=True
+    )
+    sub.await_termination()
+    sub.unsubscribe()
+    assert got == [(1, "d1"), (2, "d2"), (3, "d3")]
+    assert topic.last_ack("w") == 3
+
+
+def test_lines_backwards_across_chunks(tmp_path):
+    """The compaction-file reader walks lines from the end in fixed
+    chunks; lines that straddle a chunk boundary come out whole."""
+    from kafkaish_spark.streaming.subscribe import _lines_backwards
+
+    data = b"v1\n" + b"".join(b'{"batchId":%d}\n' % i for i in range(40))
+    path = tmp_path / "9.compact"
+    path.write_bytes(data)
+    with open(path, "rb") as fh:
+        got = list(_lines_backwards(fh, chunk=7))
+    assert got == list(reversed(data.split(b"\n")))
