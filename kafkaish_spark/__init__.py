@@ -6,8 +6,11 @@ subscribe / replay-then-live / ack / retention, see
 /root/reference/src/topic.js) on Spark-native storage and execution:
 
 - Topic log  = partitioned Parquet append log (``sources.topic_log``)
-- Subscribe  = Structured Streaming query (``streaming.subscribe``)
-- Ack        = streaming checkpoint commit + per-subscriber JSON ack file
+- Subscribe  = driver-side follower on a message-offset cursor
+  (``streaming.subscribe``); ``subscribe_batches`` = Structured
+  Streaming query
+- Ack        = per-subscriber JSON ack file (the follower's durable
+  position; a ``subscribe_batches`` query also commits its checkpoint)
 - Processing = batch + streaming relational operators over DataFrames
   (``operators``), validated against a DuckDB oracle.
 """

@@ -10,12 +10,12 @@ log; :25-40 publish; :118-201 replay; :202-220 ack; :221-244 latest;
                                   publish (strictly increasing per topic)
 - ``{_id, event, message}``    -> envelope row
                                   (offset, ts, event, message-as-JSON)
-- tailable cursor              -> Structured Streaming file source
+- tailable cursor              -> ``subscribe()``'s offset-cursor
+                                  follower, woken by ``TailSignal``
                                   (see kafkaish_spark.streaming)
-- ``<topic>_subscribers``      -> streaming checkpoint (the real ack) +
-  offset collection               one JSON ack file per subscriber
-                                  (``_subscribers/<name>.ack.json``)
-                                  for introspection
+- ``<topic>_subscribers``      -> one JSON ack file per subscriber
+  offset collection               (``_subscribers/<name>.ack.json``),
+                                  the durable position
 - capped-size FIFO eviction    -> ``Topic.enforce_retention`` maintenance
                                   job (delete oldest committed files)
 
@@ -36,6 +36,7 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 import time
 from typing import Any, Iterable
 from uuid import uuid4
@@ -498,6 +499,40 @@ def writer_lock(topic_root: str, what: str = "publish"):
         if ours:
             with contextlib.suppress(OSError):
                 os.remove(path)
+        sig = _TAIL_SIGNALS.get(os.path.abspath(topic_root))
+        if sig is not None:
+            sig.bump()
+
+
+class TailSignal:
+    """Wake-up for a topic's in-process followers (``subscribe()``): a
+    generation counter under a condition.  ``writer_lock``'s release
+    bumps it — every offset-assigning path goes through that lock, so a
+    commit made in this process wakes its followers at once — and the
+    followers' watcher thread bumps it for commits it sees made by
+    other processes."""
+
+    def __init__(self) -> None:
+        self.cond = threading.Condition()
+        self.generation = 0
+
+    def bump(self) -> None:
+        with self.cond:
+            self.generation += 1
+            self.cond.notify_all()
+
+
+_TAIL_SIGNALS: dict[str, TailSignal] = {}
+_TAIL_SIGNALS_LOCK = threading.Lock()
+
+
+def tail_signal(topic_root: str) -> TailSignal:
+    """The one ``TailSignal`` of the topic at ``topic_root`` in this
+    process; ``writer_lock`` bumps only signals that exist, so a topic
+    nobody follows pays one dict lookup per commit."""
+    key = os.path.abspath(topic_root)
+    with _TAIL_SIGNALS_LOCK:
+        return _TAIL_SIGNALS.setdefault(key, TailSignal())
 
 
 def _session_zone_date(now, sess_tz: str):
@@ -591,8 +626,10 @@ class Topic:
         self.log_dir = os.path.join(self.root, "log")
         self.sub_dir = os.path.join(self.root, "_subscribers")
         self.retention_bytes = retention_bytes
-        # footer-statistics cache of _segment_stats
+        # footer-statistics cache of _segment_stats, and the lock that
+        # serializes its refresh across threads sharing the handle
         self._footer_cache: dict[tuple, dict] = {}
+        self._footer_lock = threading.Lock()
         # mirrors the reference's per-topic closed flag
         # (src/topic.js:14 sets it false at construction); Engine
         # .prepare_topic recreates a handle whose flag is set
@@ -998,15 +1035,18 @@ class Topic:
 
     def ack(self, name: str, offset: int) -> None:
         """Advance a durable subscriber's offset, monotonically (ref:
-        upsert of {name, last}, src/topic.js:202-220).  The *real* ack
-        for streaming subscribers is the checkpoint commit; this is the
-        queryable twin.
+        upsert of {name, last}, src/topic.js:202-220).  For
+        ``subscribe()`` this file IS the durable position: a follower
+        resumes after ``max(start marker, last_ack(name))``.  A
+        ``subscribe_batches`` query resumes from its checkpoint and
+        keeps this file as the queryable twin.
 
         One JSON file per subscriber, written tmp+rename: concurrent
         subscribers never touch each other's state (the old shared
         parquet table was a read-modify-write race), a reader never
         sees a half-written file, and the per-name write is sequential
-        by construction (one streaming query per subscriber name)."""
+        by construction (one active follower or query per subscriber
+        name)."""
         prev = self.last_ack(name) or 0
         path = self._ack_path(name)
         tmp = f"{path}.tmp"
@@ -1080,37 +1120,44 @@ class Topic:
         one bad segment must not take down an engine-wide dashboard
         query (ADVICE r8).  Correctness-critical callers (retention,
         fsck, latest) keep the strict default: they must not act on a
-        log they cannot fully read."""
-        cache = self._footer_cache
-        seen: dict[tuple, dict] = {}
-        out = []
-        for path in segment_files(self.log_dir):
-            st = os.stat(path)
-            key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
-            rec = cache.get(key)
-            if rec is None:
-                try:
-                    rec = _footer_record(path, st.st_size)
-                except Exception:
-                    if not tolerant:
-                        raise
-                    out.append(
-                        {
-                            "path": path,
-                            "size": st.st_size,
-                            "uuid": _segment_uuid(os.path.basename(path)),
-                            "min_off": None,
-                            "max_off": None,
-                            "max_ts_us": None,
-                            "num_rows": 0,
-                            "bad": True,
-                        }
-                    )
-                    continue
-            seen[key] = rec
-            out.append(dict(rec))
-        self._footer_cache = seen
-        return out
+        log they cannot fully read.
+
+        Threads may share a handle (a publisher and ``subscribe()``'s
+        followers do): one refresh runs at a time, so the cache always
+        holds the newest completed listing — ``_publish_direct`` reads
+        its mtime floor from it — and a footer is parsed once, not once
+        per thread."""
+        with self._footer_lock:
+            cache = self._footer_cache
+            seen: dict[tuple, dict] = {}
+            out = []
+            for path in segment_files(self.log_dir):
+                st = os.stat(path)
+                key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
+                rec = cache.get(key)
+                if rec is None:
+                    try:
+                        rec = _footer_record(path, st.st_size)
+                    except Exception:
+                        if not tolerant:
+                            raise
+                        out.append(
+                            {
+                                "path": path,
+                                "size": st.st_size,
+                                "uuid": _segment_uuid(os.path.basename(path)),
+                                "min_off": None,
+                                "max_off": None,
+                                "max_ts_us": None,
+                                "num_rows": 0,
+                                "bad": True,
+                            }
+                        )
+                        continue
+                seen[key] = rec
+                out.append(dict(rec))
+            self._footer_cache = seen
+            return out
 
     def fsck(self, deep: bool = False) -> dict:
         """Log integrity audit — the fsck for a topic.  Cheap mode runs
@@ -2203,8 +2250,8 @@ class Topic:
 
     def close(self) -> None:
         """Mark the handle closed (ref closes its tail cursor,
-        src/topic.js:20-24; streaming subscriptions here own their
-        queries, so there is no cursor to tear down).  The durable log
+        src/topic.js:20-24; each subscription here owns its follower or
+        query, so there is no shared cursor to tear down).  The durable log
         is untouched — a later ``prepare_topic`` returns a FRESH handle
         over the same directory, mirroring the reference's
         recreate-when-closed memoization (src/connection.js:40-50)."""

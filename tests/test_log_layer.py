@@ -1353,6 +1353,63 @@ def test_footer_cache_concurrent_publishers_and_readers(engine, spark):
     assert stats(handles[0]) == stats(handles[1]) == fresh
 
 
+def test_footer_cache_one_handle_shared_by_threads(engine):
+    """Publishers and ``latest()`` readers on ONE handle share its
+    footer cache, as a publisher and ``subscribe()``'s followers do:
+    offsets stay contiguous, the tail never moves backwards and ends
+    right, and each segment's millisecond mtime (the floor
+    ``_publish_direct`` reads from the cache) still rises with its
+    offsets."""
+    import os
+    import sys
+    import threading
+
+    topic = engine.prepare_topic("fc_one_handle")
+    offsets, tails, errors = [], [[] for _ in range(3)], []
+    stop = threading.Event()
+
+    def publisher():
+        try:
+            for i in range(8):
+                offsets.append(int(topic.publish("e", {"i": i})["offset"]))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    def reader(seen):
+        try:
+            while not stop.is_set():
+                seen.append(topic.latest())
+        except Exception as exc:
+            errors.append(exc)
+
+    pubs = [threading.Thread(target=publisher) for _ in range(4)]
+    readers = [threading.Thread(target=reader, args=(t,)) for t in tails]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in readers + pubs:
+            t.start()
+        for t in pubs:
+            t.join(120)
+        stop.set()
+        for t in readers:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in pubs + readers)
+    assert errors == []
+    assert sorted(offsets) == list(range(1, 33))
+    for seen in tails:
+        assert seen and seen == sorted(seen) and seen[-1] <= 32
+    assert topic.latest() == 32
+    segs = sorted(
+        (s for s in topic._segment_stats() if s["num_rows"]),
+        key=lambda s: s["min_off"],
+    )
+    stamps = [os.stat(s["path"]).st_mtime_ns // 1_000_000 for s in segs]
+    assert all(a < b for a, b in zip(stamps, stamps[1:])), stamps
+
+
 def test_direct_publish_stamps_segments_in_offset_order(engine):
     """Spark's file source orders a subscriber's new files by
     modification time in whole milliseconds, ties in directory order.

@@ -358,17 +358,26 @@ def test_attach_to_long_log_delivers_within_two_batches(engine):
 
 def test_checkpoint_commits_write_no_checksum_sidecars(engine):
     """The engine session commits streaming checkpoints through the raw
-    local file system: after three triggers of a durable subscriber its
-    offset WAL and commit log hold no Hadoop ``.crc`` sidecars (each
-    sidecar cost a forked ``chmod``).  The checkpoint still resumes:
-    after a stop and two more publishes, a resubscribe delivers exactly
-    the two new offsets, in order, and acks the tail."""
+    local file system: after three triggers of a durable
+    ``subscribe_batches`` query its offset WAL and commit log hold no
+    Hadoop ``.crc`` sidecars (each sidecar cost a forked ``chmod``).
+    The checkpoint still resumes: after a stop and two more publishes,
+    a resubscribe delivers exactly the two new offsets, in order, and
+    acks the tail."""
     import os
     import time
 
+    from kafkaish_spark.streaming.subscribe import subscribe_batches
+
+    def collect(into):
+        def batch_fn(batch_df, batch_id):
+            into.extend(sorted(r["offset"] for r in batch_df.collect()))
+
+        return batch_fn
+
     topic = engine.prepare_topic("s_nocrc")
     got = []
-    sub = subscribe(topic, lambda e, m, o: got.append(o), name="w", available_now=False)
+    sub = subscribe_batches(topic, collect(got), name="w", available_now=False)
     try:
         for i in range(1, 4):
             off = int(topic.publish("ev", {"number": i})["offset"])
@@ -388,7 +397,7 @@ def test_checkpoint_commits_write_no_checksum_sidecars(engine):
 
     topic.publish_batch([("ev", {"number": 4}), ("ev", {"number": 5})])
     again = []
-    resumed = subscribe(topic, lambda e, m, o: again.append(o), name="w")
+    resumed = subscribe_batches(topic, collect(again), name="w")
     try:
         resumed.await_termination()
     finally:
@@ -471,13 +480,11 @@ def test_per_message_ack_granularity(engine):
 
 
 def test_live_delivery_crosses_source_log_compactions(engine):
-    """Live delivery reads each micro-batch's files from Spark's
-    file-source log in the checkpoint, where every tenth entry is a
-    ``.compact`` file holding all entries so far.  22 live batches of 1,
-    2 or 3 messages cross the compactions at log entries 9 and 19: each
-    offset is delivered exactly once, in order, and each batch's
-    ``numInputRows`` equals the rows delivered in it."""
-    import os
+    """22 live batches of 1, 2 or 3 messages (enough to cross the two
+    compactions of a Spark file-source log, every tenth entry, when
+    live delivery still read one): each offset is delivered exactly
+    once, in order, and each batch's ``numInputRows`` equals the rows
+    delivered in it."""
     import time
 
     topic = engine.prepare_topic("s_compact_log")
@@ -505,16 +512,15 @@ def test_live_delivery_crosses_source_log_compactions(engine):
 
     assert got == list(range(1, sum(sizes) + 1))
     assert [progress[b] for b in sorted(progress)] == sizes
-    source_log = os.listdir(os.path.join(sub.checkpoint, "sources", "0"))
-    assert {"9.compact", "19.compact"} <= set(source_log), source_log
     assert topic.last_ack("w") == sum(sizes)
 
 
 def test_dropped_row_fails_batch_without_ack(engine, monkeypatch):
-    """Delivery cross-checks the rows it read from the segment files
-    against Spark's own read of the micro-batch.  A segment reader that
-    drops a row makes the batch raise before its ack, so a resumed
-    durable subscriber gets the whole batch again."""
+    """Delivery checks that the rows it read from the segment files are
+    exactly the offsets after its cursor, before any callback.  A
+    segment reader that drops a row makes the batch raise with no
+    callback run and no ack, so a resumed durable subscriber gets the
+    whole batch again."""
     import importlib
 
     import pyarrow.compute as pc
@@ -532,10 +538,11 @@ def test_dropped_row_fails_batch_without_ack(engine, monkeypatch):
     monkeypatch.setattr(subscribe_mod, "read_segment", drop_offset_2)
     got = []
     sub = subscribe(topic, lambda e, m, o: got.append(o), name="w", replay=True)
-    with pytest.raises(Exception, match="differ from the 2 delivered"):
+    footers = r"2 offsets read do not match the segment footers \(3 in 1\.\.3\)"
+    with pytest.raises(Exception, match=footers):
         sub.await_termination()
     sub.unsubscribe()
-    assert got == [1, 3]
+    assert got == []
     assert topic.last_ack("w") is None
 
     monkeypatch.undo()
@@ -548,28 +555,34 @@ def test_dropped_row_fails_batch_without_ack(engine, monkeypatch):
 
 
 def test_ephemeral_unsubscribe_removes_checkpoint(engine):
-    """An ephemeral subscription's temp checkpoint is never resumed, so
-    unsubscribing removes it — for ``subscribe`` and
-    ``subscribe_batches`` alike; a durable checkpoint stays."""
+    """An ephemeral ``subscribe_batches`` query's temp checkpoint is
+    never resumed, so unsubscribing removes it; a durable one stays.
+    ``subscribe()`` keeps no on-disk state of its own: it leaves no
+    temp directory, ephemeral or durable."""
     import os
+    import tempfile
 
     from kafkaish_spark.streaming.subscribe import subscribe_batches
 
     topic = engine.prepare_topic("s_eph_cleanup")
     topic.publish("ev", {"number": 1})
-    subs = [
-        subscribe(topic, lambda e, m, o: None),
-        subscribe_batches(topic, lambda df, bid: None),
-        subscribe(topic, lambda e, m, o: None, name="keep"),
-    ]
-    for sub in subs:
+    eph_batches = subscribe_batches(topic, lambda df, bid: None)
+    durable_batches = subscribe_batches(topic, lambda df, bid: None, name="keep")
+    for sub in (eph_batches, durable_batches):
         sub.await_termination()
         assert os.path.isdir(sub.checkpoint)
         sub.unsubscribe()
-    eph_msg, eph_batches, durable = subs
-    assert not os.path.exists(eph_msg.checkpoint)
     assert not os.path.exists(eph_batches.checkpoint)
-    assert os.path.isdir(durable.checkpoint)
+    assert os.path.isdir(durable_batches.checkpoint)
+
+    before = set(os.listdir(tempfile.gettempdir()))
+    for name in (None, "keep_msg"):
+        sub = subscribe(topic, lambda e, m, o: None, name=name)
+        sub.await_termination()
+        sub.unsubscribe()
+        assert sub.checkpoint is None
+    new = set(os.listdir(tempfile.gettempdir())) - before
+    assert not [d for d in new if d.startswith("kafkaish_ephemeral_")], new
 
 
 def test_start_marker_survives_crash_mid_write(engine, monkeypatch):
@@ -630,14 +643,248 @@ def test_subscribe_partitioned_log_under_escaped_path(spark, tmp_path):
     assert topic.last_ack("w") == 3
 
 
-def test_lines_backwards_across_chunks(tmp_path):
-    """The compaction-file reader walks lines from the end in fixed
-    chunks; lines that straddle a chunk boundary come out whole."""
-    from kafkaish_spark.streaming.subscribe import _lines_backwards
+def _wait_for(pred, timeout=60.0):
+    import time
 
-    data = b"v1\n" + b"".join(b'{"batchId":%d}\n' % i for i in range(40))
-    path = tmp_path / "9.compact"
-    path.write_bytes(data)
-    with open(path, "rb") as fh:
-        got = list(_lines_backwards(fh, chunk=7))
-    assert got == list(reversed(data.split(b"\n")))
+    deadline = time.time() + timeout
+    while not pred() and time.time() < deadline:
+        time.sleep(0.01)
+    return pred()
+
+
+def test_cross_process_publisher_reaches_live_subscriber(engine):
+    """A publisher in another process cannot wake this process's
+    followers through its writer lock; the topic's watcher sees its
+    commits in the log listing.  Every message reaches a continuous
+    durable subscriber, in order, each within a few watcher polls."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    topic = engine.prepare_topic("s_xproc")
+    got, arrived = [], {}
+
+    def cb(ev, msg, off):
+        got.append(off)
+        arrived[off] = time.time()
+
+    sub = subscribe(topic, cb, name="x", available_now=False)
+    script = (
+        "import json, sys, time\n"
+        "from kafkaish_spark.sources.topic_log import Topic\n"
+        "t = Topic(None, sys.argv[1], sys.argv[2])\n"
+        "for i in range(8):\n"
+        "    time.sleep(0.2)\n"
+        "    off = int(t.publish('ev', {'number': i})['offset'])\n"
+        "    print(json.dumps([off, time.time()]), flush=True)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo}
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", script, engine.root, "s_xproc"],
+            env=env, capture_output=True, text=True, timeout=120, check=True,
+        ).stdout
+        published = dict(json.loads(line) for line in out.splitlines())
+        assert _wait_for(lambda: len(got) >= 8)
+    finally:
+        sub.unsubscribe()
+    assert got == list(range(1, 9)) == sorted(published)
+    waits = sorted(arrived[o] - published[o] for o in got)
+    # the median is a few 10 ms polls; the worst one allows for a
+    # loaded host, where the thread may be scheduled late
+    assert waits[len(waits) // 2] < 0.25, waits
+    assert waits[-1] < 2.0, waits
+    assert topic.last_ack("x") == 8
+
+
+def _stage_segment(topic, offsets, event="ev"):
+    """Write a one-segment envelope file for ``offsets`` hidden in the
+    log dir (as a writer does before its commit rename) and return
+    (hidden path, live path)."""
+    import datetime
+    import os
+    from uuid import uuid4
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+    tbl = pa.table(
+        {
+            "offset": pa.array(offsets, pa.int64()),
+            "ts": pa.array([now] * len(offsets), pa.timestamp("us", tz="UTC")),
+            "event": pa.array([event] * len(offsets), pa.string()),
+            "message": pa.array([f"m{o}" for o in offsets], pa.string()),
+        }
+    )
+    fn = f"part-00000-{uuid4().hex}.snappy.parquet"
+    hidden = os.path.join(topic.log_dir, "." + fn + ".inprogress")
+    pq.write_table(tbl, hidden)
+    return hidden, os.path.join(topic.log_dir, fn)
+
+
+def test_gap_waits_for_commit_in_flight_and_skips_a_hole(engine):
+    """Spark renames a job's files one by one, in any order.  With the
+    writer lock held, a gap after the cursor is a commit in flight:
+    the higher segment alone delivers nothing, and once the lower one
+    lands both arrive in order.  A gap left with no lock held is a
+    hole, skipped as the file source would."""
+    import os
+    import time
+
+    from kafkaish_spark.sources.topic_log import writer_lock
+
+    topic = engine.prepare_topic("s_gaps")
+    topic.publish("ev", "m1")
+    got = []
+    sub = subscribe(
+        topic, lambda e, m, o: got.append(o), name="g", available_now=False
+    )
+    try:
+        low = _stage_segment(topic, [2, 3])
+        high = _stage_segment(topic, [4])
+        with writer_lock(topic.root, what="test-commit"):
+            os.replace(*high)
+            time.sleep(0.3)  # ~30 watcher polls
+            assert got == []
+            os.replace(*low)
+            assert _wait_for(lambda: len(got) == 3)
+        assert got == [2, 3, 4]
+        assert _wait_for(lambda: topic.last_ack("g") == 4)
+
+        # offset 5 never lands: a hole, once the lock is seen free
+        os.replace(*_stage_segment(topic, [6]))
+        assert _wait_for(lambda: 6 in got)
+        assert int(topic.publish("ev", "m7")["offset"]) == 7
+        assert _wait_for(lambda: 7 in got)
+    finally:
+        sub.unsubscribe()
+    assert got == [2, 3, 4, 6, 7]
+    assert topic.last_ack("g") == 7
+
+
+def test_resume_below_retention_starts_from_what_remains(engine):
+    """Retention removed offsets a durable subscriber had not reached:
+    its cursor sits below the first surviving offset, and it resumes
+    from what remains (a gap with the writer lock free is a hole)."""
+    topic = engine.prepare_topic("s_retained")
+    for i in range(1, 4):
+        topic.publish("ev", {"number": i})
+    assert [o for _, _, o in _drain(topic, name="r", replay=True)] == [1, 2, 3]
+    for i in range(4, 8):
+        topic.publish("ev", {"number": i})
+    assert topic.truncate_before(6) > 0
+    assert [o for _, _, o in _drain(topic, name="r", replay=True)] == [6, 7]
+    assert topic.last_ack("r") == 7
+
+
+def test_compact_small_during_live_durable_subscription(engine):
+    """``compact_small`` merges one-message segments while a continuous
+    durable subscriber follows the topic.  The first compaction runs
+    while a callback holds the cursor at offset 10, so the follower
+    resumes inside the merged file; later ones race live delivery.
+    Every offset is delivered exactly once and in order, and a resumed
+    subscriber gets only what came after, no duplicates."""
+    import threading
+
+    topic = engine.prepare_topic("s_live_compact")
+    for i in range(40):
+        topic.publish("ev", {"number": i})
+    got, compacted = [], threading.Event()
+
+    def cb(ev, msg, off):
+        if off == 10:
+            compacted.wait(120)
+        got.append(off)
+
+    sub = subscribe(
+        topic, cb, name="c", replay=True, available_now=False,
+        max_files_per_trigger=1,
+    )
+    try:
+        assert _wait_for(lambda: len(got) == 9)
+        assert topic.compact_small() > 0
+        compacted.set()
+        for _round in range(2):
+            for i in range(10):
+                topic.publish("ev", {"number": i})
+            assert topic.compact_small() > 0
+        tail = topic.latest()
+        assert _wait_for(lambda: topic.last_ack("c") == tail)
+    finally:
+        compacted.set()
+        sub.unsubscribe()
+    assert got == list(range(1, tail + 1))
+    assert len([s for s in topic._segment_stats() if s["num_rows"]]) < 5
+
+    topic.publish_batch([("ev", {"number": 98}), ("ev", {"number": 99})])
+    again = []
+    resumed = subscribe(topic, lambda e, m, o: again.append(o), name="c")
+    resumed.await_termination()
+    resumed.unsubscribe()
+    assert again == [tail + 1, tail + 2]
+
+
+def test_segment_vanishing_mid_read_is_transient(engine, monkeypatch):
+    """A segment that a compaction swaps away between the listing and
+    the read is not an error: the follower plans the batch again and
+    delivers it once."""
+    import importlib
+
+    subscribe_mod = importlib.import_module("kafkaish_spark.streaming.subscribe")
+    read_segment = subscribe_mod.read_segment
+    calls = []
+
+    def vanish_once(*args, **kwargs):
+        calls.append(args[0])
+        if len(calls) == 1:
+            raise FileNotFoundError(args[0])
+        return read_segment(*args, **kwargs)
+
+    topic = engine.prepare_topic("s_vanish")
+    topic.publish_batch([("ev", {"number": i}) for i in range(1, 4)])
+    monkeypatch.setattr(subscribe_mod, "read_segment", vanish_once)
+    got = []
+    sub = subscribe(topic, lambda e, m, o: got.append(o), name="v", replay=True)
+    sub.await_termination(60)
+    sub.unsubscribe()
+    assert len(calls) == 2
+    assert got == [1, 2, 3]
+    assert topic.last_ack("v") == 3
+
+
+def test_subscribe_after_keyed_compaction_delivers_survivors(engine):
+    """``compact_keyed`` leaves a sparse log: the latest record per key,
+    offsets preserved.  A replaying subscriber gets exactly the
+    survivors in offset order, and live delivery continues after them."""
+    topic = engine.prepare_topic("s_keyed")
+    keys = ["a", "b", "a", "c", "a", "c", "d", "d", "e"]  # offsets 1..9
+    topic.publish_batch([(k, {"number": i}) for i, k in enumerate(keys, 1)])
+    assert topic.compact_keyed(target_files=2) == 4
+    survivors = sorted(r["offset"] for r in topic.log().collect())
+    assert survivors == [2, 5, 6, 8, 9]
+    got = _drain(topic, name="kc", replay=True)
+    assert [o for _, _, o in got] == survivors
+    topic.publish("k0", {"number": 10})
+    assert [o for _, _, o in _drain(topic, name="kc", replay=True)] == [10]
+    assert topic.last_ack("kc") == 10
+
+
+def test_one_active_durable_name_per_topic(engine):
+    """Two live followers with one durable name would race on its ack
+    file: the second subscribe raises while the first is active, and
+    succeeds once it is stopped."""
+    topic = engine.prepare_topic("s_dup_name")
+    first = subscribe(topic, lambda e, m, o: None, name="n", available_now=False)
+    try:
+        with pytest.raises(RuntimeError, match="already active"):
+            subscribe(topic, lambda e, m, o: None, name="n", available_now=False)
+        other = subscribe(topic, lambda e, m, o: None, name="m", available_now=False)
+        other.unsubscribe()
+    finally:
+        first.unsubscribe()
+    again = subscribe(topic, lambda e, m, o: None, name="n")
+    again.await_termination()
+    again.unsubscribe()
