@@ -7,10 +7,10 @@ subscribe / replay-then-live / ack / retention, see
 
 - Topic log  = partitioned Parquet append log (``sources.topic_log``)
 - Subscribe  = driver-side follower on a message-offset cursor
-  (``streaming.subscribe``); ``subscribe_batches`` = Structured
-  Streaming query
-- Ack        = per-subscriber JSON ack file (the follower's durable
-  position; a ``subscribe_batches`` query also commits its checkpoint)
+  (``streaming.subscribe``): per-message ``subscribe``, DataFrame
+  ``subscribe_batches`` and consumer-group members alike
+- Ack        = per-subscriber JSON ack file, every subscriber's only
+  durable position (no streaming checkpoint)
 - Processing = batch + streaming relational operators over DataFrames
   (``operators``), validated against a DuckDB oracle.
 """

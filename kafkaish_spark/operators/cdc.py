@@ -135,8 +135,9 @@ def stream_apply(
     to one arbitrary survivor on the next batch.
 
     Crash-safety comes from two directions meeting in the middle:
-    the streaming checkpoint redelivers an uncommitted batch on resume
-    (at-least-once), and ``apply_changes`` is IDEMPOTENT for a
+    the subscriber's ack file redelivers an unacked batch on resume
+    (at-least-once; ``batch_id`` is not used, ``offset`` is the dedup
+    key), and ``apply_changes`` is IDEMPOTENT for a
     re-applied batch (deletes of absent keys no-op; upserts converge
     to the same latest payload) — so replay-after-crash yields the
     same table, the classic at-least-once + idempotent-apply =
@@ -206,7 +207,7 @@ def read_materialized(spark: SparkSession, table_path: str, ddl: str) -> DataFra
 # batch the work is O(churned buckets), so a trickle of changes against
 # a huge table costs a trickle — the property that makes continuous
 # CDC viable at 100 TB.  Same crash contract as stream_apply
-# (checkpoint redelivery + idempotent apply + per-bucket .old swap).
+# (unacked-batch redelivery + idempotent apply + per-bucket .old swap).
 
 
 def _bucket_of(key_col, n_buckets: int):

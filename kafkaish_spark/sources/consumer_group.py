@@ -1,35 +1,41 @@
-"""Kafka-style consumer groups over sharded topic logs.
+"""Kafka-style consumer groups over sharded topic logs: the batch
+poll/commit API.
 
-The reference delivers each topic's messages to every named subscriber
-independently (one tailable cursor per subscriber, src/topic.js:90-117);
-it has no notion of a GROUP of cooperating consumers splitting a topic's
-partitions.  This module adds that Kafka analog on top of the
-shard-into-N-topics pattern (``Engine.union_topics``): shards play the
-role of Kafka partitions, a ``ConsumerGroup`` deterministically assigns
-shards to members (round-robin over the sorted shard list, exactly
-Kafka's range/round-robin assignor family), and committed offsets live
-per (group, shard) in the existing durable-ack store — so REBALANCING
-(changing the member count) never loses or redelivers acknowledged
-messages, because offsets belong to the group+shard, not the member.
+The reference delivers each topic to every named subscriber
+independently (src/topic.js:90-117); it has no GROUP of cooperating
+consumers splitting a topic.  Here shards (``base.N`` topics) play
+Kafka's partitions.  ``ConsumerGroup`` assigns them with the assignors
+of ``streaming.groups`` over the same ``shard_key`` order, and keeps
+the group's position per (group, shard) in the JSON ack file every
+subscriber uses (``Topic.ack``), so batch and streaming members of one
+group agree on ownership and position, and a rebalance never loses or
+redelivers acknowledged messages.
 
-Delivery is at-least-once within a snapshot window: ``poll`` bounds each
-shard read at the shard's tail observed at poll time and returns those
-bounds, and ``commit`` acknowledges exactly the bounds the caller hands
-back after processing — messages published mid-poll arrive next poll.
-
-Scale notes: poll builds ONE DataFrame (per-shard offset-range scans
-unioned with a ``topic`` column, predicates pushed to parquet row
-groups) — members can process their whole assignment as a single Spark
-job; the coordination metadata (assignments, acks) is driver-side JSON,
-never a Spark job.
+Delivery is at-least-once within a snapshot window: ``poll`` reads each
+shard after the group's position (``Topic.resume_offset``), bounded at
+the shard's tail observed at poll time, as ONE DataFrame (offset-range
+scans pushed to parquet row groups); ``commit`` acknowledges exactly
+the bounds the caller hands back — messages published mid-poll arrive
+next poll.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from kafkaish_spark.sources.topic_log import Engine
+from kafkaish_spark.sources.topic_log import ENVELOPE, Engine
+from kafkaish_spark.streaming.groups import (
+    assignment,
+    shard_key,
+    sticky_assignment_from,
+)
+
+# poll's frame: the envelope behind the shard it came from
+_POLL_SCHEMA = StructType([StructField("topic", StringType(), False), *ENVELOPE.fields])
 
 
 class ConsumerGroup:
@@ -48,7 +54,7 @@ class ConsumerGroup:
             raise ValueError("a consumer group needs at least one shard topic")
         self.engine = engine
         self.group = group
-        self.shards = sorted(shards)
+        self.shards = sorted(shards, key=shard_key)
         self.n_members = n_members
         # set by rebalance(sticky=True): the ACTUAL previous ownership
         # map (shard index -> old member) the sticky assignor minimizes
@@ -61,28 +67,20 @@ class ConsumerGroup:
 
     def assignment(self) -> dict[int, list[str]]:
         """member id -> shard names; deterministic, disjoint, complete
-        (round-robin over the sorted shard list, or the sticky map
-        after rebalance(sticky=True)).  Delegates to the ONE group
-        assignor family (streaming.groups) so batch and streaming
-        members of the same logical group can never disagree about
-        shard ownership."""
+        (modulo over the shard list, or the sticky map after
+        rebalance(sticky=True))."""
         return {m: self.assigned(m) for m in range(self.n_members)}
 
     def assigned(self, member_id: int) -> list[str]:
-        from kafkaish_spark.streaming.groups import (
-            assignment as _assign,
-            sticky_assignment_from as _sticky_from,
-        )
-
         if not 0 <= member_id < self.n_members:
             raise ValueError(
                 f"member_id {member_id} out of range for group of {self.n_members}"
             )
         if self._prev_owner is not None:
-            return _sticky_from(
+            return sticky_assignment_from(
                 self.shards, member_id, self._prev_owner, self.n_members
             )
-        return _assign(self.shards, member_id, self.n_members)
+        return assignment(self.shards, member_id, self.n_members)
 
     def _owner_map(self) -> list[int]:
         """shard index -> owning member under THIS view's assignment
@@ -102,31 +100,26 @@ class ConsumerGroup:
         The frame carries a ``topic`` column (which shard each row came
         from) and is bounded at each shard's tail AS OF this call, so
         processing + commit covers a well-defined window even while
-        producers keep publishing.
+        producers keep publishing.  Each shard is read after the
+        group's position, ``Topic.resume_offset(group)``, the one a
+        streaming member resumes from; poll writes no start marker.
         """
         frames = []
         bounds: dict[str, int] = {}
         for name in self.assigned(member_id):
             topic = self.engine.prepare_topic(name)
-            since = topic.last_ack(self.group) or 0
+            since = topic.resume_offset(self.group)
             upto = topic.latest()
             bounds[name] = upto
-            if upto <= since:
-                continue
-            frames.append(
-                topic.replay(since=since)
-                .filter(F.col("offset") <= F.lit(upto))
-                .select(F.lit(name).alias("topic"), "offset", "ts", "event", "message")
-            )
+            if upto > since:
+                frames.append(
+                    topic.replay(since=since, until=upto).select(
+                        F.lit(name).alias("topic"), "offset", "ts", "event", "message"
+                    )
+                )
         if not frames:
-            return (
-                self.engine.union_topics([self.assigned(member_id)[0]]).limit(0),
-                bounds,
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out, bounds
+            return self.engine.spark.createDataFrame([], _POLL_SCHEMA), bounds
+        return functools.reduce(DataFrame.unionByName, frames), bounds
 
     def commit(self, member_id: int, bounds: dict[str, int]) -> None:
         """Acknowledge a processed poll window: advance the group's
@@ -143,31 +136,26 @@ class ConsumerGroup:
     # -- rebalancing ---------------------------------------------------
 
     def rebalance(self, n_members: int, sticky: bool = False) -> "ConsumerGroup":
-        """New group view with a different member count.  Offsets are
+        """New group view with a different member count; offsets are
         keyed (group, shard), so the new members resume exactly where
-        the group left off on every shard.
-
-        ``sticky=True`` returns a view whose assignment keeps shards
-        with their previous owners wherever balance allows (the Kafka
-        CooperativeStickyAssignor analog, streaming.groups
-        .sticky_assignment_from) — fewest revocations, warm members
-        keep their working sets.  The previous ownership handed to the
-        assignor is this view's ACTUAL owner map, so chained sticky
-        resizes (sticky on top of sticky) stay movement-minimal
-        against who really owned each shard, not against the stale
-        modulo topology.  Default stays the stateless modulo map."""
+        the group left off.  ``sticky=True`` keeps shards with their
+        current owners wherever balance allows
+        (``sticky_assignment_from`` against this view's actual owner
+        map, so chained resizes stay movement-minimal); the default is
+        the stateless modulo map."""
         g = ConsumerGroup(self.engine, self.group, self.shards, n_members)
         if sticky:
             g._prev_owner = self._owner_map()
         return g
 
     def lag(self) -> DataFrame:
-        """Per-shard lag of this group vs each shard's tail."""
+        """Per-shard lag of this group's position (the offset ``poll``
+        reads after) vs each shard's tail."""
         rows = []
         for name in self.shards:
             topic = self.engine.prepare_topic(name)
-            acked = topic.last_ack(self.group) or 0
-            rows.append((name, acked, topic.latest() - acked))
+            at = topic.resume_offset(self.group)
+            rows.append((name, at, topic.latest() - at))
         return self.engine.spark.createDataFrame(
             rows, "topic string, last_offset long, lag long"
         )

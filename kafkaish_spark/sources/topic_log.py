@@ -1033,20 +1033,27 @@ class Topic:
     def _ack_path(self, name: str) -> str:
         return os.path.join(self.sub_dir, f"{name}.ack.json")
 
+    def _start_path(self, name: str) -> str:
+        """The start marker of durable subscriber ``name``: the offset
+        its first subscribe started after (``{"start_offset": N}``)."""
+        return os.path.join(self.sub_dir, f"{name}.start.json")
+
     def ack(self, name: str, offset: int) -> None:
         """Advance a durable subscriber's offset, monotonically (ref:
-        upsert of {name, last}, src/topic.js:202-220).  For
-        ``subscribe()`` this file IS the durable position: a follower
-        resumes after ``max(start marker, last_ack(name))``.  A
-        ``subscribe_batches`` query resumes from its checkpoint and
-        keeps this file as the queryable twin.
+        upsert of {name, last}, src/topic.js:202-220).  This file IS
+        the durable position of every subscription API —
+        ``subscribe``, ``subscribe_batches``, consumer-group members
+        (name = the group) and ``ConsumerGroup.commit``: each resumes
+        after ``resume_offset(name)``.  A follower acks each batch's
+        planned end offset, so a batch the ``event`` filter emptied
+        still moves it.
 
         One JSON file per subscriber, written tmp+rename: concurrent
         subscribers never touch each other's state (the old shared
         parquet table was a read-modify-write race), a reader never
         sees a half-written file, and the per-name write is sequential
-        by construction (one active follower or query per subscriber
-        name)."""
+        by construction (one active follower per subscriber name and
+        topic in a process)."""
         prev = self.last_ack(name) or 0
         path = self._ack_path(name)
         tmp = f"{path}.tmp"
@@ -1063,6 +1070,19 @@ class Topic:
             return None
         with open(path) as fh:
             return int(json.load(fh)["last_offset"])
+
+    def resume_offset(self, name: str) -> int:
+        """Where durable subscriber ``name`` resumes: after
+        ``max(start marker, last_ack(name))``, 0 when it has neither —
+        the one position rule of the followers and of
+        ``ConsumerGroup.poll``.  Read-only: the marker is written by
+        the first streaming subscribe of the name."""
+        start = 0
+        marker = self._start_path(name)
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                start = int(json.load(fh)["start_offset"])
+        return max(start, self.last_ack(name) or 0)
 
     def subscribers(self) -> DataFrame:
         """All durable subscribers as a DataFrame (driver-side listing —
@@ -2075,37 +2095,40 @@ class Topic:
 
     # -- streaming handles --------------------------------------------
 
+    def _schema(self) -> StructType:
+        """The envelope, plus ``pub_date`` on a partitioned topic."""
+        if not self.partitioned:
+            return ENVELOPE
+        return StructType(ENVELOPE.fields + [StructField("pub_date", DateType(), True)])
+
+    def read_segments(self, paths: list[str]) -> DataFrame:
+        """The given segment files as a lazy batch DataFrame with
+        ``stream()``'s columns (``pub_date`` comes from the paths under
+        the log directory on a partitioned topic)."""
+        return (
+            self.spark.read.schema(self._schema())
+            .option("basePath", self.log_dir)
+            .parquet(*paths)
+        )
+
     def stream(
         self,
         event: str | None = None,
         max_files_per_trigger: int | None = None,
-        max_bytes_per_trigger: int | None = None,
     ) -> DataFrame:
         """Streaming view of the log (the tailable cursor,
         src/topic.js:53-61 — but checkpointable and gap-free).
 
-        ``max_files_per_trigger`` and ``max_bytes_per_trigger`` are the
-        backpressure knobs (≙ the reference's one-doc-at-a-time
-        trampoline, src/topic.js:79-87) — file-SOURCE read options, so
-        they must be set here, not on the sink writer.  Either bounds
-        each micro-batch even under ``trigger(availableNow=True)`` (the
-        backlog drains in capped chunks).  The byte bound admits files
-        while their total size stays within it, and always at least
-        one file, so a segment larger than the bound is a batch of its
-        own.  Spark accepts only one of the two per source."""
-        if max_files_per_trigger is not None and max_bytes_per_trigger is not None:
-            raise ValueError(
-                "set max_files_per_trigger or max_bytes_per_trigger, not both"
-            )
+        ``max_files_per_trigger`` is the backpressure knob (≙ the
+        reference's one-doc-at-a-time trampoline, src/topic.js:79-87) —
+        a file-SOURCE read option, so it must be set here, not on the
+        sink writer.  It bounds each micro-batch even under
+        ``trigger(availableNow=True)`` (the backlog drains in capped
+        chunks)."""
         reader = self.spark.readStream
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        if max_bytes_per_trigger is not None:
-            reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-        schema = ENVELOPE
-        if self.partitioned:
-            schema = StructType(ENVELOPE.fields + [StructField("pub_date", DateType(), True)])
-        df = reader.schema(schema).parquet(self.log_dir)
+        df = reader.schema(self._schema()).parquet(self.log_dir)
         if event is not None:
             df = df.filter(F.col("event") == F.lit(event))
         return df

@@ -5,9 +5,11 @@ fires or it doesn't.  Kafka exposes consumer metrics (records-consumed
 rate, lag, commit counts); the Spark-native equivalent is the
 StreamingQueryListener event stream, which this module aggregates into
 a per-query metrics table: batches, rows, rows/sec, last batch
-duration.  ``subscribe()``'s followers are not streaming queries; they
-report each batch to the attached monitors directly (``report_batch``),
-keyed by their ``Subscription.query.id`` as a query is.  Listener
+duration.  The subscription followers (``subscribe``,
+``subscribe_batches``, consumer-group members) are not streaming
+queries; they report each batch to the attached monitors directly
+(``report_batch``), keyed by their ``Subscription.query.id`` as a query
+is.  Listener
 callbacks run on the driver's listener bus — they must never touch
 DataFrames or block; this one only appends small dicts, safe at any
 scale.  Pair with ``Topic.subscriber_lag()`` (the
@@ -23,7 +25,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 # Monitors attached in this process, with their session: deliveries
-# that are not streaming queries (``subscribe()``'s followers) report
+# that are not streaming queries (the subscription followers) report
 # each batch through ``report_batch`` instead of the listener bus.
 _ATTACHED: list[tuple[SparkSession, "DeliveryMonitor"]] = []
 _ATTACHED_LOCK = threading.Lock()

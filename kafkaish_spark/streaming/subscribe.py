@@ -1,68 +1,64 @@
-"""Pub/sub subscriptions: per-message followers and DataFrame queries.
+"""Pub/sub subscriptions: followers on a message-offset cursor.
 
 Re-expresses the subscription machinery of the reference, kafkaish
-(src/topic.js).  Per-message delivery (``subscribe``)
-is a driver-side FOLLOWER whose cursor is a message offset — the
-reference's tailable cursor (src/topic.js:48-61) without a Spark job
-between a commit and its callbacks:
+(src/topic.js).  Every subscription — per-message ``subscribe``,
+DataFrame ``subscribe_batches`` and each shard of a consumer-group
+member (``streaming.groups``) — is a driver-side FOLLOWER whose cursor
+is a message offset: the reference's tailable cursor (src/topic.js:48-61)
+with no Spark streaming query or checkpoint behind it:
 
 - ephemeral subscribe (join, :90-117)      -> a follower from the tail
-  at subscribe time; it keeps no state, so nothing outlives it
-- durable subscribe   (:92-100)            -> a follower resuming from
-  ``max(start marker, last_ack(name))``
+  at subscribe time; it keeps no state
+- durable subscribe   (:92-100)            -> a follower resuming after
+  ``Topic.resume_offset(name)`` = ``max(start marker, last_ack(name))``
 - replay-then-live    (replay, :118-201)   -> the SAME follower: its
-  first batches drain the backlog, later ones are incremental.  One
-  cursor, no handoff seam, so the replay->live gap race of the
-  reference (src/topic.js:49-51 + :169) cannot happen.
-- ack                 (:202-220)           -> ``Topic.ack`` after each
-  batch's callbacks: the JSON ack file (``_subscribers/<name>.ack.json``,
-  tmp + rename) IS the durable position — the ``{name, last}`` upsert
+  first batches drain the backlog, later ones are incremental — one
+  cursor, so the reference's replay->live gap race
+  (src/topic.js:49-51 + :169) cannot happen
+- ack                 (:202-220)           -> ``Topic.ack`` of the
+  batch's planned end offset after delivery: the JSON ack file IS the
+  durable position — the ``{name, last}`` upsert — for every API
 - unsubscribe         (:110-116)           -> stop the follower
-- one-doc trampoline backpressure (:79-87) -> a byte bound on each
-  batch (``DEFAULT_CALLBACK_MAX_BYTES``; a file bound on request) —
-  batch-sized instead of doc-sized.  A new subscriber's first batch
-  starts at its cursor, so it never sweeps the log before it.
+- one-doc trampoline backpressure (:79-87) -> a bound on each batch
+  (``subscribe``: ``DEFAULT_CALLBACK_MAX_BYTES``; a file bound on
+  request); a new subscriber's first batch starts at its cursor
 - tail wake-up + EventEmitter fan-out (:48-61, 73-74, 108) -> one
-  ``TailSignal`` per topic per process: ``writer_lock``'s release bumps
-  it for commits made in this process, and one watcher thread per
-  topic polls the log listing every ``_WATCH_POLL_S`` for commits from
-  other processes.  Idle followers sleep on the signal, so idle cost
-  grows with topics, not subscribers.
+  ``TailSignal`` per topic per process, bumped by ``writer_lock``'s
+  release (commits in this process) and by one watcher thread per
+  topic polling the log listing every ``_WATCH_POLL_S`` (other
+  processes).  Idle cost grows with topics, not subscribers.
 
 A batch is the contiguous run of segments after the cursor, planned
-from the footer records (``Topic._segment_stats``) and read with
-``topic_log.read_segment``.  Before any callback its offsets must be
-the ones the footers promise — exactly ``cursor+1 .. end`` on dense
-segments (a sparse one, left by ``compact_keyed`` or ``redact``, must
-match its row count): a segment reader that dropped or repeated a row
-fails the batch unacked, so a durable subscriber gets it again on
-resume.  Then the ``event`` filter applies and the callbacks run in
-offset order.  A gap after the cursor while ``_writer.lock`` is held
-is a commit in flight (Spark renames a job's files one by one, in any
-order): the follower waits for it.  A gap still there after the lock
-is free is a hole (an aborted write, retention below the cursor): the
-follower skips it, as Spark's file source would.  A segment that
-vanishes between the listing and the read (compaction swapping files)
-is transient: the batch is planned again.
+from the footer records (``Topic._segment_stats``).  A gap after the
+cursor while ``_writer.lock`` is held is a commit in flight (Spark
+renames a job's files one by one): the follower waits for it.  A gap
+still there after the lock is free is a hole (an aborted write,
+retention below the cursor): the follower skips it, as Spark's file
+source would.  A segment that vanishes before its batch is delivered
+(compaction swapping files) is transient: the batch is planned again.
 
-``subscribe_batches`` (DataFrame delivery) stays a Structured
-Streaming query, like the consumer groups, pipelines and CDC: its
-consumer logic runs as Spark jobs over each micro-batch, and its
-position is the query checkpoint.
+Only the batch read differs.  ``subscribe`` reads the segments with
+``topic_log.read_segment`` into Arrow columns whose offsets must be the
+ones the footers promise — exactly ``cursor+1 .. end`` on dense
+segments, the row count of a sparse one (``compact_keyed``,
+``redact``) — before any callback; a mismatch fails the batch unacked.
+Then the ``event`` filter applies and the callbacks run in offset
+order.  ``subscribe_batches`` and group members hand ``batch_fn`` a
+lazy DataFrame over the planned segment files, each offset once.
 
-Delivery contract preserved: per-subscriber total order by offset,
-at-least-once for durable names (an unacked batch is redelivered on
-resume), at-most-once-from-now for ephemeral subscribers.
+Delivery contract: per-subscriber total order by offset, at-least-once
+for durable names (an unacked batch is redelivered on resume),
+at-most-once-from-now for ephemeral subscribers.
 """
 
 from __future__ import annotations
 
 import collections
 import datetime
+import functools
+import itertools
 import json
 import os
-import shutil
-import tempfile
 import threading
 import time
 from typing import Callable
@@ -83,19 +79,17 @@ from kafkaish_spark.streaming.monitor import report_batch
 class Subscription:
     """Handle over a running subscription (ref: the object returned by
     join/replay with an ``unsubscribe`` member, src/topic.js:110-116):
-    a ``subscribe()`` follower or a streaming query.  An ephemeral
-    streaming query (``name is None``) owns its temp checkpoint, which
-    nothing resumes: unsubscribe removes it.  A follower has none."""
+    a follower, a group member's followers, or a ``pipe()`` streaming
+    query.  Only a pipe has a ``checkpoint`` (always named, under its
+    sink); a follower's position is its JSON ack file."""
 
-    def __init__(self, query, name: str | None, checkpoint: str | None):
+    def __init__(self, query, name: str | None, checkpoint: str | None = None):
         self.query = query
         self.name = name
         self.checkpoint = checkpoint
 
     def unsubscribe(self) -> None:
         self.query.stop()
-        if self.name is None and self.checkpoint is not None:
-            shutil.rmtree(self.checkpoint, ignore_errors=True)
 
     stop = unsubscribe
 
@@ -115,39 +109,37 @@ class Subscription:
 def _start_offset_for(
     topic: Topic, name: str | None, replay: bool | int | None
 ) -> int:
-    """Where this subscription starts, mirroring the reference's three
-    modes: ephemeral = from now (src/topic.js:104-106); durable new name
-    with replay = from the beginning (src/topic.js:133-136); durable
-    without replay = from now, remembered across restarts.  ``replay``
-    may also be an INT: start after that offset (exclusive) — the Kafka
-    consumer ``seek`` analog, composing with ``offset_for_time`` for
-    time-based subscription starts (a mode the reference lacks).
-    ``replay=None`` == ``replay=False`` (tail start): it is what
-    ``offset_for_time`` yields when no message is that recent, so the
-    composed call needs no None guard."""
-    if replay is None:
-        replay = False
+    """The offset this subscription's cursor starts at, mirroring the
+    reference's three modes: ephemeral = from now (src/topic.js:104-106);
+    durable new name with replay = from the beginning
+    (src/topic.js:133-136); durable without replay = from now,
+    remembered across restarts in the name's start marker.  A durable
+    name then resumes after ``Topic.resume_offset(name)`` = ``max(start
+    marker, last_ack)``.  ``replay`` may also be an INT: start after
+    that offset (exclusive) — the Kafka consumer ``seek`` analog,
+    composing with ``offset_for_time`` for time-based subscription
+    starts (a mode the reference lacks).  ``replay=None`` ==
+    ``replay=False`` (tail start): it is what ``offset_for_time`` yields
+    when no message is that recent, so the composed call needs no None
+    guard."""
+    seek = None
+    if isinstance(replay, int) and not isinstance(replay, bool):
+        seek = int(replay)
     if name is None:
         # ephemeral: misses pre-subscribe messages; an int replay still
         # applies (seek on a throwaway consumer)
-        return int(replay) if isinstance(replay, int) and not isinstance(
-            replay, bool
-        ) else topic.latest()
-    marker = os.path.join(topic.sub_dir, f"{name}.start.json")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            return int(json.load(fh)["start_offset"])
-    if isinstance(replay, bool):
-        start = 0 if replay else topic.latest()
-    else:
-        start = int(replay)
-    # tmp + rename, as Topic.ack: a crash mid-write must not leave a
-    # truncated marker that every later subscribe of this name trips on
-    tmp = f"{marker}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"start_offset": start}, fh)
-    os.replace(tmp, marker)
-    return start
+        return topic.latest() if seek is None else seek
+    marker = topic._start_path(name)
+    if not os.path.exists(marker):
+        if seek is None:
+            seek = 0 if replay else topic.latest()
+        # tmp + rename, as Topic.ack: a crash mid-write must not leave a
+        # truncated marker that every later subscribe of this name trips on
+        tmp = f"{marker}.tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"start_offset": seek}, fh)
+        os.replace(tmp, marker)
+    return topic.resume_offset(name)
 
 
 
@@ -266,11 +258,12 @@ def _plan(
     until: int | None,
     max_bytes: int | None,
     max_files: int | None,
-) -> tuple[list[tuple[str, int, int, int | None]], int | None]:
+) -> tuple[list[tuple[str, int, int, int | None, bool]], int | None]:
     """The next batch after offset ``pos``: ``(reads, gap)``.  ``reads``
-    are ``(path, after, upto, rows)`` segment reads covering
+    are ``(path, after, upto, rows, whole)`` segment reads covering
     ``pos+1 .. end`` without overlap, bounded by ``max_bytes`` /
     ``max_files`` (always at least one segment) and by ``until``.
+    ``whole`` says every offset of the file lies in ``(after, upto]``.
     ``rows`` is what the footer promises in ``(after, upto]``: the whole
     range for a dense segment, the row count for a sparse one
     (``compact_keyed``, ``redact``) read whole, None for a sparse one
@@ -302,57 +295,56 @@ def _plan(
             or (max_bytes is not None and size + rec["size"] > max_bytes)
         ):
             break
+        whole = end < lo and hi == top
         if rec["num_rows"] == top - lo + 1:
             rows = hi - max(end, lo - 1)
         else:
-            rows = rec["num_rows"] if end < lo and hi == top else None
-        reads.append((rec["path"], end, hi, rows))
+            rows = rec["num_rows"] if whole else None
+        reads.append((rec["path"], end, hi, rows, whole))
         size += rec["size"]
         end = hi
     return reads, None
 
 
-class _Follower:
-    """The delivery loop of one ``subscribe()``: a daemon thread that
-    plans, reads and delivers batches after its offset cursor, behind
-    the StreamingQuery surface ``Subscription.query`` exposes — ``id``,
-    ``isActive``, ``stop()``, ``exception()``,
-    ``awaitTermination(timeout)``, ``processAllAvailable()`` and
-    ``recentProgress`` / ``lastProgress`` (one dict per batch that
-    ran).  A callback error ends the follower; ``awaitTermination``
-    and ``processAllAvailable`` re-raise it."""
+class _Vanished(Exception):
+    """A segment planned for a batch vanished (a compaction swapped it)
+    before the batch was delivered: the batch is planned again."""
 
-    def __init__(
-        self,
-        topic: Topic,
-        deliver: Callable,
-        name: str | None,
-        pos: int,
-        until: int | None,
-        max_bytes: int | None,
-        max_files: int | None,
-    ):
+
+class _Query:
+    """The StreamingQuery surface of ``Subscription.query`` over a
+    subscription's followers (one per topic, or per owned shard of a
+    group member): ``isActive`` while any runs, ``awaitTermination``
+    waits for all and re-raises the first error, and the progress dicts
+    (``batchId`` numbering the subscription's batches from 0) come from
+    all of them.  The first follower error halts the others."""
+
+    def __init__(self):
         self.id = str(uuid4())
-        self._topic, self._deliver, self._name = topic, deliver, name
-        self._pos, self._until = pos, until
-        self._max_bytes, self._max_files = max_bytes, max_files
+        self.followers: list[_Follower] = []
         self._progress = collections.deque(maxlen=_RECENT_PROGRESS)
-        self._batches = 0
+        self._batch_ids = itertools.count()
         self._exc: Exception | None = None
-        self._stopping = False
-        self._moved = threading.Condition()  # the cursor moved, or done
-        self._done = threading.Event()
-        self._tail = _join_tail(topic, name)
-        self._thread = threading.Thread(
-            target=self._run, name=f"kafkaish-follow-{topic.name}", daemon=True
-        )
-        self._thread.start()
+        self._lock = threading.Lock()  # followers and the first error
 
-    # -- StreamingQuery surface ----------------------------------------
+    def _add(self, follower: "_Follower") -> None:
+        with self._lock:
+            self.followers.append(follower)
+            failed = self._exc is not None
+        if failed:
+            follower.halt()  # a sibling failed while this one started
+
+    def _failed(self, exc: Exception) -> None:
+        with self._lock:
+            if self._exc is None:
+                self._exc = exc
+            followers = list(self.followers)
+        for f in followers:
+            f.halt()
 
     @property
     def isActive(self) -> bool:
-        return not self._done.is_set()
+        return any(not f.done.is_set() for f in self.followers)
 
     @property
     def recentProgress(self) -> list[dict]:
@@ -360,38 +352,86 @@ class _Follower:
 
     @property
     def lastProgress(self) -> dict | None:
-        progress = self._progress
-        return progress[-1] if progress else None
+        return self._progress[-1] if self._progress else None
 
     def exception(self) -> Exception | None:
         return self._exc
 
     def stop(self) -> None:
-        self._stopping = True
-        with self._tail.signal.cond:
-            self._tail.signal.cond.notify_all()
-        if threading.current_thread() is not self._thread:
-            self._thread.join()
+        for f in self.followers:
+            f.halt()
+        for f in self.followers:
+            f.join()
 
     def awaitTermination(self, timeout: float | None = None):
-        done = self._done.wait(timeout)
+        deadline = None if timeout is None else time.monotonic() + timeout
+        done = True
+        for f in self.followers:
+            left = None if deadline is None else max(0.0, deadline - time.monotonic())
+            done = f.done.wait(left) and done
         if self._exc is not None:
             raise self._exc
         return done if timeout is not None else None
 
     def processAllAvailable(self) -> None:
-        """Block until every message committed when called is past the
-        cursor (delivered, filtered out or skipped as a hole), or the
-        follower ended."""
-        target = self._topic.latest()
-        with self._moved:
-            self._moved.wait_for(
-                lambda: self._pos >= target or self._done.is_set()
-            )
+        """Block until every message committed when called is past each
+        follower's cursor (delivered, filtered out or skipped as a
+        hole), or the followers ended."""
+        for f in self.followers:
+            f.catch_up()
         if self._exc is not None:
             raise self._exc
 
-    # -- the loop ------------------------------------------------------
+
+class _Follower:
+    """One topic's delivery loop: a daemon thread that plans batches
+    after its offset cursor, hands each to ``deliver``, then acks the
+    batch's planned end offset (durable names) and moves the cursor.
+    ``deliver(reads, batch_id)`` is the per-mode part: it reads and
+    delivers the ``_plan`` reads and returns the row count, or raises
+    ``_Vanished`` to have the batch planned again.  Any other error
+    ends the follower, unacked, and fails its query."""
+
+    def __init__(
+        self,
+        query: _Query,
+        topic: Topic,
+        deliver: Callable,
+        name: str | None,
+        replay: bool | int | None,
+        available_now: bool,
+        max_bytes: int | None,
+        max_files: int | None,
+    ):
+        self._query, self._topic, self._deliver = query, topic, deliver
+        self._name = name
+        self._pos = _start_offset_for(topic, name, replay)
+        self._until = topic.latest() if available_now else None
+        self._max_bytes, self._max_files = max_bytes, max_files
+        self._stopping = False
+        self._moved = threading.Condition()  # the cursor moved, or done
+        self.done = threading.Event()
+        self._tail = _join_tail(topic, name)
+        self._thread = threading.Thread(
+            target=self._run, name=f"kafkaish-follow-{topic.name}", daemon=True
+        )
+        query._add(self)
+        self._thread.start()
+
+    def halt(self) -> None:
+        """End the loop after its current batch, without waiting."""
+        self._stopping = True
+        with self._tail.signal.cond:
+            self._tail.signal.cond.notify_all()
+
+    def join(self) -> None:
+        if threading.current_thread() is not self._thread:
+            self._thread.join()
+
+    def catch_up(self) -> None:
+        target = self._topic.latest()
+        with self._moved:
+            self._moved.wait_for(lambda: self._pos >= target or self.done.is_set())
 
     def _run(self) -> None:
         sig = self._tail.signal
@@ -402,26 +442,15 @@ class _Follower:
                     return  # available_now: drained to the subscribe-time tail
                 with sig.cond:
                     generation = sig.generation
-                t0 = time.perf_counter()
                 try:
-                    reads, gap = _plan(
-                        self._topic._segment_stats(),
-                        self._pos,
-                        self._until,
-                        self._max_bytes,
-                        self._max_files,
-                    )
-                    t1 = time.perf_counter()
-                    batch = self._read(reads) if reads else None
-                except FileNotFoundError:
+                    ran, gap = self._step()
+                except _Vanished:
                     # a segment or directory vanished mid-swap: plan again
                     self._wait(sig, generation, _WATCH_POLL_S)
                     continue
-                if batch is not None:
+                if ran:
                     hole = None
-                    self._deliver_batch(batch, reads[-1][2], t0, t1)
-                    continue
-                if gap is None:
+                elif gap is None:
                     self._wait(sig, generation)
                 elif os.path.exists(self._tail.lock_path):
                     hole = None  # a commit in flight: its release wakes us
@@ -437,10 +466,10 @@ class _Follower:
                     hole = (self._pos, gap)
                     self._wait(sig, generation, _WATCH_POLL_S)
         except Exception as exc:  # surfaced by awaitTermination
-            self._exc = exc
+            self._query._failed(exc)
         finally:
             _leave_tail(self._tail, self._name)
-            self._done.set()
+            self.done.set()
             with self._moved:
                 self._moved.notify_all()
 
@@ -455,47 +484,26 @@ class _Follower:
             self._pos = pos
             self._moved.notify_all()
 
-    def _read(self, reads: list[tuple[str, int, int, int | None]]):
-        """The batch's rows as offset-sorted (offsets, events,
-        messages) Arrow columns, checked against the footers: on dense
-        segments exactly the cursor's next offsets up to the batch
-        end."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        pos, end = self._pos, reads[-1][2]
-        tables = [read_segment(path, after, upto) for path, after, upto, _ in reads]
-
-        def column(name, typ):
-            return pa.chunked_array(
-                [c for t in tables for c in t[name].chunks], typ
+    def _step(self) -> tuple[bool, int | None]:
+        """Plan the next batch and deliver it: ``(ran, gap)``, with
+        ``_plan``'s gap when no batch ran."""
+        t0 = time.perf_counter()
+        try:
+            reads, gap = _plan(
+                self._topic._segment_stats(),
+                self._pos,
+                self._until,
+                self._max_bytes,
+                self._max_files,
             )
-
-        offsets = column("offset", pa.int64())
-        order = pc.sort_indices(offsets)
-        offsets = offsets.take(order)
-        # contiguity replaces an accounting action: before any callback,
-        # the rows read must be the ones the footers promise — distinct,
-        # and as many as promised (read_segment already bounds them to
-        # the batch range), so on dense segments exactly pos+1..end
-        promised = [r[3] for r in reads]
-        want = None if None in promised else sum(promised)
-        got = offsets.to_numpy()
-        if (want is not None and len(got) != want) or (np.diff(got) <= 0).any():
-            raise RuntimeError(
-                f"batch {self._batches}: the {len(got)} offsets read do "
-                f"not match the segment footers ({want} in "
-                f"{pos + 1}..{end}); the batch is not acked and is "
-                "redelivered on resume"
-            )
-        events = column("event", pa.string()).take(order)
-        messages = column("message", pa.string()).take(order)
-        return offsets, events, messages
-
-    def _deliver_batch(self, batch, end: int, t0, t1) -> None:
-        offsets, events, messages = batch
-        self._deliver(offsets, events, messages)
+        except FileNotFoundError as exc:
+            raise _Vanished from exc
+        if not reads:
+            return False, gap
+        end = reads[-1][2]
+        batch_id = next(self._query._batch_ids)
+        t1 = time.perf_counter()
+        rows = self._deliver(reads, batch_id)
         t2 = time.perf_counter()
         if self._name is not None:
             self._topic.ack(self._name, end)
@@ -506,22 +514,105 @@ class _Follower:
             return round(1e3 * (b - a))
 
         progress = {
-            "id": self.id,
-            "batchId": self._batches,
-            "numInputRows": len(offsets),
+            "id": self._query.id,
+            "batchId": batch_id,
+            "numInputRows": rows,
             "timestamp": datetime.datetime.now(datetime.timezone.utc)
             .isoformat(timespec="milliseconds")
             .replace("+00:00", "Z"),
             "durationMs": {
                 "latestOffset": ms(t0, t1),  # listing + plan
-                "addBatch": ms(t1, t2),  # read + callbacks
+                "addBatch": ms(t1, t2),  # read + delivery
                 "commitOffsets": ms(t2, t3),
                 "triggerExecution": ms(t0, t3),
             },
         }
-        self._batches += 1
-        self._progress.append(progress)
+        self._query._progress.append(progress)
         report_batch(self._topic.spark, progress)
+        return True, None
+
+
+def _read_columns(reads: list[tuple], batch_id: int):
+    """The batch's rows as offset-sorted (offsets, events, messages)
+    Arrow columns, checked against the footers: on dense segments
+    exactly the cursor's next offsets up to the batch end."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    pos, end = reads[0][1], reads[-1][2]
+    try:
+        tables = [read_segment(path, after, upto) for path, after, upto, _, _ in reads]
+    except FileNotFoundError as exc:
+        raise _Vanished from exc
+
+    def column(name, typ):
+        return pa.chunked_array(
+            [c for t in tables for c in t[name].chunks], typ
+        )
+
+    offsets = column("offset", pa.int64())
+    order = pc.sort_indices(offsets)
+    offsets = offsets.take(order)
+    # contiguity replaces an accounting action: before any callback,
+    # the rows read must be the ones the footers promise — distinct,
+    # and as many as promised (read_segment already bounds them to
+    # the batch range), so on dense segments exactly pos+1..end
+    promised = [r[3] for r in reads]
+    want = None if None in promised else sum(promised)
+    got = offsets.to_numpy()
+    if (want is not None and len(got) != want) or (np.diff(got) <= 0).any():
+        raise RuntimeError(
+            f"batch {batch_id}: the {len(got)} offsets read do "
+            f"not match the segment footers ({want} in "
+            f"{pos + 1}..{end}); the batch is not acked and is "
+            "redelivered on resume"
+        )
+    events = column("event", pa.string()).take(order)
+    messages = column("message", pa.string()).take(order)
+    return offsets, events, messages
+
+
+def _frame_delivery(
+    topic: Topic, batch_fn: Callable[[DataFrame, int], None], event: str | None
+) -> Callable:
+    """``deliver`` for ``batch_fn(batch_df, batch_id)`` on a lazy frame
+    with ``Topic.stream()``'s columns that holds each offset of the
+    batch once: one scan over the segments read whole, plus one bounded
+    scan per segment read in part (a cursor inside a compacted file, a
+    merged file next to its originals).  A ``batch_fn`` error while a
+    planned segment has vanished is a compaction's swap, not a failure:
+    the batch is planned and delivered again."""
+
+    def deliver(reads: list[tuple], batch_id: int) -> int:
+        paths = [r[0] for r in reads]
+        whole = [path for path, _, _, _, is_whole in reads if is_whole]
+        try:
+            frames = [topic.read_segments(whole)] if whole else []
+            frames += [
+                topic.read_segments([path]).filter(
+                    (F.col("offset") > after) & (F.col("offset") <= upto)
+                )
+                for path, after, upto, _, is_whole in reads
+                if not is_whole
+            ]
+            df = functools.reduce(DataFrame.union, frames)
+            if event is not None:
+                df = df.filter(F.col("event") == F.lit(event))
+            # Spark leaves out, without an error, a file that vanishes
+            # while it lists the paths: every planned file must still
+            # exist after the listing (a later vanish fails the read)
+            if all(map(os.path.exists, paths)):
+                batch_fn(df, batch_id)
+                # the footers' count: a sparse segment read in part
+                # counts its offset range
+                return sum(upto - after if n is None else n for _, after, upto, n, _ in reads)
+        except Exception:
+            if all(map(os.path.exists, paths)):
+                raise
+        raise _Vanished(paths)
+
+    return deliver
 
 
 def subscribe(
@@ -584,14 +675,12 @@ def subscribe(
         # opt out (e.g. when the caller knows the backlog is tiny).
         max_files_per_trigger = None
         max_bytes = DEFAULT_CALLBACK_MAX_BYTES
-    pos = _start_offset_for(topic, name, replay)
-    if name is not None:
-        pos = max(pos, topic.last_ack(name) or 0)
-    until = topic.latest() if available_now else None
 
-    def deliver(offsets, events, messages) -> None:
+    def deliver(reads: list[tuple], batch_id: int) -> int:
         import pyarrow.compute as pc
 
+        offsets, events, messages = _read_columns(reads, batch_id)
+        n_rows = len(offsets)
         if event is not None:
             keep = pc.equal(events, event)
             offsets, events, messages = (
@@ -634,11 +723,13 @@ def subscribe(
             Topic(
                 topic.spark, os.path.dirname(topic.root), f"{topic.name}__dlq"
             ).publish_batch(poisoned)
+        return n_rows
 
-    follower = _Follower(
-        topic, deliver, name, pos, until, max_bytes, max_files_per_trigger
+    query = _Query()
+    _Follower(
+        query, topic, deliver, name, replay, available_now, max_bytes, max_files_per_trigger
     )
-    return Subscription(follower, name, None)
+    return Subscription(query, name)
 
 
 def subscribe_batches(
@@ -651,47 +742,31 @@ def subscribe_batches(
     max_files_per_trigger: int | None = None,
 ) -> Subscription:
     """DataFrame-level delivery: ``batch_fn(batch_df, batch_id)`` per
-    micro-batch, never collecting rows to the driver.
+    batch, never collecting rows to the driver — the scale path the
+    per-message ``subscribe`` cannot be: the consumer logic runs as
+    Spark jobs over the batch DataFrame, so a terabyte backlog drains
+    without any driver materialization.
 
-    This is the scale path the per-message ``subscribe`` cannot be: the
-    consumer logic runs as Spark jobs over the batch DataFrame (write it
-    somewhere, aggregate it, join it), so a terabyte backlog drains
-    without any driver materialization.  It is a Structured Streaming
-    query: its position is the checkpoint commit per micro-batch
-    (at-least-once for durable names), and the subscriber's JSON ack
-    file (``Topic.ack``) follows it for introspection, its offset
-    computed with a single-row ``max(offset)`` aggregate instead of a
-    row collect.
+    The same follower as ``subscribe`` (start, resume, wake-up, ack and
+    ``available_now`` rules; one active durable name per topic in a
+    process); only the delivery differs: ``batch_df`` is a lazy frame
+    over the batch's segment files with ``Topic.stream()``'s columns
+    (``pub_date`` too on a partitioned topic), rows in no particular
+    order.  Batches are unbounded unless ``max_files_per_trigger`` caps
+    their segment count.  ``batch_id`` numbers this subscription's
+    batches from 0 and restarts at 0 on every subscribe: ``offset``,
+    not ``batch_id``, is the dedup key across restarts.
 
-    Semantics vs the reference: same at-least-once contract as the
-    durable path (src/topic.js:118-201), with the delivery unit raised
-    from one message to one micro-batch — batch_fn that throws leaves
-    the batch uncommitted, so it is redelivered in full on resume.
+    Same at-least-once contract as the durable path
+    (src/topic.js:118-201), with the delivery unit raised from one
+    message to one batch: after ``batch_fn`` returns, the batch's
+    planned end offset is acked (also when the ``event`` filter left
+    it empty); a batch_fn that throws ends the subscription with the
+    batch unacked, so it is redelivered in full on resume.
     """
-    if name is None:
-        checkpoint = tempfile.mkdtemp(prefix=f"kafkaish_ephemeral_{topic.name}_")
-    else:
-        checkpoint = os.path.join(topic.sub_dir, name, "checkpoint")
-    start_offset = _start_offset_for(topic, name, replay)
-
-    stream = topic.stream(event=event, max_files_per_trigger=max_files_per_trigger)
-    if start_offset:
-        stream = stream.filter(F.col("offset") > F.lit(int(start_offset)))
-
-    def deliver(batch_df: DataFrame, batch_id: int) -> None:
-        batch_fn(batch_df, batch_id)
-        if name is not None:
-            # Bounded driver traffic: one row, not the batch.
-            last = batch_df.agg(F.max("offset").alias("o")).first()["o"]
-            if last is not None:
-                topic.ack(name, int(last))
-
-    writer = (
-        stream.writeStream.foreachBatch(deliver)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    query = _Query()
+    deliver = _frame_delivery(topic, batch_fn, event)
+    _Follower(
+        query, topic, deliver, name, replay, available_now, None, max_files_per_trigger
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return Subscription(query, name, checkpoint)
+    return Subscription(query, name)

@@ -193,12 +193,6 @@ def test_max_files_per_trigger_bounds_batches(engine, spark, tmp_path):
     q.awaitTermination()
     assert sum(batch_sizes) == 3
     assert len([b for b in batch_sizes if b > 0]) >= 3
-    # Spark takes one trigger bound per source, and would only fail
-    # the query at its first trigger
-    import pytest
-
-    with pytest.raises(ValueError):
-        topic.stream(max_files_per_trigger=1, max_bytes_per_trigger=1 << 20)
 
 
 def test_idempotent_publish_skips_existing_payloads(engine, spark):

@@ -358,52 +358,47 @@ def test_attach_to_long_log_delivers_within_two_batches(engine):
 
 def test_checkpoint_commits_write_no_checksum_sidecars(engine):
     """The engine session commits streaming checkpoints through the raw
-    local file system: after three triggers of a durable
-    ``subscribe_batches`` query its offset WAL and commit log hold no
-    Hadoop ``.crc`` sidecars (each sidecar cost a forked ``chmod``).
-    The checkpoint still resumes: after a stop and two more publishes,
-    a resubscribe delivers exactly the two new offsets, in order, and
-    acks the tail."""
+    local file system: after three triggers of a durable continuous
+    ``pipe()`` its offset WAL and commit log hold no Hadoop ``.crc``
+    sidecars (each sidecar cost a forked ``chmod``).  The checkpoint
+    still resumes: after a stop and two more publishes, a resumed pipe
+    delivers exactly the two new messages, in order."""
     import os
     import time
 
-    from kafkaish_spark.streaming.subscribe import subscribe_batches
+    from kafkaish_spark.streaming.pipeline import pipe
 
-    def collect(into):
-        def batch_fn(batch_df, batch_id):
-            into.extend(sorted(r["offset"] for r in batch_df.collect()))
+    source = engine.prepare_topic("s_nocrc")
+    sink = engine.prepare_topic("s_nocrc_sink")
 
-        return batch_fn
+    def numbers(since=0):
+        return [json.loads(r["message"])["number"] for r in sink.replay(since).collect()]
 
-    topic = engine.prepare_topic("s_nocrc")
-    got = []
-    sub = subscribe_batches(topic, collect(got), name="w", available_now=False)
+    sub = pipe(source, sink, name="w", available_now=False)
     try:
         for i in range(1, 4):
-            off = int(topic.publish("ev", {"number": i})["offset"])
+            source.publish("ev", {"number": i})
             deadline = time.time() + 120
-            while off not in got and time.time() < deadline:
+            while sink.latest() < i and time.time() < deadline:
                 time.sleep(0.05)
         sub.query.processAllAvailable()
     finally:
         sub.unsubscribe()
-    assert got == [1, 2, 3]
-    assert topic.last_ack("w") == 3
+    assert numbers() == [1, 2, 3]
 
     for log in ("offsets", "commits"):
         names = os.listdir(os.path.join(sub.checkpoint, log))
         assert len([n for n in names if n.isdigit()]) >= 3, names
         assert not [n for n in names if n.endswith(".crc")], names
 
-    topic.publish_batch([("ev", {"number": 4}), ("ev", {"number": 5})])
-    again = []
-    resumed = subscribe_batches(topic, collect(again), name="w")
+    source.publish_batch([("ev", {"number": 4}), ("ev", {"number": 5})])
+    resumed = pipe(source, sink, name="w")
     try:
         resumed.await_termination()
     finally:
         resumed.unsubscribe()
-    assert again == [4, 5]
-    assert topic.last_ack("w") == topic.latest() == 5
+    assert numbers(since=3) == [4, 5]
+    assert sink.latest() == 5
 
 
 def test_subscribe_batches_never_collects(engine):
@@ -555,10 +550,10 @@ def test_dropped_row_fails_batch_without_ack(engine, monkeypatch):
 
 
 def test_ephemeral_unsubscribe_removes_checkpoint(engine):
-    """An ephemeral ``subscribe_batches`` query's temp checkpoint is
-    never resumed, so unsubscribing removes it; a durable one stays.
-    ``subscribe()`` keeps no on-disk state of its own: it leaves no
-    temp directory, ephemeral or durable."""
+    """A follower keeps no on-disk state beyond its JSON ack file and
+    start marker: neither ``subscribe`` nor ``subscribe_batches``,
+    ephemeral or durable, has a checkpoint, creates a directory under
+    the topic's ``_subscribers``, or leaves a temp directory."""
     import os
     import tempfile
 
@@ -566,23 +561,23 @@ def test_ephemeral_unsubscribe_removes_checkpoint(engine):
 
     topic = engine.prepare_topic("s_eph_cleanup")
     topic.publish("ev", {"number": 1})
-    eph_batches = subscribe_batches(topic, lambda df, bid: None)
-    durable_batches = subscribe_batches(topic, lambda df, bid: None, name="keep")
-    for sub in (eph_batches, durable_batches):
-        sub.await_termination()
-        assert os.path.isdir(sub.checkpoint)
-        sub.unsubscribe()
-    assert not os.path.exists(eph_batches.checkpoint)
-    assert os.path.isdir(durable_batches.checkpoint)
-
     before = set(os.listdir(tempfile.gettempdir()))
-    for name in (None, "keep_msg"):
-        sub = subscribe(topic, lambda e, m, o: None, name=name)
-        sub.await_termination()
-        sub.unsubscribe()
-        assert sub.checkpoint is None
+    for sub_fn, deliver, durable in (
+        (subscribe, lambda e, m, o: None, "keep_msg"),
+        (subscribe_batches, lambda df, bid: None, "keep_df"),
+    ):
+        for name in (None, durable):
+            sub = sub_fn(topic, deliver, name=name, replay=True)
+            sub.await_termination()
+            sub.unsubscribe()
+            assert sub.checkpoint is None
     new = set(os.listdir(tempfile.gettempdir())) - before
     assert not [d for d in new if d.startswith("kafkaish_ephemeral_")], new
+    assert not [
+        d for d in os.listdir(topic.sub_dir)
+        if os.path.isdir(os.path.join(topic.sub_dir, d))
+    ]
+    assert topic.last_ack("keep_msg") == topic.last_ack("keep_df") == 1
 
 
 def test_start_marker_survives_crash_mid_write(engine, monkeypatch):
