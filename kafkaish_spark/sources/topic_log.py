@@ -32,6 +32,8 @@ sort, no single-partition shuffle).
 
 from __future__ import annotations
 
+import collections
+import datetime
 import json
 import os
 import shutil
@@ -169,6 +171,19 @@ def detect_partitioned(log_dir: str) -> bool | None:
     return None
 
 
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+
+
+def _epoch_us(ts: datetime.datetime) -> int:
+    """Exact integer microseconds since the epoch (a naive ``ts`` is
+    driver-local, as ``datetime.timestamp`` reads it) — no float round
+    trip, so a writer's hand-built record and the footer parser agree
+    to the microsecond."""
+    return (ts.astimezone(datetime.timezone.utc) - _EPOCH) // datetime.timedelta(
+        microseconds=1
+    )
+
+
 def _footer_record(path: str, size: int | None = None) -> dict:
     """One segment's record — path, size, commit-uuid group, offset and
     ts ranges, row count — parsed from its parquet footer alone: the
@@ -198,11 +213,7 @@ def _footer_record(path: str, size: int | None = None) -> dict:
         s_ts = stats(rg, "ts")
         if s_ts is not None and s_ts.max is not None:
             ts = s_ts.max
-            us = (
-                int(ts.timestamp() * 1_000_000)
-                if hasattr(ts, "timestamp")
-                else int(ts)
-            )
+            us = _epoch_us(ts) if hasattr(ts, "timestamp") else int(ts)
             max_ts_us = us if max_ts_us is None else max(max_ts_us, us)
         else:
             ts_complete = False
@@ -267,6 +278,49 @@ def log_tail(records: Iterable[dict]) -> int:
     )
 
 
+class _HotSegments:
+    """The rows of the newest directly published segments, as their
+    writer built them, so an in-process follower reads a fresh segment
+    without opening its parquet file.  Entries are keyed by path and
+    hold the file's identity ``(st_ino, st_size, st_mtime_ns)`` — the
+    footer cache's key — at commit: ``get`` returns a table only while
+    one ``os.stat`` of the path still matches, so a path replaced by
+    another file (a new inode) or rewritten is read from disk.  Oldest
+    entries go first once the tables exceed ``max_bytes``."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self._tables: collections.OrderedDict[str, tuple] = collections.OrderedDict()
+        self._bytes = 0
+        self._lock = threading.Lock()
+
+    def put(self, path: str, st: os.stat_result, table) -> None:
+        with self._lock:
+            old = self._tables.pop(path, None)
+            if old is not None:
+                self._bytes -= old[1].nbytes
+            if table.nbytes > self.max_bytes:
+                return
+            self._tables[path] = ((st.st_ino, st.st_size, st.st_mtime_ns), table)
+            self._bytes += table.nbytes
+            while self._bytes > self.max_bytes:
+                _, (_, gone) = self._tables.popitem(last=False)
+                self._bytes -= gone.nbytes
+
+    def get(self, path: str):
+        hot = self._tables.get(path)
+        if hot is None:
+            return None
+        st = os.stat(path)
+        return hot[1] if hot[0] == (st.st_ino, st.st_size, st.st_mtime_ns) else None
+
+
+# A live follower reads the segments published since its last batch,
+# one or a few; 16 MiB of Arrow tables holds hundreds of one-message
+# segments, or one 10k-message direct publish of ~1.6 KB messages.
+_HOT = _HotSegments(16 * 1024 * 1024)
+
+
 def read_segment(
     path: str,
     min_excl: int | None = None,
@@ -277,17 +331,22 @@ def read_segment(
     Arrow table, filtered exactly to offsets in (min_excl, max_incl]
     (``None`` = unbounded) and to ``event`` (``None`` = every event) —
     the one segment reader, shared by the ``kafkaish`` connector's
-    tasks and ``subscribe()``'s driver-side delivery.  Rows keep file
+    tasks and the followers' driver-side delivery.  A segment this
+    process published directly, while followed, comes from its
+    writer's table (``_HotSegments``) when the file on disk is still
+    that segment; every other read opens the file.  Rows keep file
     order; ``ts`` keeps the file's timestamp type."""
     import functools
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    # a single-file read: ParquetFile skips the dataset discovery
-    # ``pq.read_table`` does (~0.3 vs ~0.9 ms per one-message segment)
-    with pq.ParquetFile(path) as pf:
-        tbl = pf.read(columns=["offset", "ts", "event", "message"])
+    tbl = _HOT.get(path)
+    if tbl is None:
+        # a single-file read: ParquetFile skips the dataset discovery
+        # ``pq.read_table`` does (~0.3 vs ~0.9 ms per one-message segment)
+        with pq.ParquetFile(path) as pf:
+            tbl = pf.read(columns=["offset", "ts", "event", "message"])
     conds = []
     if min_excl is not None:
         conds.append(pc.greater(tbl["offset"], min_excl))
@@ -501,25 +560,94 @@ def writer_lock(topic_root: str, what: str = "publish"):
                 os.remove(path)
         sig = _TAIL_SIGNALS.get(os.path.abspath(topic_root))
         if sig is not None:
-            sig.bump()
+            sig.release()
 
 
 class TailSignal:
-    """Wake-up for a topic's in-process followers (``subscribe()``): a
-    generation counter under a condition.  ``writer_lock``'s release
-    bumps it — every offset-assigning path goes through that lock, so a
-    commit made in this process wakes its followers at once — and the
-    followers' watcher thread bumps it for commits it sees made by
-    other processes."""
+    """A topic's tail in this process: the wake-up of its followers
+    (``subscribe``, ``subscribe_batches``, group members) and the log's
+    segment records as of its newest commit, so that a follower plans a
+    batch without listing the log.
+
+    ``generation`` counts wake-ups under ``cond``.  ``records`` holds
+    every segment's record (``Topic._segment_stats``'s form), or None
+    when unknown; ``epoch`` counts its changes.  Every offset-assigning
+    path holds ``writer_lock``, whose release is a commit
+    (``release``): it publishes the records the holder handed
+    (``hand`` — ``_publish_direct`` hands what it listed under the lock
+    plus its new segment's record), and for every other holder the
+    records become unknown.  The release runs after the lock file is
+    gone, so that the woken followers do not hold up the writer's
+    return; when another writer's release lands between a hand and
+    its release, the records become unknown too.  The followers'
+    watcher thread sees other processes' commits: it ``offer``s the
+    records of a listing that differs from ``records``, and only
+    ``wake``s the followers when just the lock file changed.  While
+    the records are unknown, the followers share one listing per
+    commit (``current``)."""
 
     def __init__(self) -> None:
         self.cond = threading.Condition()
         self.generation = 0
+        self.records: list[dict] | None = None
+        self.epoch = 0
+        self._releases = 0
+        # thread id -> (records, releases when handed)
+        self._handed: dict[int, tuple[list[dict], int]] = {}
+        self._listing = threading.Lock()
 
-    def bump(self) -> None:
+    def wake(self) -> None:
         with self.cond:
             self.generation += 1
             self.cond.notify_all()
+
+    def bump(self) -> None:
+        """The log changed in a way nobody handed: forget the records
+        and wake the followers."""
+        with self.cond:
+            self._set(None)
+
+    def _set(self, records: list[dict] | None) -> None:
+        self.records = records
+        self.epoch += 1
+        self.generation += 1
+        self.cond.notify_all()
+
+    def hand(self, records: list[dict]) -> None:
+        """The ``writer_lock`` holder's post-commit records, published
+        by the lock's release."""
+        with self.cond:
+            self._handed[threading.get_ident()] = (records, self._releases)
+
+    def release(self) -> None:
+        with self.cond:
+            records, releases = self._handed.pop(threading.get_ident(), (None, None))
+            self._set(records if releases == self._releases else None)
+            self._releases += 1
+
+    def offer(self, records: list[dict], epoch: int) -> bool:
+        """Publish records listed during ``epoch``, unless a commit
+        changed the records since; returns whether they were taken."""
+        with self.cond:
+            if self.epoch != epoch:
+                return False
+            self._set(records)
+            return True
+
+    def current(self, list_records, fresh: bool = False) -> list[dict]:
+        """The log's records: the newest commit's, or else one listing
+        (``list_records()``) shared by every caller until the next
+        commit — kept only if no commit landed while it ran.
+        ``fresh`` lists even when the records are known."""
+        with self._listing:
+            with self.cond:
+                records, epoch = self.records, self.epoch
+            if records is None or fresh:
+                records = list_records()
+                with self.cond:
+                    if self.epoch == epoch:
+                        self.records = records
+            return records
 
 
 _TAIL_SIGNALS: dict[str, TailSignal] = {}
@@ -755,17 +883,23 @@ class Topic:
         segment.  Timestamps are written tz-aware UTC micros
         (isAdjustedToUTC) — exactly how Spark reads TimestampType back.
         The distributed path (publish_df) is unchanged and remains the
-        scale path for DataFrame payloads."""
-        import datetime as _dt
+        scale path for DataFrame payloads.
 
+        The new segment's footer record is built from the values
+        written, not parsed back, and cached.  When the topic is
+        followed in this process, the writer hands its followers the
+        post-commit records (those it listed under the lock plus the new
+        one) and the segment's table (``_HOT``), so they plan and read
+        the batch without listing the log or opening the file."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if not payload:
             return []  # nothing to write; never materialize junk segments
         with writer_lock(self.root):
-            start = self.latest()
-            now = _dt.datetime.now(_dt.timezone.utc)
+            records = self._segment_stats()
+            start = log_tail(records)
+            now = datetime.datetime.now(datetime.timezone.utc)
             n = len(payload)
             tbl = pa.table(
                 {
@@ -815,9 +949,28 @@ class Topic:
             floor_ms = floor_ms // 1_000_000 + 1
             if os.stat(tmp).st_mtime_ns // 1_000_000 < floor_ms:
                 os.utime(tmp, ns=(floor_ms * 1_000_000, floor_ms * 1_000_000))
-            os.replace(tmp, os.path.join(seg_dir, fn))
+            path = os.path.join(seg_dir, fn)
+            os.replace(tmp, path)
+            st = os.stat(path)
+            rec = {
+                "path": path,
+                "size": st.st_size,
+                "uuid": _segment_uuid(fn),
+                "min_off": start + 1,
+                "max_off": start + n,
+                "max_ts_us": _epoch_us(now),
+                "num_rows": n,
+            }
+            with self._footer_lock:
+                self._footer_cache[(path, st.st_ino, st.st_size, st.st_mtime_ns)] = rec
+            evicted = 0
             if self.retention_bytes is not None:
-                self.enforce_retention(self.retention_bytes)
+                evicted = self.enforce_retention(self.retention_bytes)
+            sig = _TAIL_SIGNALS.get(os.path.abspath(self.root))
+            if sig is not None:
+                _HOT.put(path, st, tbl)
+                if not evicted:  # else the records are unknown
+                    sig.hand([*records, dict(rec)])
         # DRIVER-LOCAL naive, like log().collect() and the >10k Spark
         # path return — a naive UTC value here would seek 4-5h wrong
         # through offset_for_time on any non-UTC driver (review r8)
@@ -959,10 +1112,13 @@ class Topic:
         measured in tools/profile_publish.py).  Footers are cached per
         handle, so a call parses only the segments written since the
         previous one (~0.5 ms each): ~1.7 ms median on a 126-segment
-        log (4-vCPU host).
-        ``latest()`` runs once per publish, so this is the latency
-        floor of the reference's core usage pattern — one message at a
-        time (src/topic.js:25-40).  Zero-row seed segments are ignored;
+        log (4-vCPU host); a segment this handle published directly is
+        cached from the values written and never parsed.
+        Every call lists the log: a commit by another process is seen
+        only in the listing.  ``_publish_direct`` computes the same tail
+        from its own listing under the writer lock (and keeps the
+        records for the topic's followers); the followers plan from
+        those records, not from this.  Zero-row seed segments are ignored;
         a non-empty segment with incomplete offset stats (foreign
         writer with statistics disabled) has its offset column read
         exactly rather than guessed (``log_tail``), and an unreadable
@@ -1125,9 +1281,10 @@ class Topic:
 
         Footers are parsed once per handle: records are cached on
         ``(path, st_ino, st_size, st_mtime_ns)`` and only files whose
-        key is new are read, so ``latest()`` (once per publish) costs a
-        directory walk plus footer reads for the segments written since
-        the last call, not one footer read per segment in the log.
+        key is new are read, so a publish costs a directory walk plus
+        footer reads for the segments written since the last call, not
+        one footer read per segment in the log (none for its own
+        direct publishes, whose records it caches as it writes them).
         Segment names carry a fresh uuid4 and a segment is never
         rewritten in place, so a key is never reused by different
         bytes; a file another handle or writer added is a new key,

@@ -23,25 +23,33 @@ with no Spark streaming query or checkpoint behind it:
   (``subscribe``: ``DEFAULT_CALLBACK_MAX_BYTES``; a file bound on
   request); a new subscriber's first batch starts at its cursor
 - tail wake-up + EventEmitter fan-out (:48-61, 73-74, 108) -> one
-  ``TailSignal`` per topic per process, bumped by ``writer_lock``'s
-  release (commits in this process) and by one watcher thread per
-  topic polling the log listing every ``_WATCH_POLL_S`` (other
-  processes).  Idle cost grows with topics, not subscribers.
+  ``TailSignal`` per topic per process, the shared tail: it carries
+  the log's segment records as of the newest commit.  ``writer_lock``'s
+  release publishes them (commits in this process: a direct
+  ``publish`` hands its records, any other writer leaves them unknown)
+  and one watcher thread per topic offers them for other processes'
+  commits, listing the log only when a directory mtime moved.  Idle
+  cost grows with topics, not subscribers or segments.
 
 A batch is the contiguous run of segments after the cursor, planned
-from the footer records (``Topic._segment_stats``).  A gap after the
-cursor while ``_writer.lock`` is held is a commit in flight (Spark
-renames a job's files one by one): the follower waits for it.  A gap
-still there after the lock is free is a hole (an aborted write,
-retention below the cursor): the follower skips it, as Spark's file
-source would.  A segment that vanishes before its batch is delivered
-(compaction swapping files) is transient: the batch is planned again.
+from the signal's footer records: no listing when the newest commit
+handed them, else one listing (``Topic._segment_stats``) shared by the
+topic's followers.  A gap after the cursor while ``_writer.lock`` is
+held is a commit in flight (Spark renames a job's files one by one):
+the follower waits for it.  A gap still there in a listing of the
+follower's own, taken after it saw the lock free, is a hole (an
+aborted write, retention below the cursor): the follower skips it, as
+Spark's file source would.  A segment that vanishes before its batch
+is delivered (compaction swapping files) is transient: the follower
+lists the log and plans the batch again.
 
 Only the batch read differs.  ``subscribe`` reads the segments with
-``topic_log.read_segment`` into Arrow columns whose offsets must be the
-ones the footers promise — exactly ``cursor+1 .. end`` on dense
-segments, the row count of a sparse one (``compact_keyed``,
-``redact``) — before any callback; a mismatch fails the batch unacked.
+``topic_log.read_segment`` (a segment just published in this process
+comes from its writer's table, not the file) into Arrow columns whose
+offsets must be the ones the footers promise — exactly ``cursor+1 ..
+end`` on dense segments, the row count of a sparse one
+(``compact_keyed``, ``redact``) — before any callback; a mismatch
+fails the batch unacked.
 Then the ``event`` filter applies and the callbacks run in offset
 order.  ``subscribe_batches`` and group members hand ``batch_fn`` a
 lazy DataFrame over the planned segment files, each offset once.
@@ -69,6 +77,7 @@ from pyspark.sql import functions as F
 
 from kafkaish_spark.sources.topic_log import (
     Topic,
+    _hidden,
     read_segment,
     segment_files,
     tail_signal,
@@ -167,24 +176,38 @@ DEFAULT_CALLBACK_MAX_BYTES = 64 * 1024 * 1024
 
 _UNSET = object()  # sentinel: caller did not choose a backpressure bound
 
-# How often a topic's watcher lists the log for commits made by other
-# processes (this process's commits wake followers through
-# writer_lock).  One listing per topic per period, however many
-# followers the topic has.
+# How often a topic's watcher looks for commits made by other processes
+# (this process's commits wake followers through writer_lock): a stat
+# of the log's directories, and a listing when one changed.  One
+# watcher per topic, however many followers the topic has.
 _WATCH_POLL_S = 0.01
+
+# A directory whose mtime is less than this older than the stat that
+# read it may change again within the same timestamp tick (coarse
+# file-system timestamps): the watcher keeps listing it until its mtime
+# is older than that (git's "racily clean" rule).
+_RACY_NS = 1_000_000_000
 
 # Progress entries a follower keeps, as Spark keeps for a query
 # (spark.sql.streaming.numRecentProgressUpdates).
 _RECENT_PROGRESS = 100
 
 
+def _mtime_ns(path: str) -> int | None:
+    try:
+        return os.stat(path).st_mtime_ns
+    except FileNotFoundError:
+        return None
+
+
 class _TopicTail:
     """A followed topic in this process: its ``TailSignal`` and the one
-    watcher thread that bumps it when the log listing or the writer
-    lock changes.  Shared by the topic's followers, refcounted."""
+    watcher thread that keeps it current with other processes' commits.
+    Shared by the topic's followers, refcounted."""
 
     def __init__(self, topic: Topic):
         self.key = os.path.abspath(topic.root)
+        self.topic = topic
         self.signal = tail_signal(topic.root)
         self.log_dir = topic.log_dir
         self.lock_path = os.path.join(topic.root, "_writer.lock")
@@ -192,15 +215,63 @@ class _TopicTail:
         self.closed = threading.Event()
 
     def watch(self) -> None:
-        last = self._state()
+        """Every ``_WATCH_POLL_S``: wake the followers when the writer
+        lock appeared or went (a gap may have become a hole), and offer
+        the signal the records of a listing that differs from its own.
+        The log is listed only when the mtime of ``log/`` or of a
+        directory in it changed since the last listing, or is racy
+        (``_RACY_NS``) — an idle topic costs a few stats per poll,
+        whatever its segment count."""
+        locked = os.path.exists(self.lock_path)
+        dirs, stamps, stamped_at = [self.log_dir], None, 0
         while not self.closed.wait(_WATCH_POLL_S):
-            state = self._state()
-            if state != last:
-                last = state
-                self.signal.bump()
+            if os.path.exists(self.lock_path) != locked:
+                locked = not locked
+                self.signal.wake()
+            now = time.time_ns()
+            seen = [_mtime_ns(d) for d in dirs]
+            if seen == stamps and all(
+                m is None or stamped_at - m >= _RACY_NS for m in seen
+            ):
+                continue
+            # stamped before the listing: a commit after the stat moves
+            # an mtime (or lands inside a racy one) and is listed next
+            stamps, stamped_at = seen, now
+            epoch = self.signal.epoch
+            paths = segment_files(self.log_dir)
+            dirs = [self.log_dir, *self._subdirs()]
+            if not self._offer(paths, epoch):
+                stamps = None  # list again at the next poll
 
-    def _state(self):
-        return segment_files(self.log_dir), os.path.exists(self.lock_path)
+    def _subdirs(self) -> list[str]:
+        """The visible directories in ``log/`` (``pub_date=``), whose
+        mtimes move when a segment lands in them."""
+        try:
+            with os.scandir(self.log_dir) as entries:
+                return sorted(
+                    e.path for e in entries if e.is_dir() and not _hidden(e.name)
+                )
+        except FileNotFoundError:
+            return []
+
+    def _offer(self, paths: list[str], epoch: int) -> bool:
+        """Bring the signal's records up to a listing of ``paths``
+        taken during ``epoch``; False when that did not happen."""
+        records = self.signal.records
+        if records is None:
+            # the followers list at their next step: compare with the
+            # listing they share at the next poll
+            return False
+        if {r["path"] for r in records} == set(paths):
+            return True
+        try:
+            records = self.topic._segment_stats()
+        except Exception:
+            # a segment vanished or cannot be read: the followers list
+            # themselves, and meet the error there
+            self.signal.bump()
+            return False
+        return self.signal.offer(records, epoch)
 
 
 _TAILS: dict[str, _TopicTail] = {}
@@ -223,6 +294,9 @@ def _join_tail(topic: Topic, name: str | None) -> _TopicTail:
         tail = _TAILS.get(key)
         if tail is None:
             tail = _TAILS[key] = _TopicTail(topic)
+            # nothing kept the signal's records current with other
+            # processes while no watcher ran
+            tail.signal.bump()
             threading.Thread(
                 target=tail.watch, name=f"kafkaish-tail-{topic.name}", daemon=True
             ).start()
@@ -436,16 +510,20 @@ class _Follower:
     def _run(self) -> None:
         sig = self._tail.signal
         hole = None  # (cursor, gap end) seen once with the lock free
+        fresh = False  # plan the next batch from a listing of our own
         try:
             while not self._stopping:
                 if self._until is not None and self._pos >= self._until:
                     return  # available_now: drained to the subscribe-time tail
                 with sig.cond:
                     generation = sig.generation
+                listed, fresh = fresh, False
                 try:
-                    ran, gap = self._step()
+                    ran, gap = self._step(listed)
                 except _Vanished:
-                    # a segment or directory vanished mid-swap: plan again
+                    # a segment or directory vanished mid-swap: the
+                    # records are stale, so list before planning again
+                    fresh = True
                     self._wait(sig, generation, _WATCH_POLL_S)
                     continue
                 if ran:
@@ -455,15 +533,15 @@ class _Follower:
                 elif os.path.exists(self._tail.lock_path):
                     hole = None  # a commit in flight: its release wakes us
                     self._wait(sig, generation)
-                elif hole == (self._pos, gap):
-                    # the gap outlived a free lock and a fresh listing:
-                    # no writer can fill it any more
+                elif listed and hole == (self._pos, gap):
+                    # the gap outlived a free lock and a listing taken
+                    # after it: no writer can fill it any more
                     self._advance(gap - 1)
                     hole = None
                 else:
-                    # free lock, but the listing predates that check:
+                    # free lock, but the records predate that check:
                     # list once more before calling it a hole
-                    hole = (self._pos, gap)
+                    hole, fresh = (self._pos, gap), True
                     self._wait(sig, generation, _WATCH_POLL_S)
         except Exception as exc:  # surfaced by awaitTermination
             self._query._failed(exc)
@@ -484,13 +562,15 @@ class _Follower:
             self._pos = pos
             self._moved.notify_all()
 
-    def _step(self) -> tuple[bool, int | None]:
+    def _step(self, fresh: bool) -> tuple[bool, int | None]:
         """Plan the next batch and deliver it: ``(ran, gap)``, with
-        ``_plan``'s gap when no batch ran."""
+        ``_plan``'s gap when no batch ran.  The plan reads the topic
+        signal's records (the newest commit's, or a listing shared with
+        the topic's other followers); ``fresh`` lists the log instead."""
         t0 = time.perf_counter()
         try:
             reads, gap = _plan(
-                self._topic._segment_stats(),
+                self._tail.signal.current(self._topic._segment_stats, fresh),
                 self._pos,
                 self._until,
                 self._max_bytes,
@@ -521,7 +601,7 @@ class _Follower:
             .isoformat(timespec="milliseconds")
             .replace("+00:00", "Z"),
             "durationMs": {
-                "latestOffset": ms(t0, t1),  # listing + plan
+                "latestOffset": ms(t0, t1),  # snapshot (or shared listing) + plan
                 "addBatch": ms(t1, t2),  # read + delivery
                 "commitOffsets": ms(t2, t3),
                 "triggerExecution": ms(t0, t3),
