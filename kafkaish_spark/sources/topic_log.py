@@ -702,6 +702,20 @@ def _session_zone_date(now, sess_tz: str):
     return now.date()  # unresolvable id: UTC, the session-pin date
 
 
+def _offsets_in_one_partition(df: DataFrame, start: int) -> DataFrame:
+    """``df`` coalesced to one partition, with ``offset`` = start+1,
+    start+2, ... in row order: ``monotonically_increasing_id`` over ONE
+    partition is 0..n-1 by construction, so the offsets need no count
+    job, no persist pin and no base-map join — the write is the only
+    job.  The ``coalesce(1)`` pins the executed partitioning: a write
+    job re-plans its lineage, and with AQE a recomputed upstream
+    shuffle could finalize with >1 partitions, where the ids jump by
+    2^33 between partitions.  On a 1-partition plan it is a no-op."""
+    return df.coalesce(1).withColumn(
+        "offset", (F.monotonically_increasing_id() + F.lit(start + 1)).cast("long")
+    )
+
+
 def _assign_contiguous_ids(df: DataFrame, start: int) -> DataFrame:
     """Add ``offset`` = start+1, start+2, ... in input partition order.
 
@@ -1029,32 +1043,14 @@ class Topic:
                 # file — retention and replay granularity stay sane
                 src = src.coalesce(target_files)
             if src.rdd.getNumPartitions() == 1:
-                # Single-partition fast path (optimization r12):
-                # monotonically_increasing_id over ONE partition is
-                # 0..n-1 by construction, so the contiguous offsets
-                # need no per-partition count job, no persist pin and
-                # no base-map broadcast join — the whole publish is
-                # ONE write job (measured ~0.4 s saved per small
-                # publish at sf0.1).  Small publishes land here via
-                # coalesce(target_files=1) or a single-task scan; the
-                # multi-partition path below stays the 100 TB shape.
-                #
-                # coalesce(1) PINS the executed partitioning to the
-                # probe's answer (r12 ADVICE item 1): the write job
-                # re-plans the lineage independently, and with AQE a
-                # recomputed upstream shuffle could finalize with >1
-                # partitions — monotonically_increasing_id would then
-                # jump by 2^33 between partitions, silently breaking
-                # the contiguous-offset contract.  On an already-1-
-                # partition plan the coalesce is a no-op wrapper.
-                src = src.coalesce(1)
-                out = src.withColumn(
-                    "offset",
-                    (F.monotonically_increasing_id() + F.lit(start + 1)).cast(
-                        "long"
-                    ),
-                )
-                self._write_segments(out)
+                # Single-partition fast path (optimization r12): the
+                # whole publish is ONE write job (measured ~0.4 s saved
+                # per small publish at sf0.1).  Small publishes land
+                # here via coalesce(target_files=1) or a single-task
+                # scan; the multi-partition path below stays the 100 TB
+                # shape.  The helper's coalesce(1) pins the executed
+                # plan to the probe's answer (r12 ADVICE item 1).
+                self._write_segments(_offsets_in_one_partition(src, start))
             else:
                 # Pin the input across the two jobs
                 # _assign_contiguous_ids runs (counts + write): with

@@ -24,19 +24,30 @@ choice that preserves atomicity without un-publishing).
 ``publish_transaction`` runs recovery first, so a crashed process's
 debris never blocks or corrupts the next writer.
 
-Contract notes: single-writer per engine root (the same contract every
-publish path here has — offsets are assigned from the tails observed
-at stage time); isolation is read-uncommitted DURING the rename window
-(a reader may see topic A's rows before topic B's — Kafka's default
-isolation), but never a torn PER-TOPIC batch (a parquet segment
-appears atomically) and never a partial transaction after recovery.
-Partitioned (pub_date) topics are not supported — their layout splits
-one logical append across directories, which file renames cannot make
-atomic.
+Recovery never touches a LIVE transaction: its owner holds an
+exclusive ``flock`` on ``_txn/<id>.lock`` from before the transaction
+directory exists until ``publish_transaction`` returns or raises (the
+kernel drops it when the owner process dies), and recovery resolves
+only the transactions whose lock it takes without blocking.
+
+Contract notes: each topic a transaction appends to is held under its
+``writer_lock`` from staging to the last rename, so offsets are
+assigned from tails no other writer can move meanwhile — the per-topic
+contract every publish path here has; transactions on disjoint topics
+run concurrently, from threads or processes.  Isolation is
+read-uncommitted DURING the rename window (a reader may see topic A's
+rows before topic B's — Kafka's default isolation), but never a torn
+PER-TOPIC batch (a parquet segment appears atomically) and never a
+partial transaction after recovery.  An empty payload stages no
+segment.  Partitioned (pub_date) topics are not supported — their
+layout splits one logical append across directories, which file
+renames cannot make atomic.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import shutil
@@ -45,12 +56,9 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import contextlib
-
 from kafkaish_spark.sources.topic_log import (
-    ENVELOPE,
     Engine,
-    _assign_contiguous_ids,
+    _offsets_in_one_partition,
     segment_records,
     writer_lock,
 )
@@ -71,32 +79,70 @@ def _write_journal(txn_dir: str, doc: dict) -> None:
     os.replace(tmp, _journal_path(txn_dir))
 
 
+def _lock(txn_dir: str, block: bool) -> int | None:
+    """The descriptor holding the exclusive ``flock`` of ``txn_dir``'s
+    lock file, or None (``block=False``) when another holder has it.
+    A lock taken on a file that was unlinked meanwhile (a recovery
+    releasing it) guards nothing: open the path again."""
+    path = f"{txn_dir}.lock"
+    while True:
+        fd = os.open(path, os.O_CREAT | os.O_RDWR, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | (0 if block else fcntl.LOCK_NB))
+        except BlockingIOError:
+            os.close(fd)
+            return None
+        try:
+            if os.stat(path).st_ino == os.fstat(fd).st_ino:
+                return fd
+        except FileNotFoundError:
+            pass
+        os.close(fd)
+
+
+def _unlock(txn_dir: str, fd: int) -> None:
+    """Remove the lock file, then release the lock: a transaction
+    directory left behind is resolved by the next recovery."""
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(f"{txn_dir}.lock")
+    os.close(fd)
+
+
 def recover_transactions(engine: Engine) -> dict:
-    """Resolve every pending transaction under the engine root:
-    ``staged`` -> rolled back (deleted), ``committing`` -> rolled
-    forward (remaining renames performed).  Returns counts."""
+    """Resolve every pending transaction under the engine root whose
+    owner is gone: ``staged`` -> rolled back (deleted), ``committing``
+    -> rolled forward (remaining renames performed).  A transaction
+    whose owner still holds its lock is left alone.  Returns counts."""
     root = _txn_root(engine)
     out = {"rolled_back": 0, "rolled_forward": 0}
     if not os.path.isdir(root):
         return out
-    for txn in sorted(os.listdir(root)):
+    for txn in sorted({n.removesuffix(".lock") for n in os.listdir(root)}):
         txn_dir = os.path.join(root, txn)
-        jpath = _journal_path(txn_dir)
-        if not os.path.exists(jpath):
-            shutil.rmtree(txn_dir, ignore_errors=True)  # pre-journal debris
-            continue
-        with open(jpath) as f:
-            doc = json.load(f)
-        if doc["state"] == "staged":
-            shutil.rmtree(txn_dir)
-            out["rolled_back"] += 1
-        else:  # committing: finish the moves, then the offset commits
-            for mv in doc["moves"]:
-                if os.path.exists(mv["src"]) and not os.path.exists(mv["dst"]):
-                    os.rename(mv["src"], mv["dst"])
-            _apply_acks(engine, doc.get("acks", []))
-            shutil.rmtree(txn_dir)
-            out["rolled_forward"] += 1
+        fd = _lock(txn_dir, block=False)
+        if fd is None:
+            continue  # its owner is running
+        try:
+            if not os.path.isdir(txn_dir):
+                continue  # finished, or its owner died before staging
+            jpath = _journal_path(txn_dir)
+            if not os.path.exists(jpath):
+                shutil.rmtree(txn_dir, ignore_errors=True)  # pre-journal debris
+                continue
+            with open(jpath) as f:
+                doc = json.load(f)
+            if doc["state"] == "staged":
+                shutil.rmtree(txn_dir)
+                out["rolled_back"] += 1
+            else:  # committing: finish the moves, then the offset commits
+                for mv in doc["moves"]:
+                    if os.path.exists(mv["src"]) and not os.path.exists(mv["dst"]):
+                        os.rename(mv["src"], mv["dst"])
+                _apply_acks(engine, doc.get("acks", []))
+                shutil.rmtree(txn_dir)
+                out["rolled_forward"] += 1
+        finally:
+            _unlock(txn_dir, fd)
     return out
 
 
@@ -126,8 +172,10 @@ def publish_transaction(
     they are monotonic upserts, so re-applying on recovery is
     idempotent."""
     recover_transactions(engine)
-    txn_dir = os.path.join(_txn_root(engine), uuid.uuid4().hex)
-    os.makedirs(txn_dir)
+    txn_id = uuid.uuid4().hex
+    txn_dir = os.path.join(_txn_root(engine), txn_id)
+    os.makedirs(_txn_root(engine), exist_ok=True)
+    owner = _lock(txn_dir, block=True)
     moves: list[dict] = []
     counts: dict[str, int] = {}
     # single-writer guard on every involved topic for the whole
@@ -135,6 +183,7 @@ def publish_transaction(
     # concurrent transaction touching an overlapping topic set)
     locks = contextlib.ExitStack()
     try:
+        os.makedirs(txn_dir)
         # acquisition INSIDE the try: if the Nth topic's lock times
         # out, locks already entered release via the finally below
         # instead of blocking other writers until the stale-break
@@ -160,34 +209,34 @@ def publish_transaction(
             # is a control-plane batch by contract (bulk corpus loads
             # go through publish_df, whose offset assignment is fully
             # partition-parallel) — so the single task here is bounded
-            # by design, not an accident
-            src = df.select("event", "message", "ts").coalesce(1)
-            src = src.persist()
-            try:
-                # staged segments are invisible to latest(): when the
-                # same topic appears twice in one transaction, offset
-                # the later batch by the rows already staged for it or
-                # the committed log would contain duplicate offsets
-                base = topic.latest() + counts.get(name, 0)
-                out = _assign_contiguous_ids(src, base)
-                out = out.select(
-                    F.col("offset"),
-                    F.col("ts").cast("timestamp").alias("ts"),
-                    F.col("event").cast("string").alias("event"),
-                    F.col("message").cast("string").alias("message"),
-                )
-                stage_sub = os.path.join(txn_dir, f"t{i}")
-                out.write.mode("overwrite").parquet(stage_sub)
-            finally:
-                src.unpersist()
-            staged = segment_records(stage_sub)
+            # by design, not an accident.  Staged segments are
+            # invisible to latest(): when the same topic appears twice
+            # in one transaction, offset the later batch by the rows
+            # already staged for it or the committed log would contain
+            # duplicate offsets
+            out = _offsets_in_one_partition(
+                df.select("event", "message", "ts"),
+                topic.latest() + counts.get(name, 0),
+            ).select(
+                F.col("offset"),
+                F.col("ts").cast("timestamp").alias("ts"),
+                F.col("event").cast("string").alias("event"),
+                F.col("message").cast("string").alias("message"),
+            )
+            stage_sub = os.path.join(txn_dir, f"t{i}")
+            out.write.mode("overwrite").parquet(stage_sub)
+            # an empty payload writes one 0-row file: it holds no
+            # offsets, so it stays out of the log
+            staged = [r for r in segment_records(stage_sub) if r["num_rows"]]
             for j, rec in enumerate(staged):
                 moves.append(
                     {
                         "src": rec["path"],
+                        # one commit group per staged payload
+                        # (topic_log._segment_uuid), for retention and fsck
                         "dst": os.path.join(
                             topic.log_dir,
-                            f"part-txn{os.path.basename(txn_dir)}-{i}-{j}.parquet",
+                            f"part-{j:05d}-txn{txn_id}-{i}.parquet",
                         ),
                     }
                 )
@@ -212,6 +261,8 @@ def publish_transaction(
             if _crash_after == k:
                 raise RuntimeError(f"simulated crash after {k} moves")
             os.rename(mv["src"], mv["dst"])
+        if _crash_after == len(moves):
+            raise RuntimeError(f"simulated crash after {len(moves)} moves")
         _apply_acks(engine, ack_docs)
         shutil.rmtree(txn_dir)
         return counts
@@ -227,6 +278,7 @@ def publish_transaction(
         raise
     finally:
         locks.close()
+        _unlock(txn_dir, owner)
 
 
 # ---------------------------------------------------------------- oracle query

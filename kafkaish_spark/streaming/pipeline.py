@@ -1,31 +1,50 @@
-"""Topic-to-topic streaming pipelines (the Kafka-Streams shape).
+"""Topic-to-topic pipelines (the Kafka-Streams shape).
 
 The reference can only move data topic->subscriber; re-publishing a
 transformed stream means user code consuming and calling publish by
-hand.  Here a pipeline is one checkpointed streaming query whose sink
-is another topic's publish path: read topic A, transform with any
-DataFrame logic, append to topic B with fresh contiguous offsets.
+hand.  Here a pipe is one more follower of the source topic
+(``streaming.subscribe``): each batch after its cursor becomes a lazy
+frame with ``Topic.stream()``'s columns, ``transform`` maps it, and ONE
+``publish_transaction`` appends the result to the sink with fresh
+contiguous offsets AND acks the batch's end offset on the source — the
+sink's output and the source position commit together, as in the
+Structured Streaming paper's end-to-end exactly-once.
 
-Delivery is **effectively-once** end to end via the standard
-foreachBatch idempotency pattern: the sink records the last published
-micro-batch id; a batch replayed after a crash (same id) is skipped
-instead of re-appended.  The marker write happens after the publish,
-so the residual failure window (publish committed, marker lost)
-degrades to at-least-once — same class as transactional-outbox
-without the transaction.  At 100 TB each hop is an independent query
-with its own parallelism and checkpoint; hops compose into DAGs.
+Delivery is exactly-once end to end.  A crash before the transaction's
+commit point rolls it back: the sink is untouched, the position too,
+and the batch is planned again.  A crash after it rolls forward: the
+sink rows and the position both land.  ``pipe()`` resolves crashed
+transactions before its follower reads the position, so a batch
+rolled forward is never published a second time.
+
+The position is the source's ack file under a durable name scoped by
+the sink, ``<name>@<sink>`` (``Subscription.name``): ``(sink, name)``
+is a pipe's identity, so ``pipe(A, C)`` and ``pipe(A, D)`` never share
+a position, and a new pipe starts at the source's first offset.  A
+batch is bounded to ``DEFAULT_CALLBACK_MAX_BYTES`` of source segments,
+since a transaction stages each payload in one task.  ``transform``
+runs per batch, so it must be stateless; a stateful topic->topic flow
+is a user ``Topic.stream()`` query into ``writeStream.format(
+"kafkaish")``, the exactly-once epoch sink of ``sources.pyds``.  Hops
+compose into DAGs, each with its own follower and position.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from kafkaish_spark.sources.topic_log import Topic
-from kafkaish_spark.streaming.subscribe import Subscription
+from kafkaish_spark.sources.topic_log import Engine, Topic, writer_lock
+from kafkaish_spark.sources.transactions import publish_transaction, recover_transactions
+from kafkaish_spark.streaming.subscribe import (
+    DEFAULT_CALLBACK_MAX_BYTES,
+    Subscription,
+    _Follower,
+    _frame_delivery,
+    _Query,
+)
 
 
 def pipe(
@@ -37,53 +56,67 @@ def pipe(
     event: str | None = None,
     available_now: bool = True,
 ) -> Subscription:
-    """Stream ``source`` into ``sink``, optionally transforming the
-    envelope frame in between.
+    """Stream ``source`` into ``sink``, optionally transforming each
+    batch's envelope frame in between.
 
-    ``transform`` receives the envelope DataFrame (offset/ts/event/
-    message) and must return a frame with at least (event, message)
-    — same contract as ``Topic.publish_df``.  The checkpoint lives
-    under the SINK topic keyed by ``name``, so each pipeline resumes
-    independently."""
+    ``transform`` receives a batch's envelope DataFrame (offset/ts/
+    event/message, only ``event`` rows when given) and must return a
+    frame with at least (event, message) — same contract as
+    ``Topic.publish_df``; it sees one batch at a time and keeps no
+    state across batches.  The batch arrives in offset order, in one
+    partition, so the sink keeps the source's order through a
+    ``transform`` that keeps row order (select, filter, withColumn).
+    ``available_now=True`` drains up to the source's tail at call time,
+    then stops; False follows the source.
+
+    Raises ``ValueError`` for a date-partitioned sink, for a source and
+    sink under different engine roots, and for a sink holding the
+    Spark checkpoint of a pipe of this name from an earlier version
+    while the source has no position for it."""
     if name is None:
         # default includes the source so pipe(A, C) and pipe(B, C)
-        # never collide on one checkpoint/marker under the sink
+        # never collide on one position
         name = f"pipe_from_{source.name}"
-    stream = source.stream(event=event)
-    if transform is not None:
-        stream = transform(stream)
+    durable = f"{name}@{sink.name}"
+    root = os.path.dirname(os.path.abspath(sink.root))
+    if os.path.dirname(os.path.abspath(source.root)) != root:
+        raise ValueError(f"pipe {name!r}: source and sink are under different engine roots")
+    if sink.partitioned:
+        raise ValueError(f"pipe {name!r}: sink {sink.name!r} is date-partitioned")
+    old = os.path.join(sink.root, "_pipelines", name, "checkpoint")
+    positions = (source._ack_path(durable), source._start_path(durable))
+    if os.path.isdir(old) and not any(map(os.path.exists, positions)):
+        raise ValueError(
+            f"pipe {name!r}: {old} is an earlier pipe's checkpoint and {source.name!r} "
+            f"has no position for it: run source.ack({durable!r}, N) with N the last "
+            f"source offset that pipe published, or remove {old} to republish the source"
+        )
+    engine = Engine(sink.spark, root)
+    # a crashed batch past its commit point lands, rows and ack, before
+    # the follower reads its position
+    recover_transactions(engine)
 
-    checkpoint = os.path.join(sink.root, "_pipelines", name, "checkpoint")
-    # The marker lives INSIDE the checkpoint dir: resetting the
-    # checkpoint (which restarts batch ids at 0) removes the marker
-    # with it — a surviving marker would silently skip batches 0..N.
-    marker = os.path.join(checkpoint, "kafkaish_last_batch.json")
-    os.makedirs(checkpoint, exist_ok=True)
+    def deliver(reads: list[tuple], batch_id: int) -> int:
+        end = reads[-1][2]
 
-    def deliver(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(marker):
-            try:
-                with open(marker) as fh:
-                    if batch_id <= json.load(fh)["batch_id"]:
-                        return  # replayed batch already published: skip
-            except (json.JSONDecodeError, KeyError, ValueError):
-                # torn write from a crash mid-marker: treat as absent
-                # (degrades this batch to at-least-once, never wedges)
-                pass
-        if not batch_df.isEmpty():
-            cols = [c for c in ("event", "message", "ts") if c in batch_df.columns]
-            sink.publish_df(batch_df.select(*cols))
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        os.replace(tmp, marker)
+        def commit(df: DataFrame, _batch_id: int) -> None:
+            # the frame's rows come in no particular order, and the
+            # transaction stages one partition anyway: sort it there
+            out = df.coalesce(1).sortWithinPartitions("offset")
+            if transform is not None:
+                out = transform(out)
+            publish_transaction(
+                engine, [(sink.name, out)], acks=[(source.name, durable, end)]
+            )
+            if sink.retention_bytes is not None:
+                with writer_lock(sink.root, what="retention"):
+                    sink.enforce_retention(sink.retention_bytes)
 
-    writer = (
-        stream.writeStream.foreachBatch(deliver)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+        return _frame_delivery(source, commit, event)(reads, batch_id)
+
+    query = _Query()
+    # replay=True: a new pipe starts at the source's first offset
+    _Follower(
+        query, source, deliver, durable, True, available_now, DEFAULT_CALLBACK_MAX_BYTES, None
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return Subscription(writer.start(), name, checkpoint)
+    return Subscription(query, durable)

@@ -2,9 +2,10 @@
 
 Re-expresses the subscription machinery of the reference, kafkaish
 (src/topic.js).  Every subscription — per-message ``subscribe``,
-DataFrame ``subscribe_batches`` and each shard of a consumer-group
-member (``streaming.groups``) — is a driver-side FOLLOWER whose cursor
-is a message offset: the reference's tailable cursor (src/topic.js:48-61)
+DataFrame ``subscribe_batches``, each shard of a consumer-group member
+(``streaming.groups``) and a topic->topic ``pipe``
+(``streaming.pipeline``) — is a driver-side FOLLOWER whose cursor is a
+message offset: the reference's tailable cursor (src/topic.js:48-61)
 with no Spark streaming query or checkpoint behind it:
 
 - ephemeral subscribe (join, :90-117)      -> a follower from the tail
@@ -52,11 +53,14 @@ end`` on dense segments, the row count of a sparse one
 fails the batch unacked.
 Then the ``event`` filter applies and the callbacks run in offset
 order.  ``subscribe_batches`` and group members hand ``batch_fn`` a
-lazy DataFrame over the planned segment files, each offset once.
+lazy DataFrame over the planned segment files, each offset once; a
+``pipe`` publishes that frame, transformed, in a transaction that also
+acks the batch.
 
 Delivery contract: per-subscriber total order by offset, at-least-once
-for durable names (an unacked batch is redelivered on resume),
-at-most-once-from-now for ephemeral subscribers.
+for durable names (an unacked batch is redelivered on resume; a pipe's
+transaction makes it exactly-once), at-most-once-from-now for
+ephemeral subscribers.
 """
 
 from __future__ import annotations
@@ -87,15 +91,14 @@ from kafkaish_spark.streaming.monitor import report_batch
 
 class Subscription:
     """Handle over a running subscription (ref: the object returned by
-    join/replay with an ``unsubscribe`` member, src/topic.js:110-116):
-    a follower, a group member's followers, or a ``pipe()`` streaming
-    query.  Only a pipe has a ``checkpoint`` (always named, under its
-    sink); a follower's position is its JSON ack file."""
+    join/replay with an ``unsubscribe`` member, src/topic.js:110-116)
+    over a subscription's followers: ``subscribe``, ``subscribe_batches``,
+    a group member or a ``pipe()``.  ``name`` is None for an ephemeral
+    subscriber; a durable one's position is a JSON ack file."""
 
-    def __init__(self, query, name: str | None, checkpoint: str | None = None):
+    def __init__(self, query, name: str | None):
         self.query = query
         self.name = name
-        self.checkpoint = checkpoint
 
     def unsubscribe(self) -> None:
         self.query.stop()

@@ -311,39 +311,39 @@ def test_topic_to_topic_pipeline(engine, spark, tmp_path):
     assert msgs == ["A", "B", "C"]
 
 
-def test_pipeline_skips_replayed_batch(engine, spark, tmp_path):
-    """Effectively-once: a micro-batch replayed after a crash between
-    publish and checkpoint commit (commit file lost, marker intact)
-    must not re-publish."""
-    import os
+def test_pipeline_skips_replayed_batch(engine, spark, monkeypatch):
+    """Exactly-once across a crash: the pipe's batch transaction is
+    killed before its commit point ("staged": rolled back), after it
+    with no segment renamed (0: rolled forward), and between the sink
+    rename and the source ack (1).  Each resumed pipe leaves exactly
+    one copy of every source row in the sink: a rolled-forward batch
+    lands, rows and ack, before the pipe reads its position."""
+    import functools
 
+    from kafkaish_spark.sources.transactions import publish_transaction
+    from kafkaish_spark.streaming import pipeline
     from kafkaish_spark.streaming.pipeline import pipe
 
-    src = _seed_topic(engine, "idem_src", [("e", "x", "2024-01-01 10:00:00")])
+    src = _seed_topic(engine, "idem_src", [("e", "x0", "2024-01-01 10:00:00")])
     dst = engine.prepare_topic("idem_dst")
     pipe(src, dst, name="p").await_termination()
     assert dst.latest() == 1
 
-    # simulate the crash window: batch 0 was published and the marker
-    # written, but the streaming commit was lost -> the restarted query
-    # re-runs batch 0; the marker must block the duplicate publish
-    ckpt = os.path.join(dst.root, "_pipelines", "p", "checkpoint")
-    os.remove(os.path.join(ckpt, "commits", "0"))
-    # a Hadoop checksum sidecar exists only if the session's local file
-    # system writes them (get_spark's raw local file system does not)
-    crc = os.path.join(ckpt, "commits", ".0.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    pipe(src, dst, name="p").await_termination()
-    assert dst.latest() == 1  # no duplicate
-
-    # a full checkpoint reset removes the marker WITH it: everything
-    # reprocesses (at-least-once duplicates, never silent loss)
-    import shutil
-
-    shutil.rmtree(ckpt)
-    pipe(src, dst, name="p").await_termination()
-    assert dst.latest() == 2
+    for i, crash in enumerate(("staged", 0, 1), start=1):
+        src.publish_batch([("e", f"x{i}")])
+        monkeypatch.setattr(
+            pipeline,
+            "publish_transaction",
+            functools.partial(publish_transaction, _crash_after=crash),
+        )
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipe(src, dst, name="p").await_termination()
+        monkeypatch.setattr(pipeline, "publish_transaction", publish_transaction)
+        pipe(src, dst, name="p").await_termination()
+        rows = dst.replay(since=0).collect()
+        assert [r["offset"] for r in rows] == list(range(1, i + 2)), crash
+        assert [r["message"] for r in rows] == [f"x{k}" for k in range(i + 1)]
+        assert src.last_ack("p@idem_dst") == i + 1
 
 
 def test_stream_stream_left_outer_join_emits_unmatched(engine, spark, tmp_path):

@@ -356,47 +356,63 @@ def test_attach_to_long_log_delivers_within_two_batches(engine):
     assert topic.last_ack("tail") == off
 
 
-def test_checkpoint_commits_write_no_checksum_sidecars(engine):
+def test_checkpoint_commits_write_no_checksum_sidecars(engine, tmp_path):
     """The engine session commits streaming checkpoints through the raw
-    local file system: after three triggers of a durable continuous
-    ``pipe()`` its offset WAL and commit log hold no Hadoop ``.crc``
-    sidecars (each sidecar cost a forked ``chmod``).  The checkpoint
-    still resumes: after a stop and two more publishes, a resumed pipe
-    delivers exactly the two new messages, in order."""
+    local file system: after three triggers of a continuous user
+    ``source.stream()`` query into ``writeStream.format("kafkaish")``
+    its offset WAL and commit log hold no Hadoop ``.crc`` sidecars (each
+    sidecar cost a forked ``chmod``).  The checkpoint still resumes:
+    after a stop and two more publishes, the resumed query delivers
+    exactly the two new messages, in order."""
     import os
     import time
 
-    from kafkaish_spark.streaming.pipeline import pipe
+    from kafkaish_spark.sources.pyds import register
 
+    register(engine.spark)
     source = engine.prepare_topic("s_nocrc")
     sink = engine.prepare_topic("s_nocrc_sink")
+    checkpoint = str(tmp_path / "nocrc_ckpt")
 
     def numbers(since=0):
         return [json.loads(r["message"])["number"] for r in sink.replay(since).collect()]
 
-    sub = pipe(source, sink, name="w", available_now=False)
+    def relay(available_now):
+        writer = (
+            source.stream()
+            .select("event", "message")
+            .writeStream.format("kafkaish")
+            .option("path", engine.root)
+            .option("topic", sink.name)
+            .option("checkpointLocation", checkpoint)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+    query = relay(available_now=False)
     try:
         for i in range(1, 4):
             source.publish("ev", {"number": i})
             deadline = time.time() + 120
             while sink.latest() < i and time.time() < deadline:
                 time.sleep(0.05)
-        sub.query.processAllAvailable()
+        query.processAllAvailable()
     finally:
-        sub.unsubscribe()
+        query.stop()
     assert numbers() == [1, 2, 3]
 
     for log in ("offsets", "commits"):
-        names = os.listdir(os.path.join(sub.checkpoint, log))
+        names = os.listdir(os.path.join(checkpoint, log))
         assert len([n for n in names if n.isdigit()]) >= 3, names
         assert not [n for n in names if n.endswith(".crc")], names
 
     source.publish_batch([("ev", {"number": 4}), ("ev", {"number": 5})])
-    resumed = pipe(source, sink, name="w")
+    resumed = relay(available_now=True)
     try:
-        resumed.await_termination()
+        resumed.awaitTermination(120)
     finally:
-        resumed.unsubscribe()
+        resumed.stop()
     assert numbers(since=3) == [4, 5]
     assert sink.latest() == 5
 
@@ -570,7 +586,6 @@ def test_ephemeral_unsubscribe_removes_checkpoint(engine):
             sub = sub_fn(topic, deliver, name=name, replay=True)
             sub.await_termination()
             sub.unsubscribe()
-            assert sub.checkpoint is None
     new = set(os.listdir(tempfile.gettempdir())) - before
     assert not [d for d in new if d.startswith("kafkaish_ephemeral_")], new
     assert not [

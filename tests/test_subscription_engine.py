@@ -1,8 +1,10 @@
 """Every subscription API on one follower engine (streaming/subscribe.py):
-``subscribe_batches`` and consumer-group members follow the message-offset
-cursor, and the JSON ack file is every subscriber's only position."""
+``subscribe_batches``, consumer-group members and ``pipe`` follow the
+message-offset cursor, and the JSON ack file is every subscriber's only
+position."""
 
 import json
+import os
 import threading
 import time
 
@@ -308,3 +310,135 @@ def test_group_member_progress_spans_shards(engine):
     assert sorted(p["numInputRows"] for p in progress) == [1, 1]
     assert sub.progress() == progress[-1]
     json.dumps(progress)
+
+
+def _numbers(topic):
+    return [json.loads(r["message"])["number"] for r in topic.replay(since=0).collect()]
+
+
+def test_pipe_is_a_follower_with_its_position_on_the_source(engine, spark):
+    """A continuous pipe starts no Spark streaming query and creates
+    nothing under the sink's ``_pipelines``: its position is its ack
+    file on the source, under a name scoped by the sink, so one pipe
+    name into two sinks keeps two positions."""
+    from kafkaish_spark.streaming.pipeline import pipe
+
+    src = engine.prepare_topic("p_src")
+    c, d = engine.prepare_topic("p_c"), engine.prepare_topic("p_d")
+    src.publish_batch([("ev", {"number": 1}), ("ev", {"number": 2})])
+    queries = {q.id for q in spark.streams.active}
+    sub = pipe(src, c, name="p", available_now=False)
+    try:
+        assert _wait_for(lambda: c.latest() == 2)
+        src.publish("ev", {"number": 3})
+        assert _wait_for(lambda: c.latest() == 3)
+        assert {q.id for q in spark.streams.active} == queries
+    finally:
+        sub.unsubscribe()
+    assert sub.name == "p@p_c"
+    assert src.last_ack("p@p_c") == 3
+    assert not os.path.exists(os.path.join(c.root, "_pipelines"))
+    assert _numbers(c) == [1, 2, 3]
+
+    pipe(src, d, name="p").await_termination()
+    assert _numbers(d) == [1, 2, 3]  # a new (sink, name) starts at offset 0
+    assert src.last_ack("p@p_d") == 3
+    assert src.last_ack("p@p_c") == 3
+
+
+def test_compact_small_under_a_continuous_pipe_is_exactly_once(engine):
+    """``compact_small`` merges the source's one-message segments under
+    a pipe.  The continuous pipe's cursor starts inside a merged file;
+    its first batch is held in ``transform`` while a compaction swaps
+    that batch's files, so the batch is planned again; later
+    compactions race live delivery.  The sink holds every source
+    message exactly once, in source order."""
+    from kafkaish_spark.streaming.pipeline import pipe
+
+    src = engine.prepare_topic("p_live_compact")
+    sink = engine.prepare_topic("p_live_compact_sink")
+    for i in range(9):
+        src.publish("ev", {"number": i})
+    pipe(src, sink, name="c").await_termination()
+    for i in range(9, 40):
+        src.publish("ev", {"number": i})
+    assert src.compact_small() > 0  # the cursor, 9, is inside a merged file
+    for i in range(40, 50):
+        src.publish("ev", {"number": i})
+    held, compacted = threading.Event(), threading.Event()
+
+    def hold(df):
+        if not compacted.is_set() and 10 in _offsets(df):
+            held.set()
+            compacted.wait(120)
+        return df
+
+    sub = pipe(src, sink, hold, name="c", available_now=False)
+    try:
+        assert held.wait(120)
+        assert src.compact_small() > 0
+        compacted.set()
+        for _round in range(2):
+            for i in range(10):
+                src.publish("ev", {"number": 100 + i})
+            assert src.compact_small() > 0
+        tail = src.latest()
+        assert _wait_for(lambda: src.last_ack("c@p_live_compact_sink") == tail, 120)
+    finally:
+        compacted.set()
+        sub.unsubscribe()
+    assert [r["offset"] for r in sink.replay(since=0).collect()] == list(
+        range(1, tail + 1)
+    )
+    assert _numbers(sink) == _numbers(src)
+
+
+def test_pipe_limits_are_raised_at_call_time(engine, spark, tmp_path):
+    """A date-partitioned sink, a sink under another engine root, and a
+    sink holding an earlier pipe's Spark checkpoint while the source
+    has no position for that pipe each raise before anything runs.
+    Acking the old pipe's last published offset upgrades it: the pipe
+    resumes after that offset."""
+    from kafkaish_spark.sources.topic_log import Engine
+    from kafkaish_spark.streaming.pipeline import pipe
+
+    src = engine.prepare_topic("p_lim")
+    src.publish_batch([("ev", {"number": i}) for i in range(1, 4)])
+    with pytest.raises(ValueError, match="date-partitioned"):
+        pipe(src, engine.prepare_topic("p_lim_part", partitioned=True))
+    far = Engine(spark, str(tmp_path / "far")).prepare_topic("p_lim_far")
+    with pytest.raises(ValueError, match="different engine roots"):
+        pipe(src, far)
+
+    sink = engine.prepare_topic("p_lim_sink")
+    os.makedirs(os.path.join(sink.root, "_pipelines", "up", "checkpoint"))
+    with pytest.raises(ValueError, match=r"source\.ack\('up@p_lim_sink', N\)"):
+        pipe(src, sink, name="up")
+    assert sink.latest() == 0
+    assert src.resume_offset("up@p_lim_sink") == 0
+    src.ack("up@p_lim_sink", 2)  # the old pipe had published offsets 1..2
+    pipe(src, sink, name="up").await_termination()
+    assert _numbers(sink) == [3]
+
+
+def test_pipe_keeps_sink_retention_and_acks_an_emptied_batch(engine):
+    """The sink handle's ``retention_bytes`` applies after each pipe
+    batch, as it does after ``publish_df``; a batch the ``event``
+    filter empties adds no segment to the sink but still moves the
+    pipe's position."""
+    from kafkaish_spark.sources.topic_log import segment_files
+    from kafkaish_spark.streaming.pipeline import pipe
+
+    src = engine.prepare_topic("p_ret")
+    sink = engine.prepare_topic("p_ret_sink", retention_bytes=1)
+    for i in range(3):
+        src.publish("ev", {"number": i})
+        pipe(src, sink, name="r").await_termination()
+    segments = segment_files(sink.log_dir)
+    assert len(segments) == 1 and sink.latest() == 3
+
+    src.publish("other", {"number": 9})
+    pipe(src, sink, name="r", event="ev").await_termination()
+    assert segment_files(sink.log_dir) == segments
+    assert sink.latest() == 3
+    assert src.last_ack("r@p_ret_sink") == 4

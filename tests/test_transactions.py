@@ -177,3 +177,103 @@ def test_same_topic_twice_in_one_transaction_gets_unique_offsets(
     rows = engine.prepare_topic("txn_dup").replay(since=0).collect()
     assert [r["offset"] for r in rows] == [1, 2, 3]
     assert [r["message"] for r in rows] == ["m1", "m2", "m3"]
+
+
+def test_recovery_leaves_a_live_transaction_alone(engine, spark, monkeypatch):
+    """Recovery resolves only transactions whose owner is gone: while
+    one transaction is paused between its staging write and its
+    journal, another thread's ``recover_transactions`` leaves its
+    directory alone, and the transaction then commits its row."""
+    import os
+    import threading
+
+    from kafkaish_spark.sources import transactions as T
+
+    staged, resume = threading.Event(), threading.Event()
+    real = T.segment_records
+
+    def paused(root):
+        staged.set()
+        assert resume.wait(120)
+        return real(root)
+
+    monkeypatch.setattr(T, "segment_records", paused)
+    result = {}
+    owner = threading.Thread(
+        target=lambda: result.update(
+            T.publish_transaction(engine, [("txn_live", _df(spark, [("e", "m")]))])
+        )
+    )
+    owner.start()
+    try:
+        assert staged.wait(120)
+        assert T.recover_transactions(engine) == {
+            "rolled_back": 0,
+            "rolled_forward": 0,
+        }
+        assert [
+            n for n in os.listdir(T._txn_root(engine)) if not n.endswith(".lock")
+        ], "recovery removed a live transaction"
+    finally:
+        resume.set()
+        owner.join(120)
+    assert result == {"txn_live": 1}
+    rows = engine.prepare_topic("txn_live").replay(since=0).collect()
+    assert [(r["offset"], r["message"]) for r in rows] == [(1, "m")]
+    assert os.listdir(T._txn_root(engine)) == []  # lock file gone too
+
+
+def test_concurrent_transactions_on_disjoint_topics(engine, spark):
+    """Three threads each commit ten one-row transactions to a topic of
+    their own under one engine root.  Every transaction starts with a
+    recovery while the others are live, and none may remove or roll
+    forward another's: all 30 commit one row, and each topic holds
+    offsets 1..10 in its thread's order."""
+    import threading
+
+    from kafkaish_spark.sources.transactions import publish_transaction
+
+    counts, errors = [], []
+
+    def run(t):
+        try:
+            for k in range(10):
+                counts.append(
+                    publish_transaction(
+                        engine, [(f"txn_par{t}", _df(spark, [("e", f"{t}-{k}")]))]
+                    )
+                )
+        except Exception as exc:
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(t,)) for t in range(3)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(600)
+    assert errors == []
+    assert len(counts) == 30 and all(list(c.values()) == [1] for c in counts)
+    for t in range(3):
+        rows = engine.prepare_topic(f"txn_par{t}").replay(since=0).collect()
+        assert [(r["offset"], r["message"]) for r in rows] == [
+            (k + 1, f"{t}-{k}") for k in range(10)
+        ]
+
+
+def test_empty_payload_writes_no_segment(engine, spark):
+    """An empty frame stages a 0-row file that holds no offsets: it
+    stays out of the log, so the topic keeps its segments, and the
+    transaction's acks still land."""
+    from kafkaish_spark.sources.topic_log import segment_files
+    from kafkaish_spark.sources.transactions import publish_transaction
+
+    topic = engine.prepare_topic("txn_empty")
+    topic.publish("e", {"pre": 1})
+    before = segment_files(topic.log_dir)
+    counts = publish_transaction(
+        engine, [("txn_empty", _df(spark, []))], acks=[("txn_empty", "g", 1)]
+    )
+    assert counts == {"txn_empty": 0}
+    assert segment_files(topic.log_dir) == before
+    assert topic.latest() == 1
+    assert topic.last_ack("g") == 1
