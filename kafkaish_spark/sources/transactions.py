@@ -20,7 +20,10 @@ the classic two-phase journal:
 transactions are dropped wholesale (no reader ever saw them),
 ``committing`` transactions finish their remaining renames (the data
 is durable and possibly partially visible — roll-forward is the only
-choice that preserves atomicity without un-publishing).
+choice that preserves atomicity without un-publishing).  A staged
+segment whose offsets another writer took since the crash (``publish``
+and ``publish_df`` do not recover first) is re-offset after the tail
+before its rename, so the log's offsets stay unique and contiguous.
 ``publish_transaction`` runs recovery first, so a crashed process's
 debris never blocks or corrupts the next writer.
 
@@ -58,7 +61,9 @@ from pyspark.sql import functions as F
 
 from kafkaish_spark.sources.topic_log import (
     Engine,
+    _footer_record,
     _offsets_in_one_partition,
+    log_tail,
     segment_records,
     writer_lock,
 )
@@ -137,13 +142,36 @@ def recover_transactions(engine: Engine) -> dict:
             else:  # committing: finish the moves, then the offset commits
                 for mv in doc["moves"]:
                     if os.path.exists(mv["src"]) and not os.path.exists(mv["dst"]):
-                        os.rename(mv["src"], mv["dst"])
+                        _land(mv)
                 _apply_acks(engine, doc.get("acks", []))
                 shutil.rmtree(txn_dir)
                 out["rolled_forward"] += 1
         finally:
             _unlock(txn_dir, fd)
     return out
+
+
+def _land(mv: dict) -> None:
+    """Rename a crashed transaction's staged segment into its log.
+    Staged rows are invisible to ``latest()``, so a writer that appended
+    to the topic since the crash took their offsets: under the topic's
+    writer lock, a segment that would collide is first re-offset after
+    the current tail, its rows kept contiguous and in staged order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    log_dir = os.path.dirname(mv["dst"])
+    with writer_lock(os.path.dirname(log_dir), what="recovery"):
+        shift = log_tail(segment_records(log_dir)) + 1 - _footer_record(mv["src"])["min_off"]
+        if shift > 0:
+            tbl = pq.read_table(mv["src"])
+            i = tbl.schema.get_field_index("offset")
+            moved = pc.add(tbl["offset"], pa.scalar(shift, pa.int64()))
+            tmp = f"{mv['src']}.tmp"
+            pq.write_table(tbl.set_column(i, tbl.field(i), moved), tmp, compression="snappy")
+            os.replace(tmp, mv["src"])
+        os.rename(mv["src"], mv["dst"])
 
 
 def _apply_acks(engine: Engine, ack_docs: list[dict]) -> None:

@@ -656,6 +656,12 @@ def _read_columns(reads: list[tuple], batch_id: int):
     return offsets, events, messages
 
 
+def _batch_rows(reads: list[tuple]) -> int:
+    """A batch's row count from its footers: a sparse segment read in
+    part counts its offset range."""
+    return sum(upto - after if n is None else n for _, after, upto, n, _ in reads)
+
+
 def _frame_delivery(
     topic: Topic, batch_fn: Callable[[DataFrame, int], None], event: str | None
 ) -> Callable:
@@ -687,9 +693,7 @@ def _frame_delivery(
             # exist after the listing (a later vanish fails the read)
             if all(map(os.path.exists, paths)):
                 batch_fn(df, batch_id)
-                # the footers' count: a sparse segment read in part
-                # counts its offset range
-                return sum(upto - after if n is None else n for _, after, upto, n, _ in reads)
+                return _batch_rows(reads)
         except Exception:
             if all(map(os.path.exists, paths)):
                 raise

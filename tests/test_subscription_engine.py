@@ -393,6 +393,69 @@ def test_compact_small_under_a_continuous_pipe_is_exactly_once(engine):
     assert _numbers(sink) == _numbers(src)
 
 
+def test_pipe_crash_then_direct_sink_publish_keeps_sink_offsets_unique(
+    engine, monkeypatch
+):
+    """A pipe batch killed after its transaction's commit point leaves
+    its sink segment staged, where ``latest()`` does not see it; a
+    direct ``publish`` to the sink then takes that offset.  The next
+    ``pipe()`` lands the batch after the direct row: the sink's offsets
+    are unique and contiguous, and every source row is there once."""
+    import functools
+
+    from kafkaish_spark.sources.transactions import publish_transaction
+    from kafkaish_spark.streaming import pipeline
+
+    src = engine.prepare_topic("p_crash_src")
+    sink = engine.prepare_topic("p_crash_sink")
+    for i in range(3):
+        src.publish("ev", {"number": i})
+    monkeypatch.setattr(
+        pipeline, "publish_transaction", functools.partial(publish_transaction, _crash_after=0)
+    )
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipeline.pipe(src, sink, name="k").await_termination()
+    monkeypatch.setattr(pipeline, "publish_transaction", publish_transaction)
+    sink.publish("ev", {"number": -1})
+    pipeline.pipe(src, sink, name="k").await_termination()
+    assert [r["offset"] for r in sink.replay(since=0).collect()] == [1, 2, 3, 4]
+    assert _numbers(sink) == [-1, 0, 1, 2]
+    assert src.last_ack("k@p_crash_sink") == 3
+
+
+def test_pipe_batch_failed_past_its_commit_point_is_not_planned_again(
+    engine, monkeypatch
+):
+    """A batch's transaction fails after its commit point while a
+    compaction swaps the batch's source segments.  The vanished files
+    would have the batch planned again; the pipe sees that recovery
+    landed it, rows and ack, and moves on: one copy of each row."""
+    from kafkaish_spark.sources.transactions import publish_transaction
+    from kafkaish_spark.streaming import pipeline
+
+    src = engine.prepare_topic("p_past_src")
+    sink = engine.prepare_topic("p_past_sink")
+    for i in range(5):
+        src.publish("ev", {"number": i})
+    calls = []
+
+    def fails_once(eng, publishes, acks=None):
+        calls.append(acks)
+        if len(calls) > 1:
+            return publish_transaction(eng, publishes, acks=acks)
+        try:
+            publish_transaction(eng, publishes, acks=acks, _crash_after=0)
+        finally:
+            assert src.compact_small() > 0
+
+    monkeypatch.setattr(pipeline, "publish_transaction", fails_once)
+    pipeline.pipe(src, sink, name="v").await_termination()
+    assert len(calls) == 1
+    assert [r["offset"] for r in sink.replay(since=0).collect()] == [1, 2, 3, 4, 5]
+    assert _numbers(sink) == [0, 1, 2, 3, 4]
+    assert src.last_ack("v@p_past_sink") == 5
+
+
 def test_pipe_limits_are_raised_at_call_time(engine, spark, tmp_path):
     """A date-partitioned sink, a sink under another engine root, and a
     sink holding an earlier pipe's Spark checkpoint while the source

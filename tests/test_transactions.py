@@ -277,3 +277,38 @@ def test_empty_payload_writes_no_segment(engine, spark):
     assert segment_files(topic.log_dir) == before
     assert topic.latest() == 1
     assert topic.last_ack("g") == 1
+
+
+def test_roll_forward_after_a_direct_publish_keeps_offsets_unique(engine, spark):
+    """A transaction killed past its commit point leaves its segments
+    staged, where ``latest()`` does not see them: a direct ``publish``
+    and a ``publish_df`` in between take their offsets.  Roll-forward
+    lands the staged rows after the tail those writers left, so the
+    log's offsets stay unique and contiguous, and the ack lands too."""
+    from kafkaish_spark.sources.transactions import (
+        publish_transaction,
+        recover_transactions,
+    )
+
+    topic = engine.prepare_topic("txn_race")
+    topic.publish("e", "pre")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        publish_transaction(
+            engine,
+            [
+                ("txn_race", _df(spark, [("e", "t1"), ("e", "t2")])),
+                ("txn_race", _df(spark, [("e", "t3")])),
+            ],
+            acks=[("txn_race", "g", 7)],
+            _crash_after=0,
+        )
+    topic.publish("e", "direct")
+    topic.publish_df(_df(spark, [("e", "df1"), ("e", "df2")]))
+    assert recover_transactions(engine) == {"rolled_back": 0, "rolled_forward": 1}
+    rows = [(r["offset"], r["message"]) for r in topic.replay(since=0).collect()]
+    assert sorted(o for o, _ in rows) == list(range(1, 8))
+    by_offset = dict(rows)
+    assert [by_offset[o] for o in (1, 2)] == ["pre", "direct"]
+    assert sorted(by_offset[o] for o in (3, 4)) == ["df1", "df2"]
+    assert [by_offset[o] for o in (5, 6, 7)] == ["t1", "t2", "t3"]
+    assert topic.latest() == 7 and topic.last_ack("g") == 7
