@@ -201,7 +201,7 @@ def ensure_bucketed_layout(
                     .saveAsTable(name)
                 )
             # verify the rebuild round-trips before stamping reuse
-            # metadata (the swap-validate discipline of topic_log)
+            # metadata (the stage-validate discipline of topic_log's rewrites)
             got = _disk_fingerprints()
             if want is None:
                 want = _want()

@@ -142,7 +142,7 @@ def segment_files(root: str) -> list[str]:
     """Every parquet data file under ``root`` that Spark's own reader
     would read, in path order — the one listing of a log's file set.
     The hidden rule applies at every level BELOW ``root``, so a staging
-    root (``.mirror-stage-*``, ``log.compact.tmp``) lists like the log
+    root (``.mirror-stage-*``, ``log.smallcompact.*.tmp``) lists like the log
     itself, and a task file under ``log/_temporary/`` — in flight or
     aborted — is never part of the log.  A missing root is empty."""
     out = []
@@ -373,35 +373,17 @@ def _small_compaction_gain(
     return gain
 
 
-# dotfile inside a .compact.old staging dir marking that its swap's
-# second rename was reached — see _swap_log_with / vacuum
-_SWAP_MARKER = ".swap_state"
-
 # Test instrumentation: the crash-point sweep (tests/
 # test_vacuum_crash_sweep.py) sets this to a callable that raises at a
-# named protocol step, proving construction+vacuum converge from a
-# crash at EVERY step of the rewrite protocols.  Never set in
-# production; the calls cost one None check each.
+# named step of Topic._rewrite, proving vacuum converges from a crash
+# at EVERY step of the rewrite protocol.  Never set in production; the
+# calls cost one None check each.
 _CRASH_POINT_HOOK = None
 
 
 def _crash_point(name: str) -> None:
     if _CRASH_POINT_HOOK is not None:
         _CRASH_POINT_HOOK(name)
-
-
-def _dir_rows(root: str) -> int:
-    """Total data rows under ``root`` from parquet footers; an
-    UNREADABLE part file counts as data (returns at least 1) so no
-    caller ever treats a possibly-populated directory as empty and
-    deletes over it."""
-    n = 0
-    for path in segment_files(root):
-        try:
-            n += _footer_record(path)["num_rows"]
-        except Exception:
-            return max(n, 1)
-    return n
 
 
 def _prune_empty_parts(root: str) -> None:
@@ -776,31 +758,23 @@ class Topic:
         # (src/topic.js:14 sets it false at construction); Engine
         # .prepare_topic recreates a handle whose flag is set
         self.closed = False
-        # A compaction that crashed between its two renames leaves the
-        # whole pre-swap log in .compact.old and NO log dir; restore it
-        # BEFORE layout detection and _ensure, or the handle would seed
-        # an empty topic (with the wrong layout) over the data (r11;
-        # the explicit maintenance entry point is Topic.vacuum).  The
-        # restore runs under the writer lock (ADVICE r11): two handles
-        # constructed concurrently would both pass the missing-log
-        # check, and the loser's os.replace would raise — and without
-        # the lock the move could also race a LIVE _swap_log_with
-        # between its two renames, stealing the old dir that swap is
-        # about to commit over.  The missing-log state is re-checked
-        # inside the lock, so every lock-taking actor (construction,
-        # vacuum, the swap itself) serializes here; an actor that
-        # bypasses the lock entirely is outside the protocol and any
-        # resulting FileNotFoundError propagates loudly rather than
-        # being guessed around.
-        _old = self.log_dir + ".compact.old"
-        if not os.path.exists(self.log_dir) and os.path.isdir(_old):
-            with writer_lock(self.root, what="init-restore"):
-                if not os.path.exists(self.log_dir) and os.path.isdir(_old):
-                    os.replace(_old, self.log_dir)
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(os.path.join(self.log_dir, _SWAP_MARKER))
-        self.partitioned = partitioned
-        self._redetect_layout()
+        # An earlier version rewrote the log by swapping the whole
+        # directory through log.compact.old; a crash inside that swap
+        # left the only copy of the data there.  Which copy is good is
+        # not for a constructor to guess.
+        old = self.log_dir + ".compact.old"
+        if os.path.exists(old):
+            raise RuntimeError(
+                f"{old} is left by an interrupted compaction of an earlier "
+                f"version: when {self.log_dir} is missing, restore it with "
+                f"`mv {old} {self.log_dir}`; otherwise remove it"
+            )
+        # The on-disk layout wins in BOTH directions: a fresh Engine must
+        # not misread a partitioned topic as flat, and partitioned=True
+        # over an existing FLAT log must not make log() synthesize an
+        # empty frame (latest()==0 would then reassign duplicate offsets)
+        layout = detect_partitioned(self.log_dir)
+        self.partitioned = partitioned if layout is None else layout
         self._ensure()
 
     # -- infra ---------------------------------------------------------
@@ -1082,8 +1056,8 @@ class Topic:
 
     def _read_dir(self, path: str) -> DataFrame:
         """Read ``path`` with the topic's layout rules — the log itself,
-        or a staged rewrite (``_swap_log_with`` validates its tmp dir
-        through this BEFORE swapping it in)."""
+        or a staged rewrite (``_rewrite`` validates its staging dir
+        through this before any file of it goes live)."""
         if self.partitioned:
             if not detect_partitioned(path):
                 # nothing published yet (or an empty rewrite): empty
@@ -1565,7 +1539,7 @@ class Topic:
         scans).  On a flat topic that is exactly ``ceil(log bytes /
         target_bytes)``; on a pub_date-partitioned topic the sum
         carries the one-file-per-date floor the layout imposes, and
-        the range keys below keep buckets date-aligned so the actual
+        the range keys keep buckets date-aligned so the actual
         count exceeds it by at most one straddle file per interior
         date boundary (ADVICE r11).  Pass an explicit ``target_files``
         to override the arithmetic.  Multi-file rewrites are
@@ -1574,30 +1548,22 @@ class Topic:
         contiguous offset range within its directory — replay/seek
         footer pruning keeps working.
 
-        Run this QUIESCED — it is a maintenance op, not a concurrent
-        one: (a) the dir swap is two renames, so a reader listing the
-        log in the gap sees a missing path and fails (an ACTIVE
-        streaming poll would die, not just re-deliver); (b) a resumed
-        subscriber checkpoint tracks *filenames*, so a stream restarted
-        after compaction re-delivers the compacted range —
-        at-least-once, never lost.  Returns the number of data files
+        The rewrite covers the segments listed when it starts and
+        replaces exactly those files (``_rewrite``): a segment
+        published meanwhile stays as it is, and a live follower neither
+        loses nor repeats an offset.  Returns the number of data files
         after compaction."""
+        records = self._segment_stats()
         if target_files is None:
             by_dir: dict[str, int] = {}
-            for s in self._segment_stats():
+            for s in records:
                 if s["num_rows"]:
                     d = os.path.dirname(s["path"])
                     by_dir[d] = by_dir.get(d, 0) + s["size"]
             target_files = sum(
                 _files_for_bytes(b, target_bytes) for b in by_dir.values()
             ) or 1
-        current = self.log().cache()
-        n_before = current.count()  # materialize before the swap
-        frame = (
-            current.withColumn("pub_date", F.to_date("ts"))
-            if self.partitioned
-            else current
-        )
+        n_before = sum(s["num_rows"] for s in records)
 
         def validate(after: DataFrame) -> str | None:
             n_after = after.count()
@@ -1605,12 +1571,8 @@ class Topic:
                 return f"compaction row-count mismatch ({n_after} != {n_before})"
             return None
 
-        self._swap_log_with(
-            frame,
-            target_files,
-            validate,
-            release=lambda: current.unpersist(blocking=True),
-        )
+        frame = self.read_segments([s["path"] for s in records])
+        self._rewrite(records, frame, target_files, validate)
         return len(segment_files(self.log_dir))
 
     def compact_small(
@@ -1638,9 +1600,10 @@ class Topic:
         min offset, whole-group eviction) evict the NEWEST data first.
         Offsets ride in the data — content and order are exactly
         preserved; validation re-reads the merged files and aborts
-        (originals untouched) on any count mismatch.  Like the other
-        compaction ops, run quiesced.  Returns the net reduction in
-        file count.
+        (originals untouched) on any count mismatch.  Each run is one
+        ``_rewrite``, so it is safe under publishers and followers and
+        recovered by ``vacuum`` after a crash.  Returns the net
+        reduction in file count.
 
         Like ``compact``, the packing unit defaults to BYTES: each
         adjacency run merges to ``ceil(run bytes / target_bytes)``
@@ -1650,16 +1613,7 @@ class Topic:
         ``target_files`` overrides the arithmetic per run.  This is
         the same rule ``Engine.compaction_advice`` quotes in its
         ``files_after`` column, so advice → action → re-advice
-        converges.
-
-        Crash safety (r12): each run journals its move plan to a
-        ``.smallcompact.<id>.intent`` file (renamed into place
-        complete) before any file enters or leaves the live directory;
-        ``vacuum`` completes a crashed run from the journal — rollback
-        while the staging tmp survives, roll-forward once it is gone —
-        so no crash point can leave the run's rows duplicated.  The
-        whole sweep is proven step-by-step in
-        tests/test_vacuum_crash_sweep.py."""
+        converges."""
         # An offset GAP also breaks a run, not just an intervening
         # large segment in the same directory: with caller-supplied
         # ts, a later publish (higher offsets) can land in an EARLIER
@@ -1683,102 +1637,60 @@ class Topic:
             )
             if len(smalls) <= run_files:
                 continue
-            paths = sorted(s["path"] for s in smalls)
-            merged = self.spark.read.parquet(*paths)
-            n_before = merged.count()
-            tmp = self.log_dir + f".smallcompact.{uuid4().hex}.tmp"
-            # Range-partition on offset so EACH output file covers a
-            # disjoint contiguous offset range — coalesce(n>1) would
-            # concatenate arbitrary input subsets and interleave
-            # ranges, which fsck() rightly flags as overlap.
-            writer = (
-                merged.repartitionByRange(run_files, F.col("offset"))
-                if run_files > 1
-                else merged.coalesce(1)
-            )
-            writer.write.mode("overwrite").parquet(tmp)
-            _prune_empty_parts(tmp)
-            new_files = [os.path.basename(p) for p in segment_files(tmp)]
-            n_after = self.spark.read.parquet(
-                *[os.path.join(tmp, f) for f in new_files]
-            ).count()
-            if n_after != n_before:
-                shutil.rmtree(tmp)
-                raise RuntimeError(
-                    f"small-segment compaction mismatch in {d} "
-                    f"({n_after} != {n_before}); originals untouched"
-                )
-            # INTENT journal (r12): the move phase below is multi-step
-            # (k file moves, a tmp rmtree, m original removes) and a
-            # crash inside it would leave the run's rows DUPLICATED —
-            # merged files plus surviving originals — which fsck flags
-            # but nothing could heal.  Durably record the exact plan
-            # first, so vacuum can finish the job from either side:
-            # tmp still present => nothing irreversible happened, roll
-            # BACK (remove moved-in files, drop tmp); tmp gone => every
-            # merged file is live, roll FORWARD (remove surviving
-            # originals).  Either way the log converges to exactly one
-            # copy of every row.  The journal itself is written via
-            # rename so a crash mid-write cannot leave a half-readable
-            # plan next to moved files.
-            _crash_point("small_pre_intent")
-            intent = tmp[: -len(".tmp")] + ".intent"
-            staged_intent = intent + ".writing"
-            with open(staged_intent, "w") as fh:
-                json.dump(
-                    {"dir": d, "new": new_files, "originals": paths}, fh
-                )
-            os.replace(staged_intent, intent)
-            _crash_point("small_post_intent")
-            # merged files enter the live dir BEFORE originals leave, so
-            # a concurrent (non-quiesced) reader sees duplicates, never
-            # loss — the at-least-once direction.
-            for i, f in enumerate(new_files):
-                os.replace(os.path.join(tmp, f), os.path.join(d, f))
-                if i == 0:
-                    _crash_point("small_mid_move")
-            _crash_point("small_post_move")
-            shutil.rmtree(tmp)
-            _crash_point("small_post_tmp_rm")
-            for i, p in enumerate(paths):
-                os.remove(p)
-                if i == 0:
-                    _crash_point("small_mid_remove")
-            _crash_point("small_post_remove")
-            os.remove(intent)
-            removed += len(paths) - len(new_files)
+            n_before = sum(s["num_rows"] for s in smalls)
+
+            def validate(after: DataFrame) -> str | None:
+                n_after = after.count()
+                if n_after != n_before:
+                    return (
+                        f"small-segment compaction mismatch in {d} "
+                        f"({n_after} != {n_before})"
+                    )
+                return None
+
+            frame = self.read_segments([s["path"] for s in smalls])
+            new = self._rewrite(smalls, frame, run_files, validate)
+            removed += len(smalls) - len(new)
         return removed
 
-    def _swap_log_with(
-        self, frame: DataFrame, target_files: int, validate, release=None
-    ) -> None:
-        """Shared rewrite protocol for the compaction ops: write
-        ``frame`` to a tmp dir, re-read THE TMP DIR and
-        ``validate(after)`` (returns an error string or None) — an
-        invalid rewrite raises with the live log untouched — and only
-        then two-rename swap the proven-good tmp in as the log.
-        Validation runs BEFORE the swap (review r12): when it ran
-        after, a crash inside the validate window made a row-dropping
-        rewrite the live log with the old dir already swap-marked, so
-        vacuum rule 2 would eventually delete the only good copy.
-        With pre-swap validation every crash point during the swap is
-        a rename-protocol state the marker rules already recover, and
-        bad data can never be committed at all.  Partitioned topics
-        keep their ``pub_date`` layout (``frame`` must carry the
-        column).
+    def _rewrite(
+        self, records: list[dict], frame: DataFrame, target_files: int, validate
+    ) -> list[str]:
+        """Replace the segments ``records`` by ``frame`` written as
+        ``target_files`` files — the one commit protocol of every log
+        rewrite (``compact``, ``compact_small``, ``compact_keyed``,
+        ``redact``).  Returns the new files' paths relative to the log
+        directory.
 
-        ``release`` is called after validation, BEFORE the swap:
-        callers that cached the pre-swap log MUST drop that cache here
-        (blocking) so no stale cached plan aliases the log path across
-        the swap.  (Validation itself reads the tmp path, which no
-        caller has cached.)
+        ``frame`` reads only those segments (``read_segments``, which
+        keeps ``pub_date`` on a partitioned topic, so each row lands
+        back in its date directory).  It is staged in a
+        ``.smallcompact.<id>.tmp`` dir next to the log,
+        range-partitioned on ``(pub_date,) offset`` so every file
+        covers a disjoint offset range (coalesce(n>1) would interleave
+        ranges, which fsck flags as overlap), and ``validate(after)``
+        (an error string or None) checks the staged files: an invalid
+        rewrite raises with the log untouched.
 
-        Multi-file rewrites range-partition on offset (one dense
-        commit group either way, so fsck is satisfied, but disjoint
-        per-file offset ranges keep replay/seek footer pruning
-        effective — coalesce(n>1) would interleave ranges across
-        files)."""
-        tmp = self.log_dir + ".compact.tmp"
+        Only the move phase holds the writer lock, never the Spark
+        job, so publishes go on meanwhile.  Under the lock the rewrite
+        first checks that its staging dir and every original still
+        exist: when one is gone (``vacuum`` of a staging dir it judged
+        stale, retention, a racing rewrite) the staging no longer
+        replaces what is live, and it aborts with the log untouched (a
+        journal written after such a vacuum would later roll forward
+        and remove originals no new file replaced).  It then journals its plan to ``.smallcompact.<id>.intent``
+        (renamed into place complete), moves the new files in BEFORE
+        the originals leave — a reader may see an offset twice, never
+        miss one, and a follower reads overlapping segments once — and
+        removes the staging dir: the commit point.  ``vacuum``
+        finishes a crashed move from the journal — rollback while the
+        staging dir survives, roll-forward once it is gone — so no
+        crash point leaves a row lost or duplicated
+        (tests/test_vacuum_crash_sweep.py steps through each).  The
+        lock's release tells this process's followers that the log's
+        records changed."""
+        tmp = self.log_dir + f".smallcompact.{uuid4().hex}.tmp"
         # Partitioned rewrites lead the range keys with pub_date so the
         # sampled bucket boundaries align with the date directories the
         # writer is about to split on anyway: a bucket then straddles
@@ -1807,175 +1719,82 @@ class Topic:
         if err:
             shutil.rmtree(tmp)
             raise RuntimeError(f"{err}; log untouched")
-        if release is not None:
-            release()
-        # The swap phase (renames + validate + rollback) runs under the
-        # writer lock (ADVICE r11): compactions are documented
-        # run-quiesced, but the lock makes the rename window safe
-        # against a concurrently-CONSTRUCTED handle's crash-restore
-        # (which also takes the lock) — without it, that restore could
-        # steal the old dir between our two renames and the second
-        # os.replace would land on a now-repopulated log path.
-        old = self.log_dir + ".compact.old"
-        with writer_lock(self.root, what="compact-swap"):
-            _crash_point("pre_rename1")
-            os.replace(self.log_dir, old)
-            # rename PRESERVES the dir's own mtime, so a just-swapped-out
-            # old dir would look hours stale to vacuum() — stamp the swap
-            # time explicitly (review r11)
-            os.utime(old)
-            _crash_point("post_rename1")
-            # the swap-state marker distinguishes "swap completed, old is
-            # garbage" from "swap crashed, old is the data": written just
-            # before the second rename, so a marked old WITH a live log
-            # means the new log is authoritative — vacuum must never
-            # restore over it (a full redact would otherwise resurrect the
-            # erased rows).  A marked old WITHOUT a live log (crash between
-            # the marker and the second rename) still restores — rule 1
-            # keys on the missing log, not the marker.
-            with open(os.path.join(old, _SWAP_MARKER), "w") as fh:
-                fh.write("committing")
-            _crash_point("post_marker")
-            os.replace(tmp, self.log_dir)
-            _crash_point("post_rename2")
-            shutil.rmtree(old)
+        new = [os.path.relpath(p, tmp) for p in segment_files(tmp)]
+        originals = sorted(r["path"] for r in records)
+        with writer_lock(self.root, what="rewrite"):
+            gone = [p for p in (tmp, *originals) if not os.path.exists(p)]
+            if gone:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise RuntimeError(
+                    f"{gone[0]} went away during the rewrite; log untouched"
+                )
+            _crash_point("small_pre_intent")
+            # the journal records the exact plan before any file enters
+            # or leaves the log, written via rename so a crash can never
+            # leave a half-readable plan next to moved files
+            intent = tmp[: -len(".tmp")] + ".intent"
+            with open(intent + ".writing", "w") as fh:
+                json.dump(
+                    {"dir": self.log_dir, "new": new, "originals": originals}, fh
+                )
+            os.replace(intent + ".writing", intent)
+            _crash_point("small_post_intent")
+            for i, f in enumerate(new):
+                os.replace(os.path.join(tmp, f), os.path.join(self.log_dir, f))
+                if i == 0:
+                    _crash_point("small_mid_move")
+            _crash_point("small_post_move")
+            shutil.rmtree(tmp)
+            _crash_point("small_post_tmp_rm")
+            for i, p in enumerate(originals):
+                os.remove(p)
+                if i == 0:
+                    _crash_point("small_mid_remove")
+            _crash_point("small_post_remove")
+            os.remove(intent)
+        return new
 
-    def vacuum(
-        self, stale_s: float = 3600.0, *, restore_seeded: bool = False
-    ) -> dict:
-        """Garbage-collect compaction STAGING artifacts and recover
-        from crashed rewrites — the maintenance op a 100 TB deployment
-        runs alongside retention (Delta/Iceberg's VACUUM analog, sized
-        down to this log's two-rename swap protocol).
+    def vacuum(self, stale_s: float = 3600.0) -> dict:
+        """Garbage-collect rewrite staging and finish crashed rewrites —
+        the maintenance op a 100 TB deployment runs alongside retention
+        (Delta/Iceberg's VACUUM analog, sized down to this log's
+        journaled file replace, ``_rewrite``).
 
-        Handles, in safety order (all under the topic's writer lock —
-        recovery must not race a publish into the directories it moves):
+        Handles, under the topic's writer lock (recovery must not race
+        a publish into the directories it moves):
 
-        1. **Lost log** (``log`` missing, ``log.compact.old`` present —
-           a crash between _swap_log_with's two renames): restore the
-           old dir as the log, unconditionally — an incomplete swap's
-           data must come back.  Topic construction does this too, so
-           simply re-preparing a topic heals it; vacuum is the
-           explicit, reporting entry point.
-        2. **Completed-swap garbage** (``.compact.old`` carrying the
-           ``.swap_state`` marker while a live log exists — the swap's
-           second rename happened, the live log is authoritative):
-           removed once stale, NEVER restored.  This is what makes a
-           crashed redact-to-zero safe: its old dir is marked, so the
-           erased rows can never be resurrected by recovery.
-        3. **Seeded-over log?** (UNMARKED ``.compact.old`` with rows
-           while the live log holds ZERO data rows): AMBIGUOUS, and
-           reported ``kept`` by default (ADVICE r11).  The state could
-           be a pre-marker handle's empty seed over crash-window data
-           (the old dir IS the data) — but it is byte-identical to a
-           PRE-marker-era completed redact-to-zero whose crash landed
-           after the second rename (the old dir is the erased rows,
-           and auto-restoring would violate right-to-be-forgotten).
-           An operator who has established the former passes
-           ``restore_seeded=True`` to drop the empty seed and restore
-           the old dir — still gated on staleness so an in-flight swap
-           is never raced.  Row counts come from parquet footers, and
-           an UNREADABLE footer counts as data — the destructive
-           branch is unreachable on anything that might hold rows.
-           All swaps from the marker era onward self-describe, so this
-           ambiguity only ever concerns legacy artifacts.
-        4. **Completed-swap garbage, legacy** (UNMARKED ``.compact.old``
-           next to a log WITH rows): auto-adjudicated in two steps
-           (r12).  First a free footer prefilter: if the old dir's
-           [min, max] offset range is not contained in the live log's,
-           the live log cannot supersede it — kept.  If the ranges ARE
-           nested, the offsets alone don't prove anything (a seed-over
-           resets the offset counter, so enough later publishes can
-           cover the old range with DIFFERENT data — review r12), so
-           one bounded Spark anti-join verifies true row containment:
-           every (offset, ts, event, message) row of the old dir must
-           exist verbatim in the live log.  Only then is the old dir a
-           completed pre-marker ``compact()``'s leftover (offset-
-           preserving, possibly with later publishes on top) and
-           removed once stale.  Any other relationship — ranges not
-           nested, a missing old row, unreadable footers — stays
-           ambiguous and is reported kept for the operator.
-        5. **Small-compaction intent journals**
-           (``.smallcompact.*.intent`` — a ``compact_small`` run
-           crashed inside its move phase, the one window where the log
-           can hold duplicate rows): completed deterministically from
-           the journal — staging tmp still present means nothing
-           irreversible happened and the moved-in merged files are
-           rolled BACK; tmp gone means every merged file is live and
-           the surviving originals are rolled FORWARD out.  Either way
-           the log converges to exactly one copy of every row.  Fresh
-           journals belong to a run in flight and are kept.
-        6. **Write staging** (``.compact.tmp`` / ``.smallcompact.*.tmp``
-           / ``.smallcompact.*.intent.writing`` from crashed writes):
-           removed once older than ``stale_s``
-           (default 1 h); younger artifacts are reported as kept —
-           they may belong to a compaction in flight right now.  A tmp
-           whose sibling intent journal still exists is NEVER removed
-           here regardless of age (the tmp is written before, and so
-           ages faster than, its intent): rule 5 adjudicates
-           journal+staging as one unit, and the tmp's presence is what
-           makes that recovery a rollback instead of a roll-forward.
+        - **Intent journals** (``.smallcompact.*.intent`` — a rewrite
+          crashed inside its move phase, the one window where the log
+          can hold duplicate rows): completed deterministically from
+          the journal — staging tmp still present means nothing
+          irreversible happened and the moved-in files are rolled
+          BACK; tmp gone means every new file is live and the
+          surviving originals are rolled FORWARD out.  Either way the
+          log converges to exactly one copy of every row.  Fresh
+          journals are kept.
+        - **Write staging** (``.smallcompact.*.tmp`` /
+          ``.smallcompact.*.intent.writing`` from crashed writes, and
+          an earlier version's ``.compact.tmp``): removed once older
+          than ``stale_s`` (default 1 h); younger artifacts are
+          reported as kept — they may belong to a rewrite whose Spark
+          job is running right now.  A tmp whose sibling intent
+          journal still exists is NEVER removed here regardless of age
+          (the tmp is written before, and so ages faster than, its
+          intent): journal and staging are adjudicated as one unit,
+          and the tmp's presence is what makes that recovery a
+          rollback instead of a roll-forward.
 
-        Layout (flat vs pub_date-partitioned) is re-detected after any
-        restore, so a handle constructed against the seed keeps
-        working.  Returns {"recovered": [...], "removed": [...],
-        "kept": [...]} with the affected paths."""
+        Returns {"recovered": [...], "removed": [...], "kept": [...]}
+        with the affected paths."""
         import glob as _glob
 
         with writer_lock(self.root, what="vacuum"):
             now = time.time()
             out: dict = {"recovered": [], "removed": [], "kept": []}
-            old = self.log_dir + ".compact.old"
-            marker = os.path.join(old, _SWAP_MARKER)
-            if not os.path.isdir(self.log_dir) and os.path.isdir(old):
-                os.replace(old, self.log_dir)
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(self.log_dir, _SWAP_MARKER))
-                self._redetect_layout()
-                out["recovered"].append(old)
-            elif os.path.isdir(old):
-                stale = now - os.path.getmtime(old) >= stale_s
-                if os.path.exists(marker):
-                    (out["removed"] if stale else out["kept"]).append(old)
-                    if stale:
-                        shutil.rmtree(old)
-                elif not stale:
-                    out["kept"].append(old)
-                else:
-                    # footer walks only on the rare stale-unmarked path
-                    # (review r12: the common marked/fresh branches must
-                    # not pay a full live-log footer scan per sweep)
-                    live_rows = _dir_rows(self.log_dir)
-                    if live_rows == 0 and _dir_rows(old) > 0:
-                        # rule 3: ambiguous legacy state — restore only
-                        # on explicit operator instruction
-                        if restore_seeded:
-                            shutil.rmtree(self.log_dir)
-                            os.replace(old, self.log_dir)
-                            self._redetect_layout()
-                            out["recovered"].append(old)
-                        else:
-                            out["kept"].append(old)
-                    elif _dir_rows(old) == 0:
-                        shutil.rmtree(old)
-                        out["removed"].append(old)
-                    elif self._old_rows_contained_in_log(old):
-                        # rule 4: proven completed-swap garbage
-                        shutil.rmtree(old)
-                        out["removed"].append(old)
-                    else:
-                        out["kept"].append(old)
-            # rule 5 (r12): small-compaction INTENT journals.  An intent
-            # on disk means a compact_small run crashed inside its move
-            # phase — the one window where the log can hold DUPLICATE
-            # rows (merged files moved in, originals not yet removed).
-            # The journal records the exact plan, so recovery completes
-            # it deterministically: tmp still present => roll BACK
-            # (remove moved-in merged files; the tmp GC below drops the
-            # staging); tmp gone => roll FORWARD (remove surviving
-            # originals).  Both converge to exactly one copy of every
-            # row.  Fresh intents belong to a run in flight and are
-            # kept.
+            # Intent journals: tmp still present => roll BACK (remove
+            # moved-in new files; the tmp GC below drops the staging);
+            # tmp gone => roll FORWARD (remove surviving originals).  A
+            # journal's "new" paths are relative to its "dir".
             for intent in sorted(
                 _glob.glob(
                     _glob.escape(self.log_dir) + ".smallcompact.*.intent"
@@ -2011,13 +1830,14 @@ class Topic:
             for p in tmps:
                 if not os.path.isdir(p):
                     continue
-                # a tmp whose sibling INTENT still exists belongs to
-                # rule 5, which must adjudicate journal+staging as one
-                # unit: the tmp's PRESENCE is what makes the recovery a
-                # rollback — GC'ing it here (tmp goes stale before its
-                # younger intent) would flip a later recovery into a
-                # roll-forward that removes the originals while none of
-                # the merged files ever went live (review r12)
+                # a tmp whose sibling INTENT still exists belongs to the
+                # journal recovery above, which must adjudicate
+                # journal+staging as one unit: the tmp's PRESENCE is
+                # what makes the recovery a rollback — GC'ing it here
+                # (tmp goes stale before its younger intent) would flip
+                # a later recovery into a roll-forward that removes the
+                # originals while none of the new files ever went live
+                # (review r12)
                 if p.endswith(".tmp") and os.path.exists(
                     p[: -len(".tmp")] + ".intent"
                 ):
@@ -2042,74 +1862,6 @@ class Topic:
                 else:
                     out["kept"].append(p)
             return out
-
-    def _old_rows_contained_in_log(self, old: str) -> bool:
-        """Rule-4 adjudicator: is EVERY row of the stale unmarked
-        ``old`` dir present verbatim in the live log?
-
-        Step 1 is free (footer offset ranges): if old's [min, max]
-        isn't nested inside live's, live can't supersede it.  Step 2 is
-        one bounded Spark anti-join on the full envelope — offsets
-        alone can't prove containment because a seed-over RESETS the
-        offset counter, so later publishes can cover old's range with
-        different data (review r12); a single surviving anti-join row
-        means old holds data the live log doesn't, and it must be kept.
-        Cost: one scan of the old dir plus an offset-range-pruned probe
-        of the live log — paid only for a stale legacy artifact, never
-        on the routine sweep path."""
-
-        def span(root: str) -> tuple[int, int] | None:
-            # [min, max] offset of root's data rows from footer stats;
-            # None when not fully established (no rows, an unreadable
-            # footer, missing stats) — never adjudicable
-            try:
-                recs = [r for r in segment_records(root) if r["num_rows"]]
-            except Exception:
-                return None
-            if not recs or any(r["min_off"] is None for r in recs):
-                return None
-            return (
-                min(r["min_off"] for r in recs),
-                max(r["max_off"] for r in recs),
-            )
-
-        old_rng = span(old)
-        live_rng = span(self.log_dir)
-        if (
-            old_rng is None
-            or live_rng is None
-            or old_rng[0] < live_rng[0]
-            or old_rng[1] > live_rng[1]
-        ):
-            return False
-        old_df = (
-            self.spark.read.schema(ENVELOPE)
-            .option("recursiveFileLookup", "true")
-            .parquet(old)
-            .select("offset", "ts", "event", "message")
-        )
-        live = self.log().select("offset", "ts", "event", "message").filter(
-            (F.col("offset") >= F.lit(int(old_rng[0])))
-            & (F.col("offset") <= F.lit(int(old_rng[1])))
-        )
-        missing = old_df.join(
-            live, ["offset", "ts", "event", "message"], "left_anti"
-        )
-        return missing.limit(1).count() == 0
-
-    def _redetect_layout(self) -> None:
-        """Take the partitioned flag from the on-disk layout when the
-        log shows one, in BOTH directions: at construction (a fresh
-        Engine must not misread a partitioned topic as flat, and
-        partitioned=True over an existing FLAT log must not make log()
-        synthesize an empty frame — latest()==0 would then reassign
-        duplicate offsets) and after a recovery moved directories under
-        this handle (review r11: a handle that detected a flat empty
-        seed must not keep treating a restored pub_date-partitioned log
-        as flat)."""
-        layout = detect_partitioned(self.log_dir)
-        if layout is not None:
-            self.partitioned = layout
 
     def offset_for_time(self, ts) -> int | None:
         """Earliest offset whose ``ts`` >= the given time (Kafka's
@@ -2158,22 +1910,21 @@ class Topic:
         subscriber positions stay meaningful (same contract as Kafka:
         compaction never reorders, only removes superseded records).
 
-        Run quiesced, like ``compact()`` (same two-rename swap).  The
-        scale shape is one shuffle keyed on the compaction key with
-        ``max_by(struct, offset)`` map-side partials — never a window
-        sort over the whole log.  Returns rows removed."""
-        cur = self.log().cache()
-        n_before = cur.count()
-        data_cols = [c for c in cur.columns]
+        Like every rewrite it covers the segments listed when it starts
+        and replaces exactly those (``_rewrite``): a record published
+        meanwhile is kept as it is.  The scale shape is one shuffle
+        keyed on the compaction key with ``max_by(struct, offset)``
+        map-side partials — never a window sort over the whole log.
+        Returns rows removed."""
+        records = self._segment_stats()
+        cur = self.read_segments([s["path"] for s in records])
         latest = (
             cur.groupBy(F.expr(key).alias("_k"))
-            .agg(
-                F.max_by(F.struct(*data_cols), F.col("offset")).alias("_row")
-            )
+            .agg(F.max_by(F.struct(*cur.columns), F.col("offset")).alias("_row"))
             .select("_row.*")
         )
         n_keys = cur.select(F.expr(key)).distinct().count()
-        max_before = cur.agg(F.coalesce(F.max("offset"), F.lit(0))).first()[0]
+        max_before = log_tail(records)
 
         def validate(after: DataFrame) -> str | None:
             n_after = after.count()
@@ -2185,13 +1936,8 @@ class Topic:
                 )
             return None
 
-        self._swap_log_with(
-            latest,
-            target_files,
-            validate,
-            release=lambda: cur.unpersist(blocking=True),
-        )
-        return n_before - n_keys
+        self._rewrite(records, latest, target_files, validate)
+        return sum(s["num_rows"] for s in records) - n_keys
 
     def redact(self, predicate: str, target_files: int = 1) -> int:
         """GDPR-style targeted erasure: permanently remove every
@@ -2200,50 +1946,61 @@ class Topic:
         ``get_json_object(message, '$.user') = 'u-42'``), keeping all
         other offsets untouched.  The right-to-be-forgotten op the
         reference cannot express (its capped collection only FIFO-
-        evicts, /root/reference/src/topic.js:9).
+        evicts, src/topic.js:9).
 
         Contract: surviving rows keep their offsets (holes are fine —
         the same replay tolerance keyed compaction already relies on),
-        so subscriber acks stay meaningful.  [NS] like compaction, run
-        quiesced (two-rename swap).  A no-match predicate is a no-op:
-        the log is NOT rewritten.  Returns rows removed.
+        so subscriber acks stay meaningful.  The log end never moves
+        back: when the newest offset matches, its row stays as a
+        TOMBSTONE (Kafka's delete marker) with ``event`` and
+        ``message`` NULL and its ``offset`` and ``ts`` kept, so
+        ``latest()`` holds and the next publish never reuses an offset
+        a subscriber may have acked.  A wildcard subscriber that has
+        not passed it receives it as ``(None, None, offset)``.
 
-        Scale: the match probe is one filtered count (predicate pushed
-        into the parquet scan).  The rewrite here re-writes the whole
-        log; at 100 TB a partitioned topic would first narrow to
-        affected ``pub_date`` partitions via the same probe grouped by
-        partition, and swap only those directories — the protocol
-        (write-tmp, two renames, validate, rollback) is unchanged."""
-        cur = self.log().cache()
-        n_before = cur.count()
-        n_match = cur.filter(F.expr(predicate)).count()
+        The erasure covers the messages committed when redact starts:
+        it reads and replaces only the segments listed then
+        (``_rewrite``), so a message published meanwhile is neither
+        examined nor touched.  A no-match predicate is a no-op: the
+        log is NOT rewritten.  Returns the number of messages erased,
+        the tombstone's included.
+
+        Scale: the match probe is one aggregate (predicate pushed into
+        the parquet scan).  The rewrite here re-writes every listed
+        segment; at 100 TB a partitioned topic would first narrow to
+        the affected ``pub_date`` partitions via the same probe grouped
+        by partition and hand only their segments to ``_rewrite``."""
+        records = self._segment_stats()
+        cur = self.read_segments([s["path"] for s in records])
+        # NULL-safe: a predicate that evaluates to NULL on a row (e.g.
+        # get_json_object on a payload without the field) must KEEP
+        # that row — a bare ~expr drops NULL rows too, which both
+        # over-redacts and breaks the count invariant below.
+        match = F.coalesce(F.expr(predicate), F.lit(False))
+        n_match, newest = cur.agg(
+            F.count(F.when(match, 1)), F.max(F.when(match, F.col("offset")))
+        ).first()
         if n_match == 0:
-            cur.unpersist(blocking=False)
             return 0
-        # NULL-safe complement: a predicate that evaluates to NULL on a
-        # row (e.g. get_json_object on a payload without the field)
-        # must KEEP that row — a bare ~expr drops NULL rows too, which
-        # both over-redacts and breaks the count invariant below.
-        kept = cur.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        if self.partitioned:
-            kept = kept.withColumn("pub_date", F.to_date("ts"))
+        tail = log_tail(records)
+        n_tomb = int(newest == tail)
+        tomb = F.col("offset") == F.lit(tail) if n_tomb else F.lit(False)
+        kept = cur.filter(~match | tomb).withColumns(
+            {c: F.when(~tomb, F.col(c)) for c in ("event", "message")}
+        )
+        n_before = sum(s["num_rows"] for s in records)
 
         def validate(after: DataFrame) -> str | None:
             n_after = after.count()
-            n_left = after.filter(F.expr(predicate)).count()
-            if n_after != n_before - n_match or n_left != 0:
+            n_left = after.filter(F.expr(predicate) & ~tomb).count()
+            if n_after != n_before - n_match + n_tomb or n_left != 0:
                 return (
                     f"redaction invariant broken ({n_after} rows vs "
-                    f"{n_before}-{n_match}, {n_left} matches left)"
+                    f"{n_before}-{n_match}+{n_tomb}, {n_left} matches left)"
                 )
             return None
 
-        self._swap_log_with(
-            kept,
-            target_files,
-            validate,
-            release=lambda: cur.unpersist(blocking=True),
-        )
+        self._rewrite(records, kept, target_files, validate)
         return n_match
 
     # -- streaming handles --------------------------------------------
@@ -2679,37 +2436,14 @@ class Engine:
             "files_after long, advice string",
         )
 
-    def vacuum(
-        self, stale_s: float = 3600.0, *, restore_seeded: bool = False
-    ) -> dict:
-        """Engine-wide Topic.vacuum sweep.  Scans the ROOT listing
-        directly rather than ``topics()``: a topic whose log vanished
-        mid-compaction-swap has no ``log`` subdir and would be
-        invisible to the normal listing — exactly the one that most
-        needs recovering.  (Constructing its handle performs the
-        restore; its vacuum then handles staging garbage.)
-        ``restore_seeded`` forwards to each topic's vacuum (rule 3's
-        explicit operator override — see Topic.vacuum)."""
+    def vacuum(self, stale_s: float = 3600.0) -> dict:
+        """Engine-wide ``Topic.vacuum`` sweep over ``topics()``: the
+        topics' reports, merged."""
         out: dict = {"recovered": [], "removed": [], "kept": []}
-        if not os.path.isdir(self.root):
-            return out
-        for name in sorted(os.listdir(self.root)):
-            tdir = os.path.join(self.root, name)
-            if not os.path.isdir(tdir):
-                continue
-            has_log = os.path.isdir(os.path.join(tdir, "log"))
-            has_old = os.path.isdir(os.path.join(tdir, "log.compact.old"))
-            if not (has_log or has_old):
-                continue
-            if not has_log:  # init-time restore IS the recovery
-                out["recovered"].append(
-                    os.path.join(tdir, "log.compact.old")
-                )
-            sub = self.prepare_topic(name).vacuum(
-                stale_s, restore_seeded=restore_seeded
-            )
+        for name in self.topics():
+            sub = self.prepare_topic(name).vacuum(stale_s)
             for k in out:
-                out[k].extend(p for p in sub[k] if p not in out[k])
+                out[k].extend(sub[k])
         return out
 
     def topics(self) -> list[str]:

@@ -524,8 +524,8 @@ class _Follower:
                 try:
                     ran, gap = self._step(listed)
                 except _Vanished:
-                    # a segment or directory vanished mid-swap: the
-                    # records are stale, so list before planning again
+                    # a rewrite replaced a planned segment: the records
+                    # are stale, so list before planning again
                     fresh = True
                     self._wait(sig, generation, _WATCH_POLL_S)
                     continue

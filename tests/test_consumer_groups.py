@@ -116,23 +116,23 @@ def test_redact_removes_only_matches(engine):
 
 
 def test_redact_rolls_back_on_broken_invariant(engine, monkeypatch):
-    """If validation fails mid-swap the original log is restored."""
+    """If validation of the staged rewrite fails, the log is untouched."""
     topic = engine.prepare_topic("gdpr_rb")
     topic.publish_batch([("e", {"n": i}) for i in range(4)])
     import kafkaish_spark.sources.topic_log as tl
 
-    orig = tl.Topic._swap_log_with
+    orig = tl.Topic._rewrite
 
-    def broken(self, frame, target_files, validate, release=None):
+    def broken(self, records, frame, target_files, validate):
         return orig(
             self,
+            records,
             frame.limit(0),  # write an empty log -> validate must fail
             target_files,
             validate,
-            release,
         )
 
-    monkeypatch.setattr(tl.Topic, "_swap_log_with", broken)
+    monkeypatch.setattr(tl.Topic, "_rewrite", broken)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="redaction invariant"):

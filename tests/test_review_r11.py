@@ -263,145 +263,6 @@ def test_compaction_advice_flags_underspilt_topics(engine):
 # --------------------------------------- r11 wave 2: compaction vacuum
 
 
-def _crash_swap(topic):
-    """Simulate a compaction crash between _swap_log_with's two
-    renames: the log has moved to .compact.old, nothing replaced it."""
-    import os
-
-    os.replace(topic.log_dir, topic.log_dir + ".compact.old")
-
-
-def test_vacuum_recovers_log_lost_mid_swap(spark, tmp_path):
-    from kafkaish_spark.sources.topic_log import Engine
-
-    eng = Engine(spark, str(tmp_path / "t"))
-    topic = eng.prepare_topic("crashy")
-    for i in range(5):
-        topic.publish("e", {"i": i})
-    before = sorted(r["offset"] for r in topic.log().collect())
-    _crash_swap(topic)
-
-    # a FRESH engine (new process after the crash) heals on prepare
-    eng2 = Engine(spark, str(tmp_path / "t"))
-    healed = eng2.prepare_topic("crashy")
-    assert sorted(r["offset"] for r in healed.log().collect()) == before
-    assert healed.fsck()["ok"]
-
-
-def test_vacuum_seed_over_is_ambiguous_restore_needs_operator(spark, tmp_path):
-    """The poisoned ordering: crash mid-swap (old dir UNMARKED — the
-    second rename never ran), then an empty log dir appears (a
-    pre-marker handle seeded it).  The on-disk state is byte-identical
-    to a pre-marker completed redact-to-zero (ADVICE r11), so the
-    DEFAULT vacuum reports the old dir kept in every staleness state;
-    only an operator's explicit restore_seeded=True (and staleness)
-    performs the restore."""
-    import os
-    import time
-
-    from kafkaish_spark.sources.topic_log import Engine
-
-    eng = Engine(spark, str(tmp_path / "t"))
-    topic = eng.prepare_topic("seeded")
-    for i in range(4):
-        topic.publish("e", {"i": i})
-    before = sorted(r["offset"] for r in topic.log().collect())
-    _crash_swap(topic)
-    os.makedirs(topic.log_dir)  # the empty seed
-    old = topic.log_dir + ".compact.old"
-
-    assert topic.vacuum()["kept"] == [old]  # fresh: never raced
-    past = time.time() - 7200
-    os.utime(old, (past, past))
-    assert topic.vacuum()["kept"] == [old]  # stale but ambiguous: kept
-    # even fully stale, the forced restore is still what it takes
-    out = topic.vacuum(restore_seeded=True)
-    assert out["recovered"] == [old]
-    assert sorted(r["offset"] for r in topic.log().collect()) == before
-
-
-def test_vacuum_never_resurrects_a_legacy_unmarked_redact_to_zero(
-    spark, tmp_path
-):
-    """A PRE-marker-era completed redact-to-zero (crash between the
-    second rename and rmtree(old)) leaves an UNMARKED data-bearing old
-    dir next to a zero-row live log — indistinguishable from the
-    seeded-over crash.  Default vacuum must keep (never auto-restore)
-    it: restoring would resurrect right-to-be-forgotten rows (ADVICE
-    r11, medium)."""
-    import os
-    import shutil
-    import time
-
-    from kafkaish_spark.sources.topic_log import Engine
-
-    eng = Engine(spark, str(tmp_path / "t"))
-    topic = eng.prepare_topic("legacy_erased")
-    for i in range(3):
-        topic.publish("e", {"u": "gone", "i": i})
-    pre = topic.log_dir + ".pre_redact_copy"
-    shutil.copytree(topic.log_dir, pre)
-    assert topic.redact("get_json_object(message, '$.u') = 'gone'") == 3
-    assert topic.log().count() == 0
-    # recreate the legacy crash state: the old dir WITHOUT a marker
-    old = topic.log_dir + ".compact.old"
-    os.replace(pre, old)
-    past = time.time() - 7200
-    os.utime(old, (past, past))
-
-    out = topic.vacuum()
-    assert out["recovered"] == []
-    assert out["kept"] == [old]
-    assert topic.log().count() == 0  # the erasure stands by default
-
-
-def test_vacuum_adjudicates_legacy_old_by_offset_range(spark, tmp_path):
-    """Rule 4: an UNMARKED .compact.old next to a log WITH rows is
-    auto-adjudicated by footer offset ranges — old's range contained
-    in live's means the live log supersedes it (a pre-marker completed
-    compact, possibly with later publishes) and it is removed once
-    stale; an old range reaching BEYOND the live range stays ambiguous
-    and is kept."""
-    import os
-    import shutil
-    import time
-
-    from kafkaish_spark.sources.topic_log import Engine
-
-    eng = Engine(spark, str(tmp_path / "t"))
-
-    # contained case: old is a byte copy of the live log (a completed
-    # offset-preserving compact), then more publishes extend live
-    topic = eng.prepare_topic("contained")
-    for i in range(3):
-        topic.publish("e", {"i": i})
-    old = topic.log_dir + ".compact.old"
-    shutil.copytree(topic.log_dir, old)
-    topic.publish("e", {"i": 99})  # live range now strictly wider
-    past = time.time() - 7200
-    os.utime(old, (past, past))
-    out = topic.vacuum()
-    assert out["removed"] == [old]
-    assert not os.path.isdir(old)
-    assert topic.log().count() == 4
-
-    # not-contained case: old reaches BELOW the live log's offset
-    # range (live was trimmed by retention after the copy) — vacuum
-    # cannot prove the live log supersedes it, so it is kept
-    topic2 = eng.prepare_topic("beyond")
-    for i in range(5):
-        topic2.publish("e", {"i": i})  # one file per publish
-    offs = sorted(r["offset"] for r in topic2.log().collect())
-    old2 = topic2.log_dir + ".compact.old"
-    shutil.copytree(topic2.log_dir, old2)
-    assert topic2.truncate_before(offs[2]) == 2  # live now [offs[2]..]
-    past = time.time() - 7200
-    os.utime(old2, (past, past))
-    out2 = topic2.vacuum()
-    assert out2["kept"] == [old2]
-    assert os.path.isdir(old2)
-
-
 def test_vacuum_removes_stale_staging_keeps_fresh(spark, tmp_path):
     import os
     import time
@@ -425,69 +286,3 @@ def test_vacuum_removes_stale_staging_keeps_fresh(spark, tmp_path):
     assert os.path.isdir(fresh_tmp)
     # the log itself is untouched
     assert topic.log().count() == 1
-
-
-def test_vacuum_drops_stale_old_after_completed_swap(spark, tmp_path):
-    """.compact.old carrying the swap-state marker (the swap's second
-    rename happened — the live log is authoritative) is garbage once
-    stale — but a fresh one is kept (a compaction may be mid-flight)."""
-    import os
-    import shutil
-    import time
-
-    from kafkaish_spark.sources.topic_log import Engine, _SWAP_MARKER
-
-    eng = Engine(spark, str(tmp_path / "t"))
-    topic = eng.prepare_topic("leftover")
-    for i in range(3):
-        topic.publish("e", {"i": i})
-    old = topic.log_dir + ".compact.old"
-    shutil.copytree(topic.log_dir, old)
-    open(os.path.join(old, _SWAP_MARKER), "w").write("committing")
-
-    assert topic.vacuum(stale_s=3600)["kept"] == [old]  # fresh: kept
-    past = time.time() - 7200
-    os.utime(old, (past, past))
-    assert topic.vacuum(stale_s=3600)["removed"] == [old]
-    assert not os.path.isdir(old)
-    assert topic.log().count() == 3
-
-
-def test_vacuum_never_resurrects_a_completed_redact_to_zero(spark, tmp_path):
-    """A redact that legitimately emptied the topic, crashing AFTER its
-    swap completed (marked old dir still on disk, live log 0 rows):
-    vacuum must REMOVE the old data once stale — restoring it would
-    resurrect right-to-be-forgotten rows (review r11)."""
-    import os
-    import time
-
-    from kafkaish_spark.sources.topic_log import Engine
-
-    eng = Engine(spark, str(tmp_path / "t"))
-    topic = eng.prepare_topic("erased")
-    for i in range(3):
-        topic.publish("e", {"u": "gone", "i": i})
-    # a real full redact, then re-create the completed-swap crash state
-    # by copying the post-redact log and re-running the swap by hand is
-    # brittle; drive the REAL path instead: redact everything (the swap
-    # completes and normally removes old), then recreate the marked old
-    # from a data-bearing copy as the crash would have left it
-    import shutil
-
-    pre = topic.log_dir + ".pre_redact_copy"
-    shutil.copytree(topic.log_dir, pre)
-    removed = topic.redact("get_json_object(message, '$.u') = 'gone'")
-    assert removed == 3
-    assert topic.log().count() == 0
-    old = topic.log_dir + ".compact.old"
-    from kafkaish_spark.sources.topic_log import _SWAP_MARKER
-
-    os.replace(pre, old)
-    open(os.path.join(old, _SWAP_MARKER), "w").write("committing")
-    past = time.time() - 7200
-    os.utime(old, (past, past))
-
-    out = topic.vacuum()
-    assert out["removed"] == [old]
-    assert out["recovered"] == []
-    assert topic.log().count() == 0  # the erasure stands

@@ -2,7 +2,7 @@
 
 Pins the r11 ADVICE fixes: partitioned-topic compaction advice/action
 convergence (per-directory byte arithmetic), and the crash-point sweep
-for the swap/vacuum protocol (VERDICT r11 next-round #4) lives in
+for the rewrite/vacuum protocol (VERDICT r11 next-round #4) lives in
 test_vacuum_crash_sweep.py.
 """
 
@@ -99,36 +99,6 @@ def test_partitioned_compact_keeps_per_directory_ranges_disjoint(engine):
     assert topic.fsck()["ok"]
 
 
-def test_vacuum_rule4_keeps_old_when_offsets_restarted(engine):
-    """Review r12 (data-loss finding): a seed-over RESETS the offset
-    counter, so enough later publishes can cover the old dir's offset
-    range with DIFFERENT data.  Offset-range nesting alone must not
-    remove the old dir — the row-containment anti-join sees the old
-    rows are absent from the live log and keeps it."""
-    import shutil
-
-    topic = engine.prepare_topic("seedover4")
-    for i in range(3):
-        topic.publish("e", {"v": "old", "i": i})
-    old = topic.log_dir + ".compact.old"
-    shutil.copytree(topic.log_dir, old)
-    # legacy seed-over: log vanishes, an empty seed appears, and the
-    # offset counter restarts — new publishes cover [1..4] with
-    # different payloads
-    shutil.rmtree(topic.log_dir)
-    topic._ensure()
-    for i in range(4):
-        topic.publish("e", {"v": "new", "i": i})
-    past = time.time() - 7200
-    os.utime(old, (past, past))
-
-    out = topic.vacuum()
-    assert out["kept"] == [old]
-    assert os.path.isdir(old)
-    # the live log (the new data) is untouched
-    assert topic.log().count() == 4
-
-
 def test_vacuum_tmp_gc_never_orphans_a_fresh_intent(engine, crash_state=None):
     """Review r12 (data-loss finding): the tmp is written BEFORE its
     intent, so it can cross the staleness threshold first.  GC'ing it
@@ -176,48 +146,3 @@ def test_vacuum_tmp_gc_never_orphans_a_fresh_intent(engine, crash_state=None):
         (r["offset"], r["message"]) for r in topic.log().collect()
     ) == before
     assert topic.fsck()["ok"]
-
-
-def test_init_restore_holds_writer_lock(engine, tmp_path):
-    """ADVICE r11 (low): the construction-time crash-restore runs
-    under the topic writer lock, so a concurrent holder blocks it
-    instead of racing it."""
-    import threading
-
-    from kafkaish_spark.sources.topic_log import Engine, writer_lock
-
-    topic = engine.prepare_topic("locky")
-    topic.publish("e", {"i": 1})
-    os.replace(topic.log_dir, topic.log_dir + ".compact.old")
-
-    order: list[str] = []
-    release = threading.Event()
-
-    def hold():
-        with writer_lock(topic.root, what="test-hold"):
-            order.append("held")
-            release.wait(timeout=30)
-        order.append("released")
-
-    t = threading.Thread(target=hold)
-    t.start()
-    while "held" not in order:
-        time.sleep(0.01)
-
-    def construct():
-        eng2 = Engine(engine.spark, os.path.dirname(topic.root))
-        eng2.prepare_topic("locky")
-        order.append("constructed")
-
-    c = threading.Thread(target=construct)
-    c.start()
-    time.sleep(0.5)
-    # restore must still be waiting on the lock
-    assert "constructed" not in order
-    assert os.path.isdir(topic.log_dir + ".compact.old")
-    release.set()
-    c.join(timeout=60)
-    t.join(timeout=60)
-    assert "constructed" in order
-    assert os.path.isdir(topic.log_dir)
-    assert not os.path.isdir(topic.log_dir + ".compact.old")
